@@ -245,9 +245,9 @@ def _hits_loop(edges: DataFrame, iterations: int) -> DataFrame:
     edges = edges.select("src", "dst").cache()
     hubs = edges.select(F.col("src").alias("id")).distinct().cache()
     auths = edges.select(F.col("dst").alias("id")).distinct().cache()
-    # one up-front emptiness probe (also materializes the hubs cache
-    # before any multi-branch action can race it) replaces the old
-    # per-half-step max-collect's None check.
+    # one up-front emptiness probe replaces the old per-half-step
+    # max-collect's None check. It is a limit-1 job: it fills only the
+    # hubs cache blocks it scans, not the whole cache.
     if hubs.first() is None:
         raise ValueError("hits requires a non-empty edge list")
 

@@ -1118,17 +1118,18 @@ def bpe_train(
         corpus = corpus.select(F.trim(padded).alias("s"))
         # the merge chain stays LAZY between rounds (r15): it is a
         # narrow row-local projection — no join/shuffle in the chain —
-        # so round r's count simply re-applies <8 literal replaces
-        # over the checkpointed base, which is cheaper than an eager
+        # so round r's count re-applies the replaces of up to 8 rounds,
+        # batch_m each (O(8·batch_m) literal replaces), over the
+        # checkpointed base, which is cheaper than an eager
         # materialization job per round (write + read back the whole
         # corpus; measured at sf0.1, min of 5: the 5-round eval rung
         # 3.47 -> 3.12 s, the 2-round batched rung 2.32 -> 1.95 s).
         # The iterative-loop lineage lesson targets
         # shuffle-bearing loops, where replanning compounds — a
         # bounded projection chain does not. Every 8th round the chain
-        # IS checkpointed, so plan depth and recompute stay O(8)
-        # however many rounds a production trainer runs (batch_m is
-        # the real at-scale dial: M rules per corpus pass).
+        # IS checkpointed, so plan depth and recompute stay
+        # O(8·batch_m) however many rounds a production trainer runs
+        # (batch_m is the real at-scale dial: M rules per corpus pass).
         if r % 8 == 0:
             corpus = corpus.localCheckpoint(eager=True)
     from kaylee_spark.functions import literal_frame

@@ -11,6 +11,9 @@ the 100 TB / 1000-executor design point:
   is superseded by AQE's coalescing from a high initial count.
 - UTC session timezone so timestamp semantics match the DuckDB oracle
   and are stable across environments.
+- Python workers fork from ``kaylee_spark.worker_daemon``, which stops
+  every task from re-reading ``pyspark.zip`` (about 0.2 CPU s a task
+  on CPython 3.11; docs/SCALE.md, "Every Python task has a fixed cost").
 """
 
 from __future__ import annotations
@@ -20,17 +23,17 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def get_spark(app_name: str = "kaylee_spark", cpus: str | int | None = None) -> SparkSession:
-    """Build (or reuse) a SparkSession with engine defaults.
+def spark_builder(app_name: str = "kaylee_spark", cpus: str | int | None = None) -> SparkSession.Builder:
+    """The session builder with engine defaults, before ``getOrCreate``.
 
-    When the driver hands us an existing session (``__spark_entry__.entry``)
-    we do NOT call this — queries must run on any vanilla session, so all
-    query code avoids depending on these configs for correctness.
+    Tools that need more confs (the UI, say) add them to this builder
+    instead of copying its ``.config`` lines.
     """
     cpus = str(cpus or DEFAULT_CPUS)
-    builder = (
+    return (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")
         .config("spark.sql.shuffle.partitions", cpus)
@@ -53,5 +56,18 @@ def get_spark(app_name: str = "kaylee_spark", cpus: str | int | None = None) -> 
         # core busy", not a production setting.
         .config("spark.sql.files.maxPartitionBytes", "4m")
         .config("spark.sql.files.openCostInBytes", "1m")
+        .config("spark.python.daemon.module", "kaylee_spark.worker_daemon")
+        # the daemon and the functions cloudpickle ships by reference
+        # import kaylee_spark in the workers, whatever the driver's cwd
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
     )
-    return builder.getOrCreate()
+
+
+def get_spark(app_name: str = "kaylee_spark", cpus: str | int | None = None) -> SparkSession:
+    """Build (or reuse) a SparkSession with engine defaults.
+
+    When the driver hands us an existing session (``__spark_entry__.entry``)
+    we do NOT call this — queries must run on any vanilla session, so all
+    query code avoids depending on these configs for correctness.
+    """
+    return spark_builder(app_name, cpus).getOrCreate()

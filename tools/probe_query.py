@@ -19,8 +19,8 @@ import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from kaylee_spark.queries import load_all, load_everything  # noqa: E402
-from kaylee_spark.session import get_spark  # noqa: E402
+from kaylee_spark.queries import load_everything  # noqa: E402
+from kaylee_spark.session import spark_builder  # noqa: E402
 
 
 def main() -> None:
@@ -30,39 +30,8 @@ def main() -> None:
     registry = load_everything()
     spec = registry[name]
 
-    os.environ.setdefault("SPARK_GRAFT_CPUS", "32")
-    from pyspark.sql import SparkSession
-
-    builder = SparkSession.builder
-    # same knobs as get_spark, but with the UI on for the REST API
-    spark = (
-        get_spark("probe")  # base configs
-    )
-    if spark.conf.get("spark.ui.enabled", "false") == "false":
-        spark.stop()
-        os.environ["_PROBE_UI"] = "1"
-        from pyspark import SparkConf
-
-        # rebuild with UI enabled: patch via builder configs
-        from kaylee_spark import session as sess
-
-        builder = (
-            SparkSession.builder.appName("probe")
-            .master(f"local[{os.environ.get('SPARK_GRAFT_CPUS', '32')}]")
-            .config("spark.sql.shuffle.partitions", os.environ.get("SPARK_GRAFT_CPUS", "32"))
-            .config("spark.sql.adaptive.enabled", "true")
-            .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-            .config("spark.sql.adaptive.skewJoin.enabled", "true")
-            .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-            .config("spark.sql.session.timeZone", "UTC")
-            .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
-            .config("spark.ui.enabled", "true")
-            .config("spark.ui.port", "4049")
-            .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
-            .config("spark.sql.files.maxPartitionBytes", "4m")
-            .config("spark.sql.files.openCostInBytes", "1m")
-        )
-        spark = builder.getOrCreate()
+    # engine defaults, plus the UI for its REST API
+    spark = spark_builder("probe").config("spark.ui.enabled", "true").config("spark.ui.port", "4049").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     # warmup at smallest sf for codegen
