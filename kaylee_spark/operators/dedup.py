@@ -29,7 +29,7 @@ import warnings
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kaylee_spark.operators.skew import pin_width, unpin_width
+from kaylee_spark.operators.skew import pin_width
 
 
 # ---------------------------------------------------------------------------
@@ -379,9 +379,7 @@ def containment_pairs(
     (blocks GC-freed), so the caller's conf never replans it.
     """
     if shuffle_partitions is not None:
-        spark = df.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(df.sparkSession, shuffle_partitions):
             out = containment_pairs(
                 df, id_col, text_col, n=n, threshold=threshold,
                 max_df=max_df, pair_budget=pair_budget,
@@ -391,8 +389,6 @@ def containment_pairs(
                 frame, plan_meta = out
                 return frame.localCheckpoint(eager=True), plan_meta
             return out.localCheckpoint(eager=True)
-        finally:
-            unpin_width(spark, prev)
     sh, plan_meta = _capped_postings(df, id_col, text_col, n, max_df, pair_budget)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     a = sh.withColumnRenamed("doc", "doc_a")
@@ -887,16 +883,12 @@ def connected_components(
     conf never replans the loop.
     """
     if shuffle_partitions is not None:
-        spark = edges.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(edges.sparkSession, shuffle_partitions):
             # the recursive call's per-iteration localCheckpoints (and
             # the edge materialization they force) all run in-scope;
             # the returned frame is checkpointed, so restoring the
             # conf afterwards cannot replan it.
             return connected_components(edges, src, dst, max_iter)
-        finally:
-            unpin_width(spark, prev)
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )

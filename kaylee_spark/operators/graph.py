@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kaylee_spark.operators.skew import pin_width, unpin_width
+from kaylee_spark.operators.skew import pin_width
 
 from kaylee_spark.sources import load_table
 
@@ -109,9 +109,7 @@ def pagerank(
     if iterations < 1:
         raise ValueError(f"pagerank requires iterations >= 1, got {iterations}")
     if shuffle_partitions is not None:
-        spark = edges.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(edges.sparkSession, shuffle_partitions):
             ranks, caches = _pagerank_loop(edges, iterations)
             out = ranks.cache()
             out.count()
@@ -121,8 +119,6 @@ def pagerank(
             for c in caches:
                 c.unpersist()
             return out
-        finally:
-            unpin_width(spark, prev)
     ranks, _ = _pagerank_loop(edges, iterations)
     return ranks
 
@@ -221,7 +217,7 @@ def hits(edges: DataFrame, iterations: int = 3, shuffle_partitions: int | None =
     property the unrolled SQL oracle hash-verifies.
 
     ``shuffle_partitions`` scopes the shuffle width for the whole
-    eager trajectory (set/restored around it): HITS runs ~5 shuffle
+    eager trajectory: HITS runs ~5 shuffle
     stages per iteration, so per-stage overhead is multiplied — size
     it to |edges| / target-partition-bytes like any static tuning
     input (the fixture queries pass single digits; a 100 TB edge list
@@ -230,15 +226,10 @@ def hits(edges: DataFrame, iterations: int = 3, shuffle_partitions: int | None =
     """
     if iterations < 1:
         raise ValueError(f"hits requires iterations >= 1, got {iterations}")
-    spark = edges.sparkSession
-    prev_parts = None
-    if shuffle_partitions is not None:
-        prev_parts = pin_width(spark, shuffle_partitions)
-    try:
+    if shuffle_partitions is None:
         return _hits_loop(edges, iterations)
-    finally:
-        if prev_parts is not None:
-            unpin_width(spark, prev_parts)
+    with pin_width(edges.sparkSession, shuffle_partitions):
+        return _hits_loop(edges, iterations)
 
 
 def _hits_loop(edges: DataFrame, iterations: int) -> DataFrame:
@@ -374,15 +365,11 @@ def triangle_stats(edges: DataFrame, shuffle_partitions: int | None = None) -> D
     fixture-sized graph).
     """
     if shuffle_partitions is not None:
-        spark = edges.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(edges.sparkSession, shuffle_partitions):
             # all scalars are pulled by driver actions inside, so the
             # pinned scope covers every shuffle; the returned row is
             # pure literals and safe to use after the conf restore
             return triangle_stats(edges)
-        finally:
-            unpin_width(spark, prev)
     # MATERIALIZE the cached loop inputs SEQUENTIALLY (cheap counts the
     # function needs anyway) BEFORE the heavy wedge aggregate: a cached
     # frame referenced from several branches of one action is raced by
@@ -499,14 +486,10 @@ def bfs_distances(
     if max_hops < 0:
         raise ValueError(f"bfs_distances requires max_hops >= 0, got {max_hops}")
     if shuffle_partitions is not None:
-        spark = edges.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(edges.sparkSession, shuffle_partitions):
             out = bfs_distances(edges, sources, max_hops).cache()
             out.count()
             return out
-        finally:
-            unpin_width(spark, prev)
     edges = edges.select("src", "dst").cache()
     frontier = (
         sources.select(F.col("id").cast("bigint").alias("id"))
@@ -600,14 +583,10 @@ def weighted_sssp(
     if rounds < 0:
         raise ValueError(f"weighted_sssp requires rounds >= 0, got {rounds}")
     if shuffle_partitions is not None:
-        spark = edges.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(edges.sparkSession, shuffle_partitions):
             out = weighted_sssp(edges, sources, rounds).cache()
             out.count()
             return out
-        finally:
-            unpin_width(spark, prev)
     edges = edges.select("src", "dst", F.col("w").cast("bigint").alias("w")).cache()
     dist = (
         sources.select(F.col("id").cast("bigint").alias("id"))
@@ -708,14 +687,10 @@ def kcore_peel(
     if rounds < 1:
         raise ValueError(f"kcore_peel requires rounds >= 1, got {rounds}")
     if shuffle_partitions is not None:
-        spark = edges.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(edges.sparkSession, shuffle_partitions):
             out = kcore_peel(edges, k, rounds).cache()
             out.count()
             return out
-        finally:
-            unpin_width(spark, prev)
     edges = edges.select("src", "dst").cache()
     # both directions present => every node appears as a src
     alive = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
@@ -779,14 +754,10 @@ def label_propagation(
     if rounds < 1:
         raise ValueError(f"label_propagation requires rounds >= 1, got {rounds}")
     if shuffle_partitions is not None:
-        spark = edges.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(edges.sparkSession, shuffle_partitions):
             out = label_propagation(edges, rounds).cache()
             out.count()
             return out
-        finally:
-            unpin_width(spark, prev)
     edges = edges.select("src", "dst").cache()
     # both directions present => every node appears as a src
     labels = (
@@ -857,17 +828,13 @@ def connected_components(
     if iterations < 1:
         raise ValueError(f"connected_components requires iterations >= 1, got {iterations}")
     if shuffle_partitions is not None:
-        spark = edges.sparkSession
-        prev_conf = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(edges.sparkSession, shuffle_partitions):
             out, caches = _cc_loop(edges, iterations)
             out = out.cache()
             out.count()
             for c in caches:
                 c.unpersist()
             return out
-        finally:
-            unpin_width(spark, prev_conf)
     # non-pinned path: same cache hygiene as the pinned branch —
     # materialize the result, then release the loop-invariant caches
     # so repeated calls don't leak executor storage (ADVICE r13;

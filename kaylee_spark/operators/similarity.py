@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kaylee_spark.operators.skew import pin_width, unpin_width
+from kaylee_spark.operators.skew import pin_width
 
 from kaylee_spark.functions import cosine, dot, l2_norm
 
@@ -656,15 +656,11 @@ def mmr_topk(
     if not (0.0 <= lam <= 1.0):
         raise ValueError(f"mmr_topk requires 0 <= lam <= 1, got {lam}")
     if shuffle_partitions is not None:
-        spark = corpus.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(corpus.sparkSession, shuffle_partitions):
             # the loop body checkpoints every step, so the returned
             # frame's lineage is already materialized in-scope; the
             # final select is trivial under any caller conf
             return mmr_topk(corpus, queries, k, pool, lam, id_col, vec_col, query_id_col)
-        finally:
-            unpin_width(spark, prev)
     cands = cosine_topk(
         corpus, queries, k=pool, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col
     )
@@ -960,17 +956,13 @@ def kmeans_fit_assign(
     if k < 2:
         raise ValueError(f"kmeans requires k >= 2, got {k}")
     if shuffle_partitions is not None:
-        spark = df.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(df.sparkSession, shuffle_partitions):
             out = kmeans_fit_assign(
                 df, dim, k=k, iterations=iterations,
                 id_col=id_col, vec_col=vec_col,
             ).cache()
             out.count()
             return out
-        finally:
-            unpin_width(spark, prev)
     v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
     seeds = v.orderBy("vec_id").limit(k).collect()
     if len(seeds) < k:
@@ -1045,17 +1037,13 @@ def pq_encode(
     if k < 2:
         raise ValueError(f"pq_encode requires k >= 2, got {k}")
     if shuffle_partitions is not None:
-        spark = df.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(df.sparkSession, shuffle_partitions):
             out = pq_encode(
                 df, dim, m=m, k=k, iterations=iterations,
                 id_col=id_col, vec_col=vec_col,
             ).cache()
             out.count()
             return out
-        finally:
-            unpin_width(spark, prev)
     v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
     subspaces, books = _pq_fit(v, dim, m, k, iterations)
     out = v
@@ -1095,17 +1083,13 @@ def pq_neardup_pairs(
     until the hottest cell's |cell|² fits a task.
     """
     if shuffle_partitions is not None:
-        spark = df.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(df.sparkSession, shuffle_partitions):
             out = pq_neardup_pairs(
                 df, dim, m=m, k=k, iterations=iterations,
                 id_col=id_col, vec_col=vec_col,
             ).cache()
             out.count()
             return out
-        finally:
-            unpin_width(spark, prev)
     codes = pq_encode(
         df, dim, m=m, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col
     ).select("vec_id", *[f"c{s}" for s in range(m)]).cache()
@@ -1318,17 +1302,13 @@ def pq_adc_topk(
     Training reuses _pq_fit off one cached lattice scan.
     """
     if shuffle_partitions is not None:
-        spark = df.sparkSession
-        prev = pin_width(spark, shuffle_partitions)
-        try:
+        with pin_width(df.sparkSession, shuffle_partitions):
             out = pq_adc_topk(
                 df, dim, query_ids, m=m, k=k, iterations=iterations,
                 topk=topk, id_col=id_col, vec_col=vec_col,
             ).cache()
             out.count()
             return out
-        finally:
-            unpin_width(spark, prev)
     spark = df.sparkSession
     v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
     subspaces, books = _pq_fit(v, dim, m, k, iterations)

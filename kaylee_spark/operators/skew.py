@@ -18,10 +18,17 @@ for an n_salts-way split of each hot key's probe rows.
 
 from __future__ import annotations
 
+import threading
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 _SALT = "__kaylee_salt"
+
+# id(session) -> conf keys held by the open scoped_conf blocks on it
+_OPEN_SCOPES: dict[int, set[str]] = {}
+_SCOPES_LOCK = threading.Lock()
 
 
 #: explicit opt-in sentinel for position-based (retry-unstable) salting.
@@ -157,16 +164,18 @@ def fan_out(df: DataFrame) -> DataFrame:
 
     Input contract: meant for SCAN-LEVEL frames (the shipped call
     sites all pass ``df.select(narrow cols)`` of a source scan). A
-    frame whose lineage already contains an exchange is returned
-    unchanged WITHOUT probing its width: that exchange already
-    distributed the rows (AQE sizes its output by bytes), and probing
-    ``.rdd`` on such a frame would eagerly materialize its query
-    stages at plan-build time under AQE — the work would then run
-    again at action time (ADVICE r14). The exchange check reads the
-    pre-AQE physical plan, which the planner computes without running
-    any job.
+    frame whose lineage already contains a shuffle exchange is
+    returned unchanged WITHOUT probing its width: that exchange
+    already distributed the rows (AQE sizes its output by bytes), and
+    probing ``.rdd`` on such a frame would eagerly materialize its
+    query stages at plan-build time under AQE — the work would then
+    run again at action time. The check walks the pre-AQE
+    physical plan, which the planner computes without running any
+    job. A BroadcastExchange does not count: it leaves the probe
+    side's rows where the scan put them, so a broadcast join over a
+    single-partition scan is still fanned out.
     """
-    if "Exchange" in df._jdf.queryExecution().sparkPlan().toString():
+    if _has_shuffle(df._jdf.queryExecution().sparkPlan()):
         return df
     sc = df.sparkSession.sparkContext
     n = sc.defaultParallelism
@@ -175,10 +184,57 @@ def fan_out(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
-def pin_width(spark, n_partitions: int | str) -> tuple[str, str]:
-    """Enter a pinned-width scope for an iterative droplet loop:
-    fix ``spark.sql.shuffle.partitions`` AND switch AQE off, returning
-    the previous (partitions, aqe) pair for unpin_width.
+def _has_shuffle(plan) -> bool:
+    """Whether a JVM physical plan holds a shuffle exchange node
+    (ShuffleExchangeLike, node name "Exchange"); stops at the first."""
+    stack = [plan]
+    while stack:
+        node = stack.pop()
+        if node.nodeName() == "Exchange":
+            return True
+        children = node.children()
+        stack.extend(children.apply(i) for i in range(children.size()))
+    return False
+
+
+@contextmanager
+def scoped_conf(spark, confs: dict):
+    """Set ``confs`` on ``spark`` for the duration of a ``with`` block.
+
+    On exit, exception or not, each key goes back to what it was: a
+    key that was unset before (``spark.conf.get(k, None) is None``) is
+    unset again, not pinned to its default, so no override leaks into
+    the next query on the session. Entering raises RuntimeError, and
+    changes nothing, if another open scope on the same session holds
+    any of the same keys.
+    """
+    keys = set(confs)
+    prev = {k: spark.conf.get(k, None) for k in confs}
+    with _SCOPES_LOCK:
+        held = _OPEN_SCOPES.setdefault(id(spark), set())
+        clash = held & keys
+        if clash:
+            raise RuntimeError(f"conf scope overlaps an open scope on {sorted(clash)}")
+        held |= keys
+    try:
+        for k, v in confs.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+        with _SCOPES_LOCK:
+            held -= keys
+            if not held:
+                del _OPEN_SCOPES[id(spark)]
+
+
+def pin_width(spark, n_partitions: int | str):
+    """Scope for an iterative droplet loop: fix
+    ``spark.sql.shuffle.partitions`` AND switch AQE off.
 
     The iterative operators (graph loops, Lloyd trainers, top-k
     rungs) pin their shuffle width to the data's size because a
@@ -191,24 +247,17 @@ def pin_width(spark, n_partitions: int | str) -> tuple[str, str]:
     pin). Unpinned (production) calls never reach this path and keep
     AQE's coalescing/skew handling.
 
-    Thread-safety: conf set/restore is SESSION-GLOBAL, not scoped to
-    the calling thread — a concurrent query on the same session (e.g.
-    a streaming drain on another thread) would lose AQE and run at
-    the pinned width mid-flight. Every caller in this engine runs its
-    pinned loop single-threaded on the session (the registry executes
-    queries sequentially); a multi-threaded deployment must scope the
-    override per query (cloned session / SQL hints) instead.
+    Thread-safety: the override is SESSION-GLOBAL, not scoped to the
+    calling thread. A second scope over the same keys on the same
+    session raises (scoped_conf) instead of clobbering this one, but a
+    query on another thread that runs without a scope still loses AQE
+    and runs at the pinned width mid-flight. A concurrent deployment
+    must scope the override per query (cloned session / SQL hints).
     """
-    prev = (
-        spark.conf.get("spark.sql.shuffle.partitions"),
-        spark.conf.get("spark.sql.adaptive.enabled"),
+    return scoped_conf(
+        spark,
+        {
+            "spark.sql.shuffle.partitions": str(n_partitions),
+            "spark.sql.adaptive.enabled": "false",
+        },
     )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n_partitions))
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    return prev
-
-
-def unpin_width(spark, prev: tuple[str, str]) -> None:
-    """Restore the conf pair captured by pin_width."""
-    spark.conf.set("spark.sql.shuffle.partitions", prev[0])
-    spark.conf.set("spark.sql.adaptive.enabled", prev[1])

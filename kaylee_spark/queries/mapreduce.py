@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kaylee_spark.core.mapreduce import MapReduceJob
+from kaylee_spark.operators.skew import scoped_conf
 from kaylee_spark.queries import query
 from kaylee_spark.sources import load_table
 
@@ -154,10 +155,8 @@ def m05_stream_datafn_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaylee_spark.sources.pydatasource import register
 
     register(spark)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     # 8 state keys total — see _drain_staged_stream's sizing note
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
         # 4 micro-batches over the same 8000-row domain: enough batches
         # to exercise real offset advancement (the incremental contract
         # m05 exists to prove), without paying 8x the fixed per-batch
@@ -175,8 +174,6 @@ def m05_stream_datafn_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
             .agg(F.count(F.lit(1)).alias("n"))
         )
         return ST.run_all_to_memory(wc, output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @query(
@@ -211,10 +208,7 @@ def m06_pushdown_datafn_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame
     from kaylee_spark.sources.pydatasource import register
 
     register(spark)
-    conf_key = "spark.sql.python.filterPushdown.enabled"
-    prev = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, "true")
-    try:
+    with scoped_conf(spark, {"spark.sql.python.filterPushdown.enabled": "true"}):
         df = (
             spark.read.format("kaylee_datafn")
             .option("pushdown", "true")
@@ -224,8 +218,6 @@ def m06_pushdown_datafn_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame
             .filter("split = 3")
             .localCheckpoint(eager=True)  # pruned scan runs HERE, once
         )
-    finally:
-        spark.conf.set(conf_key, prev)
     words = df.select(F.explode(F.split("line", " ")).alias("word"))
     return words.groupBy("word").agg(F.count(F.lit(1)).alias("n"))
 
@@ -277,26 +269,6 @@ def m07_streamed_results_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .start()
         )
 
-    # Pin this thread's ACTIVE session to ours before the sink lookup:
-    # JVM getActiveSession is a ThreadLocal, each streaming query runs
-    # on a session CLONE (conf isolation) whose dataSourceManager was
-    # copied at clone time, and a long sweep can leave such a stale
-    # clone active on the py4j thread — the streaming-sink lookup then
-    # consults the clone's manager and misses registrations made on
-    # the real session (reproduced at 150+ prior queries:
-    # DATA_SOURCE_NOT_FOUND for kaylee_results with register() one
-    # line above; re-registering did NOT help, which is what points at
-    # the thread-local, not the manager).
-    try:
-        # Spark 4.x internal package path (absent under Spark Connect
-        # or a future rename) — if the hook is gone, degrade to the
-        # documented DATA_SOURCE_NOT_FOUND on stale clones instead of
-        # an AttributeError at this line (ADVICE r12).
-        spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
-            spark._jsparkSession
-        )
-    except Exception:
-        pass
     q = start()
     try:
         q.processAllAvailable()

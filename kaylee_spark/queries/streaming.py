@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kaylee_spark.functions import dec_sum, oracle_dec_sum
+from kaylee_spark.operators.skew import scoped_conf
 from kaylee_spark.queries import query
 from kaylee_spark.sources import load_table
 
@@ -77,6 +78,14 @@ def _drain_width(approx_keys: int = 128) -> str:
     return str(max(1, math.ceil(approx_keys / _DRAIN_KEYS_PER_PARTITION)))
 
 
+def _drain_confs() -> dict[str, str]:
+    """The UTC + drain-width override the event-time drains run under."""
+    return {
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.shuffle.partitions": _drain_width(),
+    }
+
+
 def _drain_staged_stream(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     """Shared harness for the TRUE Structured-Streaming rows: stage the
     events fixture as time-sliced files, run ``build(streaming_df)``
@@ -85,7 +94,7 @@ def _drain_staged_stream(spark: SparkSession, sf_dir: str, build) -> DataFrame:
 
     Timezone discipline: Spark requires event-time watermarks on
     TIMESTAMP (LTZ), so streams read ts as LTZ — the session timezone
-    is pinned to UTC for the eager drain (then restored) so window
+    is pinned to UTC for the eager drain so window
     alignment matches the NTZ oracles even on half-hour-offset
     sessions; callers convert emitted LTZ columns back with ``_ntz``.
 
@@ -95,26 +104,19 @@ def _drain_staged_stream(spark: SparkSession, sf_dir: str, build) -> DataFrame:
     ~dozens of keys (hour-windows × event types, per-user sessions),
     so the batch-tuned 32 would pay 32 tiny state commits per batch
     per operator for nothing — measured 2.5x of drain wall time. The
-    drain pins 4 state partitions (restored after): size this to state
+    drain pins 4 state partitions: size this to state
     KEY CARDINALITY and throughput, which is a property of the query,
     not of the cluster — a 100 TB deployment with millions of session
     keys sizes it up accordingly.
     """
     from kaylee_spark import streaming as ST
 
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions", _drain_width())
-    try:
+    with scoped_conf(spark, _drain_confs()):
         # staging is cached per (fixture, mtime) in ST — the five
         # streamed queries and repeated bench passes share one staged
         # dir, which persists in tempdir for the process lifetime
         staged = ST.stage_events_dir(spark, sf_dir, n_files=4)
         return build(ST, staged)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _drain_staged_documents(spark: SparkSession, sf_dir: str, build) -> DataFrame:
@@ -123,16 +125,9 @@ def _drain_staged_documents(spark: SparkSession, sf_dir: str, build) -> DataFram
     doc_id ranges — batched corpus deliveries)."""
     from kaylee_spark import streaming as ST
 
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions", _drain_width())
-    try:
+    with scoped_conf(spark, _drain_confs()):
         staged = ST.stage_documents_dir(spark, sf_dir, n_files=4)
         return build(ST, staged)
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 @query("e07_streamed_tumbling", oracle=_TUMBLING_ORACLE, extra=True)
@@ -1482,11 +1477,7 @@ def e37_streamed_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaylee_spark import streaming as ST
 
     n_total = _RATE_ROWS_PER_BATCH * _RATE_BATCHES
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.shuffle.partitions", _drain_width())
-    try:
+    with scoped_conf(spark, _drain_confs()):
         v = F.col("value")
         agg = (
             ST.rate_stream(spark, _RATE_ROWS_PER_BATCH)
@@ -1502,9 +1493,6 @@ def e37_streamed_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         return drained.select(
             _ntz("timestamp").alias("batch_hour"), "n_rows", "sum_value", "chk"
         ).localCheckpoint()
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 def _cdc_upsert_oracle() -> str:
@@ -1551,10 +1539,8 @@ def e38_streamed_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # write, and at the batch-tuned 32 every version lands as 32 tiny
     # files whose write/read commits dominate the drain. The returned
     # frame is a parquet read of the final version — independent of
-    # the restored conf.
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _drain_width())
-    try:
+    # the conf the scope restores.
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": _drain_width()}):
         return ST.streamed_upsert_snapshot(
             spark,
             base,
@@ -1563,8 +1549,6 @@ def e38_streamed_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
             workdir=workdir,
             tombstone_col="deleted",
         )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
 
 _E39_ORACLE = """
@@ -1616,9 +1600,6 @@ def e39_streamed_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream-stream trigger is paid 4x instead of 6x — the e36/e35
     # amortization dial applied here (measured 8.1 s -> ~5 s at sf0.1)
     staged = ST.stage_events_with_flush(spark, sf_dir, n_files=2)
-    prev_tz = spark.conf.get("spark.sql.session.timeZone")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
     # 4 sequential micro-batches x join-state tasks: size the state
     # shuffle by key cardinality (a few hundred users), not the batch
     # default — see _drain_staged_stream's sizing note. 4, matching
@@ -1628,8 +1609,7 @@ def e39_streamed_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # solo A/B at sf0.1, min of 4: width 8 = 4.99 s, 4 = 4.28 s,
     # 2 = 4.06 s — 2's edge over 4 is inside run noise, 4 keeps the
     # state tasks parallel over ~100 keys each).
-    spark.conf.set("spark.sql.shuffle.partitions", _drain_width())
-    try:
+    with scoped_conf(spark, _drain_confs()):
         # one file per trigger: the two sentinels MUST land in separate
         # batches for the tail flush (see stage_events_with_flush).
         # Watermark BEFORE the side filters — a watermark operator only
@@ -1645,9 +1625,6 @@ def e39_streamed_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             how="leftOuter",
         )
         drained = ST.run_to_memory(joined, output_mode="append")
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev_tz)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
     return (
         drained.filter(F.col("user_id") >= 0)  # drop the flush sentinels
         .select(
@@ -2124,9 +2101,7 @@ def e45_streamed_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     deltas.repartition(4).write.mode("overwrite").parquet(staged)
 
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", _drain_width())
-    try:
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": _drain_width()}):
         stream = (
             spark.readStream.schema(deltas.schema)
             .option("maxFilesPerTrigger", 2)
@@ -2139,8 +2114,6 @@ def e45_streamed_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
             ),
         )
         view = ST.run_to_memory(regs, output_mode="complete")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
 
     direct = (
         base.filter(F.col("k") % 10 != 3)

@@ -363,6 +363,27 @@ def read_stream_results(spark, path: str, schema: str):
 
 
 def register(spark) -> None:
-    """Idempotently register the sources on a session."""
+    """Idempotently register the sources on a session, and make it the
+    calling thread's ACTIVE JVM session.
+
+    The sink lookup of a write or writeStream consults the thread's
+    active session (a JVM ThreadLocal), not the frame's. Each streaming
+    query runs on a session CLONE whose dataSourceManager was copied at
+    clone time, and a long run can leave such a stale clone active on
+    the py4j thread; the lookup then misses registrations made on the
+    real session (reproduced at 150+ prior queries: DATA_SOURCE_NOT_FOUND
+    for kaylee_results with register() one line above; re-registering
+    alone did NOT help, which is what points at the thread-local).
+    """
     spark.dataSource.register(DatafnSource)
     spark.dataSource.register(JsonlResultsSource)
+    try:
+        # Spark 4.x internal package path (absent under Spark Connect
+        # or a future rename) — if the hook is gone, degrade to the
+        # documented DATA_SOURCE_NOT_FOUND on stale clones instead of
+        # an AttributeError here.
+        spark._jvm.org.apache.spark.sql.classic.SparkSession.setActiveSession(
+            spark._jsparkSession
+        )
+    except Exception:
+        pass

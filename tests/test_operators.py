@@ -249,6 +249,36 @@ def test_salted_join_rejects_right_join(spark):
         salted_join(df, df, "id", how="right")
 
 
+def test_fan_out_probes_shuffle_nodes_not_plan_text(spark):
+    """fan_out skips only frames whose physical plan holds a shuffle
+    exchange node. A broadcast join over a single-partition scan still
+    runs its probe side on one core, so it must be fanned out even when
+    the plan text says "Exchange": a cached BroadcastExchange (cached
+    with AQE off, so its plan is printed inline) or a column named
+    Exchange. A hash repartition is already spread and comes back as is."""
+    from kaylee_spark.operators.skew import fan_out, scoped_conf
+
+    n = spark.sparkContext.defaultParallelism
+    assert n > 1
+    probe = spark.range(0, 1000, 1, 1).withColumn("k", F.col("id") % 10)
+    dim = spark.range(10).withColumnRenamed("id", "k").withColumn("name", F.col("k").cast("string"))
+    with scoped_conf(spark, {"spark.sql.adaptive.enabled": "false"}):
+        cached = probe.join(F.broadcast(dim), "k").cache()
+        cached.count()
+    column_named = probe.join(F.broadcast(dim.withColumnRenamed("name", "Exchange")), "k")
+    try:
+        for df in (cached, column_named):
+            plan = df._jdf.queryExecution().sparkPlan().toString()
+            assert "Exchange" in plan and df.rdd.getNumPartitions() == 1, plan
+            out = fan_out(df)
+            assert out.rdd.getNumPartitions() == n
+            assert sorted(out.collect()) == sorted(df.collect())
+    finally:
+        cached.unpersist()
+    shuffled = probe.repartition("k")
+    assert fan_out(shuffled) is shuffled
+
+
 def test_grouped_agg_pandas_udf_median(spark, sf_dir):
     """pd_median (grouped-agg pandas_udf) must agree with Spark's exact
     interpolated percentile_approx-free median (F.median)."""

@@ -10,6 +10,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from kaylee_spark.operators.skew import scoped_conf  # noqa: E402
 from kaylee_spark.queries import load_everything  # noqa: E402
 from kaylee_spark.session import get_spark  # noqa: E402
 
@@ -281,10 +282,7 @@ def main() -> None:
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "128mb",
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1kb",
     }
-    saved = {k: spark.conf.get(k, None) for k in confs}
-    try:
-        for k, v in confs.items():
-            spark.conf.set(k, v)
+    with scoped_conf(spark, confs):
         df = reg["q03_top_orders"].fn(spark, sf_dir)
         p = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
         if "might_contain" not in p and "bloomfilter" not in p.lower():
@@ -296,12 +294,6 @@ def main() -> None:
             "the defaults are kept at fixture scale)_\n\n"
             f"```\n{p}\n```\n"
         )
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
     os.makedirs("docs", exist_ok=True)
     with open("docs/PLANS.md", "w") as f:
         f.write("\n".join(out))

@@ -32,7 +32,7 @@ def main() -> None:
         _lloyd_update,
         kmeans_lattice,
     )
-    from kaylee_spark.operators.skew import pin_width, unpin_width
+    from kaylee_spark.operators.skew import pin_width
 
     emb = load_table(spark, sf_dir, "embeddings")
     n = emb.count()
@@ -54,8 +54,7 @@ def main() -> None:
         spark.catalog.clearCache()
         t = {}
         t0 = time.perf_counter()
-        prev = pin_width(spark, 4)
-        try:
+        with pin_width(spark, 4):
             v = kmeans_lattice(
                 load_table(spark, sf_dir, "embeddings"), dim
             ).cache()
@@ -83,8 +82,6 @@ def main() -> None:
             t["noop_write"] = time.perf_counter() - t1
             v.unpersist()
             out.unpersist()
-        finally:
-            unpin_width(spark, prev)
         t["TOTAL"] = time.perf_counter() - t0
         print(f"pass {p}: " + "  ".join(f"{k_}={v_:.3f}" for k_, v_ in t.items()))
 
