@@ -331,7 +331,6 @@ def containment_pairs(
     max_df: int | None = DEFAULT_MAX_DF,
     pair_budget: int | None = None,
     return_plan: bool = False,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame | tuple[DataFrame, dict | None]:
     """Asymmetric n-gram containment over candidate pairs from the
     inverted index: containment(src -> dst) = |S(src) ∩ S(dst)| /
@@ -364,31 +363,27 @@ def containment_pairs(
     cap from the df histogram to fit the candidate-pair budget, and
     ``return_plan=True`` returns (DataFrame, plan) with the decision.
 
-    ``shuffle_partitions`` pins the whole candidate/score pipeline's
-    shuffle width and materializes the result inside the pinned scope
-    (same trade as connected_components above): the pipeline is ~5
-    chained shuffles (df-cap, sizes, self-join, pair count, two size
-    joins), so a batch-tuned width multiplies near-empty partition
-    commits — and AQE's per-stage replan rounds — by the stage count
-    on a capped candidate set (measured r15 at sf0.1: unpinned 4.39 s
-    vs pinned-8 1.85 s, and the 8-core driver run BEAT the 32-core
-    one before the pin — the classic over-split signature). Size it
-    to the capped pair volume (Σ C(df,2) is bounded by the planner) —
-    single digits for fixture corpora, thousands at 100 TB. The
-    result is materialized via eager localCheckpoint inside the scope
-    (blocks GC-freed), so the caller's conf never replans it.
+    The whole candidate/score pipeline runs under ``pin_width(df)``
+    and its result is materialized inside the scope: the pipeline is
+    ~5 chained shuffles (df-cap, sizes, self-join, pair count, two
+    size joins), so a batch-tuned width multiplies near-empty
+    partition commits — and AQE's per-stage replan rounds — by the
+    stage count on a capped candidate set (measured r15 at sf0.1:
+    unpinned 4.39 s vs pinned-8 1.85 s). The eager localCheckpoint
+    (blocks GC-freed) means the caller's conf never replans it.
     """
-    if shuffle_partitions is not None:
-        with pin_width(df.sparkSession, shuffle_partitions):
-            out = containment_pairs(
-                df, id_col, text_col, n=n, threshold=threshold,
-                max_df=max_df, pair_budget=pair_budget,
-                return_plan=return_plan,
-            )
-            if return_plan:
-                frame, plan_meta = out
-                return frame.localCheckpoint(eager=True), plan_meta
-            return out.localCheckpoint(eager=True)
+    with pin_width(df):
+        out, plan_meta = _containment_scores(
+            df, id_col, text_col, n, threshold, max_df, pair_budget
+        )
+        out = out.localCheckpoint(eager=True)
+    if return_plan:
+        return out, plan_meta
+    return out
+
+
+def _containment_scores(df, id_col, text_col, n, threshold, max_df, pair_budget):
+    """containment_pairs' lazy pipeline and the df-cap plan."""
     sh, plan_meta = _capped_postings(df, id_col, text_col, n, max_df, pair_budget)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     a = sh.withColumnRenamed("doc", "doc_a")
@@ -416,10 +411,7 @@ def containment_pairs(
         F.col("doc_a").alias("dst"),
         (F.col("n_common") / F.col("size_b")).cast("double").alias("containment"),
     )
-    out = fwd.unionByName(rev).filter(F.col("containment") >= threshold)
-    if return_plan:
-        return out, plan_meta
-    return out
+    return fwd.unionByName(rev).filter(F.col("containment") >= threshold), plan_meta
 
 
 def containment_topk_per_src(
@@ -453,15 +445,8 @@ def containment_topk_per_src(
     """
     from pyspark.sql import Window
 
-    pairs, plan_meta = containment_pairs(
-        df,
-        id_col,
-        text_col,
-        n=n,
-        threshold=0.0,
-        max_df=max_df,
-        pair_budget=pair_budget,
-        return_plan=True,
+    pairs, plan_meta = _containment_scores(
+        df, id_col, text_col, n, 0.0, max_df, pair_budget
     )
     w = Window.partitionBy("src").orderBy(F.desc("containment"), F.asc("dst"))
     out = (
@@ -849,7 +834,6 @@ def connected_components(
     src: str = "doc_a",
     dst: str = "doc_b",
     max_iter: int = 20,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Min-label propagation over an undirected pair graph.
 
@@ -872,23 +856,20 @@ def connected_components(
 
     Output: (doc, cluster) for every node appearing in ``edges``.
 
-    ``shuffle_partitions`` pins the loop's shuffle width, same trade
-    as pagerank(): each iteration is ~3 shuffles plus an eager
+    The loop runs under ``pin_width(edges)``, same trade as
+    pagerank(): each iteration is ~3 shuffles plus an eager
     localCheckpoint, so a batch-tuned width multiplies near-empty
     partition overhead by the iteration count on a small pair graph.
-    Size it to the candidate-pair volume (single digits for fixture
-    corpora, thousands at 100 TB). Labels are exact min-propagation —
-    width-independent — and every iteration materializes inside the
-    pinned scope (the per-step localCheckpoints), so the caller's
-    conf never replans the loop.
+    Labels are exact min-propagation — width-independent — and every
+    iteration (and the lazy edge pipeline the first one forces)
+    materializes inside the pinned scope, so the caller's conf never
+    replans the loop.
     """
-    if shuffle_partitions is not None:
-        with pin_width(edges.sparkSession, shuffle_partitions):
-            # the recursive call's per-iteration localCheckpoints (and
-            # the edge materialization they force) all run in-scope;
-            # the returned frame is checkpointed, so restoring the
-            # conf afterwards cannot replan it.
-            return connected_components(edges, src, dst, max_iter)
+    with pin_width(edges):
+        return _min_label_loop(edges, src, dst, max_iter)
+
+
+def _min_label_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
@@ -939,7 +920,7 @@ def connected_components(
             f"connected_components: max_iter={max_iter} exhausted before "
             "convergence; cluster labels may be split. Increase max_iter.",
             RuntimeWarning,
-            stacklevel=2,
+            stacklevel=3,
         )
     return labels
 
@@ -951,7 +932,6 @@ def dedup_clusters(
     n: int = 3,
     threshold: float = 0.5,
     edges: str = "lsh",
-    shuffle_partitions: int | None = None,
     n_docs: int | None = None,
 ) -> DataFrame:
     """Full near-dup clustering: Jaccard pairs above ``threshold``
@@ -980,11 +960,11 @@ def dedup_clusters(
     - "exact": full inverted-index exact Jaccard (jaccard_pairs) —
       the brute-force reference path.
 
-    ``shuffle_partitions`` pins the width of the whole pipeline's
-    execution: the lazy pair stage materializes inside
-    connected_components' first localCheckpoint, so one pin covers
-    both the candidate joins and the iterative loop (see
-    connected_components for the sizing argument).
+    The loop runs under ``pin_width(df)``: the corpus, not the pair
+    stage, sizes it, since the pair stage's cached leaves are read
+    several times over. The lazy pair stage materializes inside the
+    loop's first localCheckpoint, so the pin covers both the candidate
+    joins and the iterative loop.
     """
     if edges not in ("auto", "lsh", "exact"):
         raise ValueError(f"edges must be 'auto', 'lsh', or 'exact' (got {edges!r})")
@@ -1003,7 +983,8 @@ def dedup_clusters(
         pairs = minhash_lsh_verified_pairs(df, id_col, text_col, n=n, threshold=threshold)
     else:
         pairs = jaccard_pairs(df, id_col, text_col, n=n, threshold=threshold)
-    comps = connected_components(pairs, shuffle_partitions=shuffle_partitions)
+    with pin_width(df):
+        comps = _min_label_loop(pairs, "doc_a", "doc_b", max_iter=20)
     all_docs = df.select(F.col(id_col).alias("doc"))
     return (
         all_docs.join(comps, "doc", "left")
@@ -1470,7 +1451,6 @@ def leakage_free_split(
     n: int = 3,
     threshold: float = 0.5,
     edges: str = "lsh",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Train/eval assignment that can never leak near-duplicates
     across the split: documents are first clustered by near-dup
@@ -1495,10 +1475,7 @@ def leakage_free_split(
     """
     from kaylee_spark.operators.sampling import portable_bucket
 
-    clusters = dedup_clusters(
-        df, id_col, text_col, n=n, threshold=threshold, edges=edges,
-        shuffle_partitions=shuffle_partitions,
-    )
+    clusters = dedup_clusters(df, id_col, text_col, n=n, threshold=threshold, edges=edges)
     return clusters.select(
         "doc",
         "cluster",

@@ -77,9 +77,7 @@ def customer_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def pagerank(
-    edges: DataFrame, iterations: int = 3, shuffle_partitions: int | None = None
-) -> DataFrame:
+def pagerank(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Fixed-iteration PageRank over a (src, dst) bigint edge list.
 
     Returns (id, rank_e12): rank in pico-ranks (multiply by 1e-12 for
@@ -92,35 +90,27 @@ def pagerank(
     r_{k+1}(v) = (0.15 * RANK_SCALE) div N
                + (17 * Σ_{u→v} (r_k(u) div outdeg(u))) div 20
 
-    ``shuffle_partitions`` pins the shuffle width for the whole
-    trajectory, like hits(): an iterative loop multiplies per-stage
-    overhead by ~4 stages per iteration plus the invariant caches, so
-    a batch-tuned width (32 here, thousands on a cluster) pays dozens
-    of near-empty partition commits per step on a small graph —
-    measured 4x of g01's wall time (9.0 s at 32 vs 2.1 s at 4 on the
-    sf0.1 demand graph). Size it to |edges| / target-partition-bytes:
-    single digits for fixture graphs, thousands at 100 TB. Because
-    the caller's final action would otherwise replan the lazy tail
-    under ITS conf, a pinned run materializes the result (cache +
-    count) inside the pinned scope and returns the cached frame —
-    exact integer ranks are bit-identical at ANY width (probed in
-    config-independence tests), so this is purely physical.
+    The loop runs under ``pin_width(edges)`` (an iterative loop pays
+    ~4 stages per iteration, so a batch-tuned width pays dozens of
+    near-empty partition commits per step on a small graph: g01 took
+    9.0 s at width 32 and 2.1 s at 4 at sf0.1). Because the caller's
+    final action would otherwise replan the lazy tail under ITS conf,
+    the result is materialized (cache + count) inside the pinned scope
+    and the cached frame returned — exact integer ranks are
+    bit-identical at ANY width, so this is purely physical.
     """
     if iterations < 1:
         raise ValueError(f"pagerank requires iterations >= 1, got {iterations}")
-    if shuffle_partitions is not None:
-        with pin_width(edges.sparkSession, shuffle_partitions):
-            ranks, caches = _pagerank_loop(edges, iterations)
-            out = ranks.cache()
-            out.count()
-            # the result is materialized — the loop-invariant caches
-            # can be released (repeated registry runs in one session
-            # otherwise accumulate executor storage).
-            for c in caches:
-                c.unpersist()
-            return out
-    ranks, _ = _pagerank_loop(edges, iterations)
-    return ranks
+    with pin_width(edges):
+        ranks, caches = _pagerank_loop(edges, iterations)
+        out = ranks.cache()
+        out.count()
+    # the result is materialized — the loop-invariant caches can be
+    # released (repeated registry runs in one session otherwise
+    # accumulate executor storage).
+    for c in caches:
+        c.unpersist()
+    return out
 
 
 def _pagerank_loop(edges: DataFrame, iterations: int):
@@ -184,7 +174,7 @@ def _pagerank_loop(edges: DataFrame, iterations: int):
 HITS_SCALE = 1_000_000
 
 
-def hits(edges: DataFrame, iterations: int = 3, shuffle_partitions: int | None = None) -> DataFrame:
+def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Fixed-iteration HITS (hubs & authorities) over a (src, dst)
     bigint edge list, max-normalized in exact integer arithmetic.
 
@@ -214,21 +204,12 @@ def hits(edges: DataFrame, iterations: int = 3, shuffle_partitions: int | None =
     operation remains a distributed join + map-side-combined sum on
     the edge key. Integer max-normalization keeps the whole
     trajectory bit-identical across engines and partitionings — the
-    property the unrolled SQL oracle hash-verifies.
-
-    ``shuffle_partitions`` scopes the shuffle width for the whole
-    eager trajectory: HITS runs ~5 shuffle
-    stages per iteration, so per-stage overhead is multiplied — size
-    it to |edges| / target-partition-bytes like any static tuning
-    input (the fixture queries pass single digits; a 100 TB edge list
-    wants thousands). Scores are exact integers, so the result is
-    bit-identical at ANY width (probed in config-independence tests).
+    property the unrolled SQL oracle hash-verifies, at ANY width of
+    the ``pin_width(edges)`` scope the eager trajectory runs in.
     """
     if iterations < 1:
         raise ValueError(f"hits requires iterations >= 1, got {iterations}")
-    if shuffle_partitions is None:
-        return _hits_loop(edges, iterations)
-    with pin_width(edges.sparkSession, shuffle_partitions):
+    with pin_width(edges):
         return _hits_loop(edges, iterations)
 
 
@@ -318,7 +299,7 @@ def coorder_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def triangle_stats(edges: DataFrame, shuffle_partitions: int | None = None) -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Exact triangle counting by degree orientation (compact-forward)
     over an undirected (u, v) edge list with u < v and no duplicates.
 
@@ -359,17 +340,15 @@ def triangle_stats(edges: DataFrame, shuffle_partitions: int | None = None) -> D
     aggregate — previously it was cached and traversed twice, which
     re-ran the dominant join AND held the whole wedge set (41M rows
     at sf0.1) in executor storage; measured warm solo at sf0.1:
-    9.8 s -> 7.9 s, identical counts. ``shuffle_partitions`` pins the
-    width across the multi-action sequence (the g01 sizing note — a
-    vanilla session's 200 partitions pay overhead per action on a
-    fixture-sized graph).
+    9.8 s -> 7.9 s, identical counts. ``pin_width(edges)`` covers the
+    whole multi-action sequence: every scalar is pulled by a driver
+    action inside it, and the returned row is pure literals.
     """
-    if shuffle_partitions is not None:
-        with pin_width(edges.sparkSession, shuffle_partitions):
-            # all scalars are pulled by driver actions inside, so the
-            # pinned scope covers every shuffle; the returned row is
-            # pure literals and safe to use after the conf restore
-            return triangle_stats(edges)
+    with pin_width(edges):
+        return _triangle_counts(edges)
+
+
+def _triangle_counts(edges: DataFrame) -> DataFrame:
     # MATERIALIZE the cached loop inputs SEQUENTIALLY (cheap counts the
     # function needs anyway) BEFORE the heavy wedge aggregate: a cached
     # frame referenced from several branches of one action is raced by
@@ -454,7 +433,6 @@ def bfs_distances(
     edges: DataFrame,
     sources: DataFrame,
     max_hops: int = 3,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Multi-source breadth-first hop distance over a directed
     (src, dst) bigint edge list: every node reachable from the seed
@@ -477,19 +455,18 @@ def bfs_distances(
     function of the graph — bit-identical in any engine and at any
     shuffle width, which is what lets a full-relaxation SQL oracle
     (min over <= k-hop paths) verify this frontier implementation:
-    both compute the same minimum.
-
-    ``shuffle_partitions`` pins the loop's shuffle width exactly like
-    pagerank() — see its docstring for the near-empty-partition
-    overhead math; integer distances are width-independent.
+    both compute the same minimum. The loop runs under
+    ``pin_width(edges)``, like pagerank().
     """
     if max_hops < 0:
         raise ValueError(f"bfs_distances requires max_hops >= 0, got {max_hops}")
-    if shuffle_partitions is not None:
-        with pin_width(edges.sparkSession, shuffle_partitions):
-            out = bfs_distances(edges, sources, max_hops).cache()
-            out.count()
-            return out
+    with pin_width(edges):
+        out = _bfs_loop(edges, sources, max_hops).cache()
+        out.count()
+    return out
+
+
+def _bfs_loop(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
     edges = edges.select("src", "dst").cache()
     frontier = (
         sources.select(F.col("id").cast("bigint").alias("id"))
@@ -550,7 +527,6 @@ def weighted_sssp(
     edges: DataFrame,
     sources: DataFrame,
     rounds: int = 3,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Multi-source single-source-shortest-path (Bellman-Ford) over a
     directed (src, dst, w) bigint edge list: after ``rounds``
@@ -575,18 +551,18 @@ def weighted_sssp(
     per round (min-merge + anti-join), so an uncheckpointed loop
     doubles the lazy plan every round (the k^n analyze blow-up the
     MMR work measured). The edge list is the only large input,
-    cached once.
-
-    ``shuffle_partitions`` pins the loop's shuffle width exactly like
-    pagerank() — see its docstring for the near-empty-partition math.
+    cached once. The loop runs under ``pin_width(edges)``, like
+    pagerank().
     """
     if rounds < 0:
         raise ValueError(f"weighted_sssp requires rounds >= 0, got {rounds}")
-    if shuffle_partitions is not None:
-        with pin_width(edges.sparkSession, shuffle_partitions):
-            out = weighted_sssp(edges, sources, rounds).cache()
-            out.count()
-            return out
+    with pin_width(edges):
+        out = _sssp_loop(edges, sources, rounds).cache()
+        out.count()
+    return out
+
+
+def _sssp_loop(edges: DataFrame, sources: DataFrame, rounds: int) -> DataFrame:
     edges = edges.select("src", "dst", F.col("w").cast("bigint").alias("w")).cache()
     dist = (
         sources.select(F.col("id").cast("bigint").alias("id"))
@@ -655,7 +631,6 @@ def kcore_peel(
     edges: DataFrame,
     k: int,
     rounds: int = 3,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Synchronous k-core peeling over a (src, dst) bigint edge list:
     each round simultaneously removes every node whose degree within
@@ -670,8 +645,8 @@ def kcore_peel(
     rounds (not the sequential min-degree peel) make the result a pure
     function of the graph — order-free, exact integers, so a fully
     unrolled SQL twin verifies it bit-for-bit, and the loop is
-    width-independent (``shuffle_partitions`` pins the trajectory's
-    shuffle width exactly like pagerank — see its overhead math).
+    width-independent (it runs under ``pin_width(edges)``, like
+    pagerank).
 
     Scale shape: the edge list is the only large input, cached once;
     each round is two semi-joins (edge endpoints against the alive
@@ -686,11 +661,13 @@ def kcore_peel(
         raise ValueError(f"kcore_peel requires k >= 1, got {k}")
     if rounds < 1:
         raise ValueError(f"kcore_peel requires rounds >= 1, got {rounds}")
-    if shuffle_partitions is not None:
-        with pin_width(edges.sparkSession, shuffle_partitions):
-            out = kcore_peel(edges, k, rounds).cache()
-            out.count()
-            return out
+    with pin_width(edges):
+        out = _kcore_loop(edges, k, rounds).cache()
+        out.count()
+    return out
+
+
+def _kcore_loop(edges: DataFrame, k: int, rounds: int) -> DataFrame:
     edges = edges.select("src", "dst").cache()
     # both directions present => every node appears as a src
     alive = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
@@ -726,7 +703,6 @@ def kcore_peel(
 def label_propagation(
     edges: DataFrame,
     rounds: int = 3,
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection over a
     (src, dst) bigint edge list (Raghavan et al. 2007, made
@@ -749,15 +725,18 @@ def label_propagation(
     localCheckpoint'ed per round (each round references its
     predecessor once per edge side — the uncheckpointed loop grows
     k^n lazy-plan copies, the MMR lesson), and the loop exits early
-    at a fixpoint round (no label changed).
+    at a fixpoint round (no label changed). The loop runs under
+    ``pin_width(edges)``, like pagerank().
     """
     if rounds < 1:
         raise ValueError(f"label_propagation requires rounds >= 1, got {rounds}")
-    if shuffle_partitions is not None:
-        with pin_width(edges.sparkSession, shuffle_partitions):
-            out = label_propagation(edges, rounds).cache()
-            out.count()
-            return out
+    with pin_width(edges):
+        out = _lpa_loop(edges, rounds).cache()
+        out.count()
+    return out
+
+
+def _lpa_loop(edges: DataFrame, rounds: int) -> DataFrame:
     edges = edges.select("src", "dst").cache()
     # both directions present => every node appears as a src
     labels = (
@@ -794,9 +773,7 @@ def label_propagation(
     return labels.select("id", F.col("label").alias("community"))
 
 
-def connected_components(
-    edges: DataFrame, iterations: int = 3, shuffle_partitions: int | None = None
-) -> DataFrame:
+def connected_components(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Fixed-iteration HASH-MIN connected components over a (src, dst)
     bigint edge list, treated as UNDIRECTED (the edge list is
     symmetrized internally):
@@ -819,29 +796,20 @@ def connected_components(
     Scale shape: the symmetrized edge list and node set are cached
     loop invariants (the iterative-algorithm standard); each iteration
     is ONE key-on-key join + min-aggregate, both shuffling on node id
-    so AQE reuses the exchange; ``shuffle_partitions`` pins the width
-    for the whole trajectory (the g01 sizing note: state per step is
+    so the exchange is reused; the trajectory runs under
+    ``pin_width(edges)`` (the g01 sizing note: state per step is
     |nodes|, not cluster-sized). At 100 TB use the alternating
     large-star/small-star variant to cut rounds; the register
     arithmetic is unchanged.
     """
     if iterations < 1:
         raise ValueError(f"connected_components requires iterations >= 1, got {iterations}")
-    if shuffle_partitions is not None:
-        with pin_width(edges.sparkSession, shuffle_partitions):
-            out, caches = _cc_loop(edges, iterations)
-            out = out.cache()
-            out.count()
-            for c in caches:
-                c.unpersist()
-            return out
-    # non-pinned path: same cache hygiene as the pinned branch —
-    # materialize the result, then release the loop-invariant caches
-    # so repeated calls don't leak executor storage (ADVICE r13;
-    # mirrors triangle_stats' cache/count/unpersist sequence).
-    out, caches = _cc_loop(edges, iterations)
-    out = out.cache()
-    out.count()
+    with pin_width(edges):
+        out, caches = _cc_loop(edges, iterations)
+        out = out.cache()
+        out.count()
+    # the result is materialized, so the loop-invariant caches can be
+    # released and repeated calls don't leak executor storage.
     for c in caches:
         c.unpersist()
     return out

@@ -623,7 +623,6 @@ def mmr_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Maximal-Marginal-Relevance diversified top-k: greedy re-rank of
     each query's top-``pool`` cosine candidates so every next pick
@@ -645,9 +644,9 @@ def mmr_topk(
     parallelism = |queries|. Determinism: every comparison is the
     identical IEEE double expression on both engines, ties break by
     id, MAX over selected is order-independent — which is what lets a
-    greedy iterative re-ranker hash-match a SQL oracle at all.
-    ``shuffle_partitions`` pins the loop width (see pagerank); scores
-    are width-independent, the pin is purely physical.
+    greedy iterative re-ranker hash-match a SQL oracle at all. The
+    loop runs under ``pin_width(corpus)`` (see pagerank); scores are
+    width-independent, the pin is purely physical.
     """
     if k < 1:
         raise ValueError(f"mmr_topk requires k >= 1, got {k}")
@@ -655,12 +654,14 @@ def mmr_topk(
         raise ValueError(f"mmr_topk requires pool >= k, got pool={pool} k={k}")
     if not (0.0 <= lam <= 1.0):
         raise ValueError(f"mmr_topk requires 0 <= lam <= 1, got {lam}")
-    if shuffle_partitions is not None:
-        with pin_width(corpus.sparkSession, shuffle_partitions):
-            # the loop body checkpoints every step, so the returned
-            # frame's lineage is already materialized in-scope; the
-            # final select is trivial under any caller conf
-            return mmr_topk(corpus, queries, k, pool, lam, id_col, vec_col, query_id_col)
+    # the loop body checkpoints every step, so the returned frame's
+    # lineage is already materialized in-scope; the final select is
+    # trivial under any caller conf
+    with pin_width(corpus):
+        return _mmr_loop(corpus, queries, k, pool, lam, id_col, vec_col, query_id_col)
+
+
+def _mmr_loop(corpus, queries, k, pool, lam, id_col, vec_col, query_id_col) -> DataFrame:
     cands = cosine_topk(
         corpus, queries, k=pool, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col
     )
@@ -920,7 +921,6 @@ def kmeans_fit_assign(
     iterations: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Fixed-iteration Lloyd's k-means over an embedding column, exact
     to the bit across engines and partitionings.
@@ -946,23 +946,22 @@ def kmeans_fit_assign(
     it into codegen literals (zero joins — the parameters-as-literals
     shape s06 uses), scans the cached lattice frame ONCE, and reduces
     to k x (dim+1) map-side-combined sums. 3 iterations = 3 scans + 3
-    model-sized collects; nothing else moves. ``shuffle_partitions``
-    pins the trajectory's shuffle width like pagerank()/hits() —
-    the per-iteration aggregate has k rows, so batch-width shuffles
-    pay near-empty partition commits per step on fixture data.
+    model-sized collects; nothing else moves. The trajectory runs
+    under ``pin_width(df)`` like pagerank()/hits() — the
+    per-iteration aggregate has k rows, so batch-width shuffles pay
+    near-empty partition commits per step.
     """
     if iterations < 1:
         raise ValueError(f"kmeans requires iterations >= 1, got {iterations}")
     if k < 2:
         raise ValueError(f"kmeans requires k >= 2, got {k}")
-    if shuffle_partitions is not None:
-        with pin_width(df.sparkSession, shuffle_partitions):
-            out = kmeans_fit_assign(
-                df, dim, k=k, iterations=iterations,
-                id_col=id_col, vec_col=vec_col,
-            ).cache()
-            out.count()
-            return out
+    with pin_width(df):
+        out = _kmeans_loop(df, dim, k, iterations, id_col, vec_col).cache()
+        out.count()
+    return out
+
+
+def _kmeans_loop(df, dim, k, iterations, id_col, vec_col) -> DataFrame:
     v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
     seeds = v.orderBy("vec_id").limit(k).collect()
     if len(seeds) < k:
@@ -1004,7 +1003,6 @@ def pq_encode(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Product quantization: split each embedding into ``m`` equal
     subspaces, learn an independent exact-lattice Lloyd's codebook of
@@ -1028,22 +1026,22 @@ def pq_encode(
     final encode pass computes all m argmins in a single select
     (per-subspace distance chains are column-pruned independently,
     so no subspace pays for another's arithmetic). Nothing but
-    (m x k x dim/m) ints ever reaches the driver.
+    (m x k x dim/m) ints ever reaches the driver. Training and encoding
+    run under ``pin_width(df)``.
     """
+    with pin_width(df):
+        out = _pq_codes(df, dim, m, k, iterations, id_col, vec_col).cache()
+        out.count()
+    return out
+
+
+def _pq_codes(df, dim, m, k, iterations, id_col, vec_col) -> DataFrame:
     if dim % m != 0 or m < 1:
         raise ValueError(f"pq_encode needs m >= 1 dividing dim, got m={m} dim={dim}")
     if iterations < 1:
         raise ValueError(f"pq_encode requires iterations >= 1, got {iterations}")
     if k < 2:
         raise ValueError(f"pq_encode requires k >= 2, got {k}")
-    if shuffle_partitions is not None:
-        with pin_width(df.sparkSession, shuffle_partitions):
-            out = pq_encode(
-                df, dim, m=m, k=k, iterations=iterations,
-                id_col=id_col, vec_col=vec_col,
-            ).cache()
-            out.count()
-            return out
     v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
     subspaces, books = _pq_fit(v, dim, m, k, iterations)
     out = v
@@ -1065,7 +1063,6 @@ def pq_neardup_pairs(
     iterations: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Semantic near-duplicate candidates via product quantization:
     vectors that land in the SAME cell of all ``m`` subspace codebooks
@@ -1080,18 +1077,18 @@ def pq_neardup_pairs(
     only candidate ids. Codes are m ints; the wide vectors stay out
     of the candidate shuffle entirely and are re-joined (id, lattice)
     only for surviving pairs. Cell skew is the knob: raise k or m
-    until the hottest cell's |cell|² fits a task.
+    until the hottest cell's |cell|² fits a task. Training, encoding
+    and the pair joins run under ``pin_width(df)``.
     """
-    if shuffle_partitions is not None:
-        with pin_width(df.sparkSession, shuffle_partitions):
-            out = pq_neardup_pairs(
-                df, dim, m=m, k=k, iterations=iterations,
-                id_col=id_col, vec_col=vec_col,
-            ).cache()
-            out.count()
-            return out
-    codes = pq_encode(
-        df, dim, m=m, k=k, iterations=iterations, id_col=id_col, vec_col=vec_col
+    with pin_width(df):
+        out = _pq_pairs(df, dim, m, k, iterations, id_col, vec_col).cache()
+        out.count()
+    return out
+
+
+def _pq_pairs(df, dim, m, k, iterations, id_col, vec_col) -> DataFrame:
+    codes = _pq_codes(
+        df, dim, m, k, iterations, id_col, vec_col
     ).select("vec_id", *[f"c{s}" for s in range(m)]).cache()
     code_cols = [f"c{s}" for s in range(m)]
     a = codes.select(F.col("vec_id").alias("id_a"), *code_cols)
@@ -1171,7 +1168,6 @@ def semantic_clusters(
     dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Semantic near-duplicate CLUSTERS over an embedding corpus:
     sign-signature near-dup pairs (sign_neardup_pairs — integer-exact,
@@ -1192,15 +1188,17 @@ def semantic_clusters(
     only (ids, never vectors; O(log diameter) pointer-jumped rounds,
     localCheckpoint per round), and the final labeling is one id-keyed
     left join of the id-only label frame back onto the corpus ids.
+    The pair stage and the loop run under ``pin_width(emb)``.
     """
-    from kaylee_spark.operators.dedup import connected_components
+    from kaylee_spark.operators.dedup import _min_label_loop
 
     pairs = sign_neardup_pairs(
         emb, max_hamming=max_hamming, bits=bits, dim=dim, id_col=id_col, vec_col=vec_col
     ).select("id_a", "id_b")
-    cc = connected_components(
-        pairs, src="id_a", dst="id_b", shuffle_partitions=shuffle_partitions
-    ).select(F.col("doc").alias("__id"), "cluster")
+    with pin_width(emb):
+        cc = _min_label_loop(pairs, "id_a", "id_b", max_iter=20).select(
+            F.col("doc").alias("__id"), "cluster"
+        )
     ids = emb.select(F.col(id_col).alias("__id"))
     lab = F.coalesce(F.col("cluster"), F.col("__id"))
     return ids.join(cc, "__id", "left").select(
@@ -1280,7 +1278,6 @@ def pq_adc_topk(
     topk: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    shuffle_partitions: int | None = None,
 ) -> DataFrame:
     """Asymmetric-distance PQ search (Jégou et al. 2011) — the scan
     path that makes PQ an ANN index, not just a compressor: each query
@@ -1299,16 +1296,16 @@ def pq_adc_topk(
     join the BROADCAST |queries| x m x k lookup frame, then one
     (query, vec) map-side-combined sum and a per-query rank window —
     the corpus-side traffic is 3 ints per code, independent of dim.
-    Training reuses _pq_fit off one cached lattice scan.
+    Training reuses _pq_fit off one cached lattice scan; the whole
+    search runs under ``pin_width(df)``.
     """
-    if shuffle_partitions is not None:
-        with pin_width(df.sparkSession, shuffle_partitions):
-            out = pq_adc_topk(
-                df, dim, query_ids, m=m, k=k, iterations=iterations,
-                topk=topk, id_col=id_col, vec_col=vec_col,
-            ).cache()
-            out.count()
-            return out
+    with pin_width(df):
+        out = _pq_adc_search(df, dim, query_ids, m, k, iterations, topk, id_col, vec_col).cache()
+        out.count()
+    return out
+
+
+def _pq_adc_search(df, dim, query_ids, m, k, iterations, topk, id_col, vec_col) -> DataFrame:
     spark = df.sparkSession
     v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
     subspaces, books = _pq_fit(v, dim, m, k, iterations)

@@ -232,20 +232,36 @@ def scoped_conf(spark, confs: dict):
                 del _OPEN_SCOPES[id(spark)]
 
 
-def pin_width(spark, n_partitions: int | str):
-    """Scope for an iterative droplet loop: fix
-    ``spark.sql.shuffle.partitions`` AND switch AQE off.
+#: input bytes one task of a pinned loop is sized for. A loop's
+#: per-step frames are node- or model-sized, far smaller than its
+#: input, so the width follows the input at a fine grain: 256 KB gives
+#: every sf0.1 fixture loop at least 2 tasks (d16's 0.6 MB of
+#: documents get 3; one task cost d16 18% of its wall time), while the
+#: multi-MB graph inputs reach the session's width.
+PIN_TASK_BYTES = 256 * 1024
 
-    The iterative operators (graph loops, Lloyd trainers, top-k
-    rungs) pin their shuffle width to the data's size because a
-    batch-tuned width pays near-empty partition commits per step.
-    Inside such a scope AQE has nothing left to decide — the width is
-    explicit and the per-step frames are node/model-sized — but it
-    still replans and resubmits query stages action by action, a pure
-    per-action latency tax on loops made of many droplet actions
-    (measured: s09_kmeans 3.22 -> 2.57 s with AQE off inside the
-    pin). Unpinned (production) calls never reach this path and keep
-    AQE's coalescing/skew handling.
+
+def pin_width(frame: DataFrame):
+    """Scope for an iterative droplet loop over ``frame``: fix
+    ``spark.sql.shuffle.partitions`` to a width derived from the
+    frame's input AND switch AQE off.
+
+    The width is ceil(input bytes / PIN_TASK_BYTES), clamped to [1,
+    the session's ``spark.sql.shuffle.partitions``]. Input bytes are
+    the sum of ``stats().sizeInBytes`` over the leaves of the frame's
+    optimized plan: the file sizes for a parquet scan, read without a
+    Spark job. The root's estimate is not used, since without CBO a
+    join's is the product of its inputs. A leaf with no real size (a
+    ``LogicalRDD`` from ``createDataFrame`` or a checkpoint) reports
+    ``Long.MaxValue`` or such a product, so it gives the session's
+    width.
+
+    A batch-tuned width pays near-empty partition commits on every
+    step of a loop whose frames are node- or model-sized. Inside the
+    scope AQE has nothing left to decide, but it still replans and
+    resubmits query stages action by action, a pure per-action latency
+    tax on loops made of many droplet actions (measured: s09_kmeans
+    3.22 -> 2.57 s with AQE off inside the pin).
 
     Thread-safety: the override is SESSION-GLOBAL, not scoped to the
     calling thread. A second scope over the same keys on the same
@@ -254,10 +270,15 @@ def pin_width(spark, n_partitions: int | str):
     and runs at the pinned width mid-flight. A concurrent deployment
     must scope the override per query (cloned session / SQL hints).
     """
+    spark = frame.sparkSession
+    leaves = frame._jdf.queryExecution().optimizedPlan().collectLeaves()
+    size = sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    width = max(1, min(cap, -(-size // PIN_TASK_BYTES)))
     return scoped_conf(
         spark,
         {
-            "spark.sql.shuffle.partitions": str(n_partitions),
+            "spark.sql.shuffle.partitions": str(width),
             "spark.sql.adaptive.enabled": "false",
         },
     )

@@ -6,6 +6,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kaylee_spark.operators import dedup as D
+from kaylee_spark.operators.maintenance import CDC_UPSERT_ORACLE
 from kaylee_spark.queries import query
 from kaylee_spark.sources import load_table
 
@@ -356,10 +357,7 @@ def d06_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The engine's iterative-algorithm shape (driver loop, one join +
     min-agg per step, lineage truncated per iteration); the oracle is
-    the same computation as a DuckDB recursive CTE. The pipeline width
-    is pinned to 8 shuffle partitions, sized to the fixture pair graph
-    (labels are exact min-propagation, width-independent — see
-    connected_components).
+    the same computation as a DuckDB recursive CTE.
 
     Pipeline staging (SURVEY §4.2's second named optimizer candidate)
     is available as ``edges="auto"`` (lsh_planner.plan_dedup_edges:
@@ -380,7 +378,6 @@ def d06_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         n=3,
         threshold=0.5,
         edges="lsh",
-        shuffle_partitions=8,
     )
 
 
@@ -412,13 +409,7 @@ def d08_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return D.incremental_exact_dedup(increment, "text", "doc_id", seen)
 
 
-def _cdc_upsert_oracle() -> str:
-    from kaylee_spark.operators.maintenance import CDC_UPSERT_ORACLE
-
-    return CDC_UPSERT_ORACLE
-
-
-@query("d09_snapshot_upsert", oracle=_cdc_upsert_oracle(), extra=True)
+@query("d09_snapshot_upsert", oracle=CDC_UPSERT_ORACLE, extra=True)
 def d09_snapshot_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC-style snapshot merge: the shared change fixture
     (maintenance.cdc_change_batch — revised status/price, every third
@@ -712,7 +703,6 @@ def d14_leakage_free_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         eval_ppm=100_000,
         n=3,
         threshold=0.5,
-        shuffle_partitions=8,
     )
 
 
@@ -763,13 +753,9 @@ def d16_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in a long one where Jaccard (d03) stays arbitrarily low. Same
     inverted index, same Σdf² df-cap semantics mirrored in the
     oracle's HAVING filter; both directions scored from one symmetric
-    candidate aggregate. Pipeline width pinned to 8 shuffle
-    partitions, sized to the df-capped candidate-pair volume like
-    g01's/s09's pins (measured r15: 4.39 -> 1.85 s, and the unpinned
-    shape anti-scaled — 8 driver cores beat 32)."""
+    candidate aggregate."""
     return D.containment_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.7,
-        shuffle_partitions=8,
+        load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.7
     )
 
 

@@ -71,11 +71,8 @@ def _pagerank_oracle(iterations: int = 3) -> str:
 def g01_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """3-iteration PageRank over the bipartite customer->supplier
     demand graph (orders ⋈ lineitem, distinct trading pairs), in exact
-    bigint pico-rank arithmetic; returns every node's rank. The loop
-    width is pinned to 8 shuffle partitions — sized to the fixture
-    edge list, not the batch default; see pagerank's docstring for
-    the overhead math (exact integer ranks are width-independent)."""
-    return pagerank(customer_supplier_edges(spark, sf_dir), iterations=3, shuffle_partitions=8)
+    bigint pico-rank arithmetic; returns every node's rank."""
+    return pagerank(customer_supplier_edges(spark, sf_dir), iterations=3)
 
 
 def _hits_oracle(iterations: int = 3) -> str:
@@ -130,7 +127,7 @@ def g02_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact normalization, both roles ranked) is made by the second."""
     from kaylee_spark.operators.graph import hits
 
-    return hits(customer_supplier_edges(spark, sf_dir), iterations=2, shuffle_partitions=8)
+    return hits(customer_supplier_edges(spark, sf_dir), iterations=2)
 
 
 @query(
@@ -174,10 +171,9 @@ def g03_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     counting (operators/graph.triangle_stats): every out-degree is
     bounded by O(sqrt(m)) after orientation, so the wedge join costs
     O(m^1.5) instead of the celebrity-quadratic naive Σdeg²; wedge and
-    triangle counts come from ONE un-materialized left-join pass
-    (shuffle width pinned per the g01 iterative-floor note). One row:
-    nodes, edges, oriented wedges, triangles."""
-    return triangle_stats(coorder_part_edges(spark, sf_dir), shuffle_partitions=16)
+    triangle counts come from ONE un-materialized left-join pass. One
+    row: nodes, edges, oriented wedges, triangles."""
+    return triangle_stats(coorder_part_edges(spark, sf_dir))
 
 
 def _bfs_oracle(max_hops: int = 3) -> str:
@@ -249,7 +245,7 @@ def g04_bfs_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     seeds = _seed_suppliers(spark, sf_dir)
-    return bfs_distances(edges, seeds, max_hops=3, shuffle_partitions=8)
+    return bfs_distances(edges, seeds, max_hops=3)
 
 
 def _sssp_oracle(rounds: int = 3) -> str:
@@ -307,7 +303,7 @@ def g05_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     )
     seeds = _seed_suppliers(spark, sf_dir)
-    return weighted_sssp(edges, seeds, rounds=3, shuffle_partitions=8)
+    return weighted_sssp(edges, seeds, rounds=3)
 
 
 def _kcore_oracle(k: int = 3, rounds: int = 3) -> str:
@@ -365,7 +361,7 @@ def g06_kcore_peel(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return kcore_peel(edges, k=3, rounds=3, shuffle_partitions=8)
+    return kcore_peel(edges, k=3, rounds=3)
 
 
 def _lpa_oracle(rounds: int = 3) -> str:
@@ -417,7 +413,7 @@ def g07_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    return label_propagation(edges, rounds=3, shuffle_partitions=8)
+    return label_propagation(edges, rounds=3)
 
 
 def _cc_oracle(iterations: int = 3) -> str:
@@ -473,12 +469,11 @@ def g08_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     TRUE component decomposition). The oracle unrolls the identical
     min-label passes, so the hash gate pins the whole trajectory —
     integer MIN arithmetic is bit-exact in any engine
-    (operators/graph.py connected_components; shuffle width pinned to
-    8 per the g01 iterative-floor note)."""
+    (operators/graph.py connected_components)."""
     from kaylee_spark.operators.graph import connected_components
 
     edges = customer_supplier_edges(spark, sf_dir)
-    labeled = connected_components(edges, iterations=3, shuffle_partitions=8)
+    labeled = connected_components(edges, iterations=3)
     flag = labeled.select(
         F.sum(F.when(F.col("lbl") != F.col("prev_lbl"), 1).otherwise(0)).alias(
             "n_changed"

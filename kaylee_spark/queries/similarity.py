@@ -325,13 +325,12 @@ def s07_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     minus max-similarity-to-already-picked. The oracle unrolls the
     greedy loop into chained CTEs (the g01 iterative-oracle pattern
     applied to doubles: identical IEEE expressions + id tie-breaks
-    instead of fixed-point). Loop width pinned to 4 — every post-pool
-    frame holds <= pool x 5 rows."""
+    instead of fixed-point)."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("query_id"), "embedding"
     )
-    return S.mmr_topk(emb, queries, k=5, pool=20, lam=0.5, shuffle_partitions=4)
+    return S.mmr_topk(emb, queries, k=5, pool=20, lam=0.5)
 
 
 def _s08_oracle(k_per_bucket: int = 2, bucket_bits: int = 6) -> str:
@@ -449,15 +448,11 @@ def s09_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     plan as codegen literals, one cached scan + one k-row
     map-side-combined aggregate per iteration), lowest-cluster tie
     breaks. Returns every vector's final cluster and exact squared
-    lattice distance (operators/similarity.py kmeans_fit_assign).
-    Loop width pinned to 4 shuffle partitions, fixture-sized like
-    g01's."""
+    lattice distance (operators/similarity.py kmeans_fit_assign)."""
     from kaylee_spark.operators.similarity import kmeans_fit_assign
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return kmeans_fit_assign(
-        emb, dim=64, k=5, iterations=3, shuffle_partitions=4
-    )
+    return kmeans_fit_assign(emb, dim=64, k=5, iterations=3)
 
 
 def _pq_oracle(dim: int = 64, m: int = 4, k: int = 4, iterations: int = 2) -> str:
@@ -535,9 +530,7 @@ def s10_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaylee_spark.operators.similarity import pq_encode
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_encode(
-        emb, dim=64, m=4, k=4, iterations=2, shuffle_partitions=4
-    )
+    return pq_encode(emb, dim=64, m=4, k=4, iterations=2)
 
 
 def _pq_neardup_oracle(dim: int = 64, m: int = 4, k: int = 4, iterations: int = 2) -> str:
@@ -580,9 +573,7 @@ def d15_pq_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaylee_spark.operators.similarity import pq_neardup_pairs
 
     emb = load_table(spark, sf_dir, "embeddings")
-    return pq_neardup_pairs(
-        emb, dim=64, m=4, k=4, iterations=2, shuffle_partitions=4
-    )
+    return pq_neardup_pairs(emb, dim=64, m=4, k=4, iterations=2)
 
 
 @query(
@@ -650,7 +641,7 @@ def s12_semantic_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pointer-jumping, localCheckpoint per round); vectors never enter
     the loop (operators/similarity.py semantic_clusters)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return S.semantic_clusters(emb, max_hamming=3, dim=64, shuffle_partitions=8)
+    return S.semantic_clusters(emb, max_hamming=3, dim=64)
 
 
 @query(
@@ -750,6 +741,5 @@ def s14_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_adc_topk(
-        emb, dim=64, query_ids=[0, 1, 2, 3, 4], m=4, k=4, iterations=2,
-        topk=10, shuffle_partitions=4,
+        emb, dim=64, query_ids=[0, 1, 2, 3, 4], m=4, k=4, iterations=2, topk=10
     )

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from kaylee_spark.functions import dec_sum, oracle_dec_sum
+from kaylee_spark.operators.maintenance import CDC_UPSERT_ORACLE
 from kaylee_spark.operators.skew import scoped_conf
 from kaylee_spark.queries import query
 from kaylee_spark.sources import load_table
@@ -1495,13 +1496,7 @@ def e37_streamed_rate_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).localCheckpoint()
 
 
-def _cdc_upsert_oracle() -> str:
-    from kaylee_spark.operators.maintenance import CDC_UPSERT_ORACLE
-
-    return CDC_UPSERT_ORACLE
-
-
-@query("e38_streamed_upsert_snapshot", oracle=_cdc_upsert_oracle())
+@query("e38_streamed_upsert_snapshot", oracle=CDC_UPSERT_ORACLE)
 def e38_streamed_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ELEVENTH streaming drain and the first with an EXTERNAL
     batch sink: CDC change deliveries arrive as a key-sliced file

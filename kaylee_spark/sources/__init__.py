@@ -84,22 +84,6 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
         df.createOrReplaceTempView(name)
 
 
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    """Line-oriented text source (the reference's mmap line scan,
-    `/root/reference/example.py:15-20`, as a partitioned scan)."""
-    return spark.read.text(path)
-
-
-def read_csv(spark: SparkSession, path: str, **options) -> DataFrame:
-    opts = {"header": "true", "inferSchema": "true"}
-    opts.update(options)
-    return spark.read.options(**opts).csv(path)
-
-
-def read_json(spark: SparkSession, path: str, **options) -> DataFrame:
-    return spark.read.options(**options).json(path)
-
-
 def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
     """ORC columnar source (bundled with Spark; same pushdown/pruning
     machinery as parquet — PushedFilters/ReadSchema reach the scan).

@@ -19,5 +19,22 @@ def spark():
 
 
 @pytest.fixture(scope="session")
+def at_width(spark):
+    """``at_width(n)``: a new session on the shared context whose
+    ``spark.sql.shuffle.partitions`` is ``n``. A pinned loop over a
+    frame of unknown size (``createDataFrame``) runs at its session's
+    width, so a test compares two widths by building its input on two
+    such sessions. The operator's own pin holds the same conf key, so
+    a ``scoped_conf`` around the call on one session would raise."""
+
+    def make(n: int):
+        s = spark.newSession()
+        s.conf.set("spark.sql.shuffle.partitions", str(n))
+        return s
+
+    return make
+
+
+@pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE

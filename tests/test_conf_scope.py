@@ -3,7 +3,9 @@
 Restores on any exit, unsets keys that were unset, refuses to overlap
 another open scope on the same keys, and leaves no query's override
 behind on the session. A static guard keeps every other conf write
-out of the package and the tools.
+out of the package and the tools. pin_width derives an iterative
+loop's width from its input; a second guard keeps any caller from
+passing one.
 """
 
 from __future__ import annotations
@@ -13,18 +15,25 @@ import os
 
 import pytest
 
-from kaylee_spark.operators.skew import pin_width, scoped_conf
+from kaylee_spark.operators.skew import PIN_TASK_BYTES, pin_width, scoped_conf
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 PARTS = "spark.sql.shuffle.partitions"
 AQE = "spark.sql.adaptive.enabled"
 UNSET = "spark.kaylee.test.unset_key"
+# a range's size estimate is 8 bytes a row: just over two tasks' worth
+THREE_WIDE = 2 * PIN_TASK_BYTES // 8 + 1
+
+
+def _pinned_width(frame) -> int:
+    with pin_width(frame):
+        return int(frame.sparkSession.conf.get(PARTS))
 
 
 def test_scope_restores_after_exception(spark):
     before = (spark.conf.get(PARTS), spark.conf.get(AQE))
     with pytest.raises(ValueError):
-        with pin_width(spark, 3):
+        with pin_width(spark.range(THREE_WIDE)):
             assert spark.conf.get(PARTS) == "3"
             assert spark.conf.get(AQE) == "false"
             raise ValueError("boom")
@@ -41,7 +50,7 @@ def test_unset_key_is_unset_again(spark):
 
 def test_overlapping_scope_raises_and_changes_nothing(spark):
     before = spark.conf.getAll
-    with pin_width(spark, 3):
+    with pin_width(spark.range(THREE_WIDE)):
         inside = spark.conf.getAll
         with pytest.raises(RuntimeError, match=PARTS):
             with scoped_conf(spark, {UNSET: "on", PARTS: "5"}):
@@ -55,6 +64,38 @@ def test_overlapping_scope_raises_and_changes_nothing(spark):
     with scoped_conf(spark, {PARTS: "5"}):
         assert spark.conf.get(PARTS) == "5"
     assert spark.conf.getAll == before
+
+
+def test_pin_width_grows_with_input_bytes(spark, sf_dir):
+    small = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    big = spark.read.parquet(os.path.join(os.path.dirname(sf_dir), "sf0.1", "documents.parquet"))
+    assert int(spark.conf.get(PARTS)) >= 3
+    assert _pinned_width(small) < _pinned_width(big)
+    # a join is sized by its leaves, not by its product estimate
+    assert _pinned_width(small.join(small.select("doc_id"), "doc_id")) == _pinned_width(small)
+
+
+def test_pin_width_clamps_to_one_and_session_width(at_width):
+    s = at_width(2)
+    assert _pinned_width(s.range(0)) == 1
+    assert _pinned_width(s.range(THREE_WIDE)) == 2
+    assert _pinned_width(at_width(5).range(THREE_WIDE)) == 3
+    assert s.conf.get(PARTS) == "2"
+
+
+def test_unknown_size_leaf_gives_session_width(at_width):
+    s = at_width(5)
+    df = s.createDataFrame([(1, 2)], "a long, b long")
+    assert _pinned_width(df) == 5
+    assert _pinned_width(df.localCheckpoint()) == 5
+
+
+def test_pin_width_starts_no_job(spark, sf_dir):
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter("doc_id > 3")
+    tracker = spark.sparkContext.statusTracker()
+    before = sorted(tracker.getJobIdsForGroup())
+    _pinned_width(docs)
+    assert sorted(tracker.getJobIdsForGroup()) == before
 
 
 # one query per family whose conf override moved onto scoped_conf
@@ -120,20 +161,69 @@ def _conf_writes(path: str):
     return out
 
 
-def test_no_conf_write_outside_scoped_conf():
-    offenders = []
-    n_scoped = 0
+def _package_modules():
+    """(path relative to the repo, absolute path) of every module under
+    kaylee_spark/ and tools/."""
     for top in ("kaylee_spark", "tools"):
         for root, _dirs, files in os.walk(os.path.join(REPO, top)):
             for f in files:
-                if not f.endswith(".py"):
-                    continue
-                path = os.path.join(root, f)
-                rel = os.path.relpath(path, REPO)
-                for func, key, line in _conf_writes(path):
-                    if rel == "kaylee_spark/operators/skew.py" and func == "scoped_conf":
-                        n_scoped += 1
-                    elif (rel, func, key) not in ALLOWED_CONF_WRITES:
-                        offenders.append(f"{rel}:{line} in {func}()")
+                if f.endswith(".py"):
+                    path = os.path.join(root, f)
+                    yield os.path.relpath(path, REPO), path
+
+
+def test_no_conf_write_outside_scoped_conf():
+    offenders = []
+    n_scoped = 0
+    for rel, path in _package_modules():
+        for func, key, line in _conf_writes(path):
+            if rel == "kaylee_spark/operators/skew.py" and func == "scoped_conf":
+                n_scoped += 1
+            elif (rel, func, key) not in ALLOWED_CONF_WRITES:
+                offenders.append(f"{rel}:{line} in {func}()")
     assert n_scoped, "the guard no longer sees scoped_conf's own writes"
     assert not offenders, "conf writes outside scoped_conf: " + ", ".join(offenders)
+
+
+def _width_knobs(path: str):
+    """(what, line) for each ``shuffle_partitions`` parameter or keyword
+    argument in one module, and each ``pin_width`` call given an
+    integer literal. Strings (conf keys) are never matched."""
+    out = []
+    for node in ast.walk(ast.parse(open(path).read(), filename=path)):
+        if isinstance(node, ast.arg) and node.arg == "shuffle_partitions":
+            out.append(("shuffle_partitions parameter", node.lineno))
+        elif isinstance(node, ast.keyword) and node.arg == "shuffle_partitions":
+            out.append(("shuffle_partitions= argument", node.value.lineno))
+        elif isinstance(node, ast.Call) and (
+            getattr(node.func, "id", None) == "pin_width"
+            or getattr(node.func, "attr", None) == "pin_width"
+        ):
+            args = [*node.args, *(k.value for k in node.keywords)]
+            if any(isinstance(a, ast.Constant) and type(a.value) is int for a in args):
+                out.append(("pin_width with an integer literal", node.lineno))
+    return out
+
+
+def test_no_width_knob_or_literal_pin():
+    found = [
+        f"{rel}:{line} {what}"
+        for rel, path in _package_modules()
+        for what, line in _width_knobs(path)
+    ]
+    assert not found, "an iterative loop's width is derived, never passed: " + ", ".join(found)
+
+
+def test_width_guard_catches_each_form(tmp_path):
+    bad = tmp_path / "bad.py"
+    bad.write_text(
+        "def op(df, shuffle_partitions=None):\n"
+        "    with pin_width(df.sparkSession, 8):\n"
+        "        return op(df, shuffle_partitions=4)\n"
+        "conf = {'spark.sql.shuffle.partitions': '4'}\n"
+    )
+    assert sorted(what for what, _line in _width_knobs(str(bad))) == [
+        "pin_width with an integer literal",
+        "shuffle_partitions parameter",
+        "shuffle_partitions= argument",
+    ]

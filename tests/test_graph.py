@@ -56,7 +56,7 @@ def test_pagerank_partitioning_invariance(spark):
     assert sorted(map(tuple, a)) == sorted(map(tuple, b))
 
 
-def test_hits_two_node_symmetric_and_invariance(spark):
+def test_hits_two_node_symmetric_and_invariance(spark, at_width):
     """Symmetric bipartite 2x2 complete graph: both hubs tie at the
     max score, both authorities tie; results bit-identical at any
     shuffle width and partitioning (exact integer normalization)."""
@@ -66,8 +66,8 @@ def test_hits_two_node_symmetric_and_invariance(spark):
     out = {(r["id"], r["role"]): r["score_e6"] for r in hits(_edges(spark, pairs)).collect()}
     assert out[(1, "hub")] == out[(2, "hub")] == HITS_SCALE
     assert out[(10, "authority")] == out[(11, "authority")] == HITS_SCALE
-    a = sorted(map(tuple, hits(_edges(spark, pairs).repartition(1), shuffle_partitions=2).collect()))
-    b = sorted(map(tuple, hits(_edges(spark, pairs).repartition(16), shuffle_partitions=16).collect()))
+    a = sorted(map(tuple, hits(_edges(at_width(2), pairs).repartition(1)).collect()))
+    b = sorted(map(tuple, hits(_edges(at_width(16), pairs).repartition(16)).collect()))
     assert a == b
 
 
@@ -217,7 +217,7 @@ def test_sssp_prefers_cheap_multi_hop(spark):
     assert one[9] == 10 and two[9] == 5
 
 
-def test_sssp_early_exit_width_independence_and_contract(spark):
+def test_sssp_early_exit_width_independence_and_contract(spark, at_width):
     import pytest
 
     from kaylee_spark.operators.graph import weighted_sssp
@@ -227,10 +227,12 @@ def test_sssp_early_exit_width_independence_and_contract(spark):
     # rounds far beyond the diameter converge via the empty-improvement exit
     far = {r["id"]: r["dist"] for r in weighted_sssp(df, seeds, rounds=50).collect()}
     assert far == {0: 0, 1: 4, 2: 8}
+    s3 = at_width(3)
+    df3 = s3.createDataFrame([(0, 1, 4), (1, 2, 4)], "src long, dst long, w long")
     pinned = {
         r["id"]: r["dist"]
         for r in weighted_sssp(
-            df.repartition(5), seeds, rounds=50, shuffle_partitions=3
+            df3.repartition(5), s3.createDataFrame([(0,)], "id long"), rounds=50
         ).collect()
     }
     assert pinned == far
@@ -306,7 +308,7 @@ def test_kcore_matches_python_reference(spark):
         assert got == _ref_kcore(pairs, k, 3)
 
 
-def test_kcore_width_independence_and_contract(spark):
+def test_kcore_width_independence_and_contract(spark, at_width):
     import pytest
 
     from kaylee_spark.operators.graph import kcore_peel
@@ -316,7 +318,7 @@ def test_kcore_width_independence_and_contract(spark):
     base = {r["id"]: r["peel_round"] for r in kcore_peel(edges, k=2, rounds=3).collect()}
     pinned = {
         r["id"]: r["peel_round"]
-        for r in kcore_peel(edges.repartition(5), k=2, rounds=3, shuffle_partitions=3).collect()
+        for r in kcore_peel(_both_dirs(at_width(3), pairs).repartition(5), k=2, rounds=3).collect()
     }
     assert pinned == base == {0: 0, 1: 0, 2: 0, 3: 1}
     with pytest.raises(ValueError):

@@ -396,7 +396,7 @@ def test_kmeans_recovers_planted_clusters(spark):
     assert len({s.pop() for s in by_truth.values()}) == 3
 
 
-def test_kmeans_width_independent_and_contract(spark):
+def test_kmeans_width_independent_and_contract(spark, at_width):
     import pytest
 
     from kaylee_spark.operators.similarity import kmeans_fit_assign
@@ -410,7 +410,7 @@ def test_kmeans_width_independent_and_contract(spark):
     pinned = {
         (r["vec_id"], r["cluster"], r["dist_sq"])
         for r in kmeans_fit_assign(
-            df.repartition(9), dim=2, k=2, iterations=2, shuffle_partitions=3
+            at_width(3).createDataFrame(vecs, df.schema).repartition(9), dim=2, k=2, iterations=2
         ).collect()
     }
     assert base == pinned  # exact integers: partitioning is purely physical
@@ -506,7 +506,7 @@ def test_pq_m1_equals_kmeans(spark):
     assert pq == km
 
 
-def test_pq_width_independent_and_contract(spark):
+def test_pq_width_independent_and_contract(spark, at_width):
     import pytest
 
     from kaylee_spark.operators.similarity import pq_encode
@@ -520,7 +520,7 @@ def test_pq_width_independent_and_contract(spark):
     pinned = {
         tuple(r)
         for r in pq_encode(
-            df.repartition(7), dim=4, m=2, k=2, iterations=2, shuffle_partitions=3
+            at_width(3).createDataFrame(vecs, df.schema).repartition(7), dim=4, m=2, k=2, iterations=2
         ).collect()
     }
     assert base == pinned
@@ -642,7 +642,7 @@ def test_semantic_clusters_labels_every_vector(spark, sf_dir):
     from kaylee_spark.operators.similarity import semantic_clusters, sign_neardup_pairs
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = semantic_clusters(emb, max_hamming=3, dim=64, shuffle_partitions=4).cache()
+    out = semantic_clusters(emb, max_hamming=3, dim=64).cache()
     assert out.count() == emb.count()  # every vector labeled
     # cluster label is always the cluster's own minimum member id
     mins = out.groupBy("cluster").agg(F.min("vec_id").alias("lo"))

@@ -54,10 +54,9 @@ def main() -> None:
         spark.catalog.clearCache()
         t = {}
         t0 = time.perf_counter()
-        with pin_width(spark, 4):
-            v = kmeans_lattice(
-                load_table(spark, sf_dir, "embeddings"), dim
-            ).cache()
+        emb = load_table(spark, sf_dir, "embeddings")
+        with pin_width(emb):
+            v = kmeans_lattice(emb, dim).cache()
             seeds = v.orderBy("vec_id").limit(k).collect()
             t["lattice+seed"] = time.perf_counter() - t0
 
