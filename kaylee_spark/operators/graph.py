@@ -345,88 +345,84 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     action inside it, and the returned row is pure literals.
     """
     with pin_width(edges):
-        return _triangle_counts(edges)
-
-
-def _triangle_counts(edges: DataFrame) -> DataFrame:
-    # MATERIALIZE the cached loop inputs SEQUENTIALLY (cheap counts the
-    # function needs anyway) BEFORE the heavy wedge aggregate: a cached
-    # frame referenced from several branches of one action is raced by
-    # AQE's concurrent subtree scheduling — each concurrent stage finds
-    # the cache block missing and recomputes it (measured: the
-    # lineitem-pair edge derivation ran 3x inside g03's single .first()
-    # action). Counting edges/deg first populates each cache exactly
-    # once; every later stage then reads the block store.
-    edges = edges.select("u", "v").cache()
-    n_edges = edges.count()
-    deg = (
-        edges.select(F.col("u").alias("n"))
-        .unionAll(edges.select(F.col("v").alias("n")))
-        .groupBy("n")
-        .agg(F.count("*").alias("d"))
-        .cache()
-    )
-    n_nodes = deg.count()
-    du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
-    dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
-    fwd = (F.col("du") < F.col("dv")) | (
-        (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
-    )
-    oriented = (
-        edges.join(du, "u")
-        .join(dv, "v")
-        .select(
-            F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
-            F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
+        # MATERIALIZE the cached loop inputs SEQUENTIALLY (cheap counts the
+        # function needs anyway) BEFORE the heavy wedge aggregate: a cached
+        # frame referenced from several branches of one action is raced by
+        # AQE's concurrent subtree scheduling — each concurrent stage finds
+        # the cache block missing and recomputes it (measured: the
+        # lineitem-pair edge derivation ran 3x inside g03's single .first()
+        # action). Counting edges/deg first populates each cache exactly
+        # once; every later stage then reads the block store.
+        edges = edges.select("u", "v").cache()
+        n_edges = edges.count()
+        deg = (
+            edges.select(F.col("u").alias("n"))
+            .unionAll(edges.select(F.col("v").alias("n")))
+            .groupBy("n")
+            .agg(F.count("*").alias("d"))
+            .cache()
         )
-        .cache()
-    )
-    # materialize before the adjacency build and edge pass read it
-    oriented.count()
-    # EDGE-ITERATOR closure counting instead of wedge materialization:
-    # the previous form generated the full O(m^1.5) wedge stream (41M
-    # rows at sf0.1) through the join machinery and probed each wedge
-    # against the edge set — ~50-60 s of executor time in one stage.
-    # With out-adjacency arrays, n_triangles = Σ_{(u,v)∈oriented}
-    # |N+(u) ∩ N+(v)|: under the (degree, id) orientation every
-    # triangle a<b<c is counted exactly once, at its (a, b) edge
-    # (c ∈ N+(a) ∩ N+(b); the other two edges contribute nothing —
-    # N+(c) contains only higher nodes). The per-edge intersect costs
-    # d+(u) + d+(v) native array ops, the same O(m^1.5) total bound
-    # with no 41M-row intermediate, and the attach joins move the
-    # node-sized adjacency frame, never a wedge stream. The wedge
-    # count needs no wedges at all: n_wedges = Σ_v C(d+(v), 2), a
-    # droplet aggregate over the adjacency sizes. collect_list order
-    # is partition-dependent, but only set SIZES are consumed —
-    # counts stay a pure function of the graph, bit-identical to the
-    # oracle's wedge-join formulation (verified at all three scales).
-    adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nb")).cache()
-    # `or 0`: SUM over an empty frame is NULL — an empty/wedge-free
-    # graph must report 0, matching the old COUNT(*) semantics
-    n_wedges = adj.agg(
-        F.sum(F.expr("CAST(size(nb) AS BIGINT) * (size(nb) - 1) DIV 2"))
-    ).first()[0] or 0
-    n_tri = (
-        oriented.join(adj.select("src", F.col("nb").alias("nb_u")), "src")
-        .join(
-            adj.select(F.col("src").alias("dst"), F.col("nb").alias("nb_v")), "dst"
+        n_nodes = deg.count()
+        du = deg.select(F.col("n").alias("u"), F.col("d").alias("du"))
+        dv = deg.select(F.col("n").alias("v"), F.col("d").alias("dv"))
+        fwd = (F.col("du") < F.col("dv")) | (
+            (F.col("du") == F.col("dv")) & (F.col("u") < F.col("v"))
         )
-        .agg(F.sum(F.expr("CAST(size(array_intersect(nb_u, nb_v)) AS BIGINT)")))
-        .first()[0]
-        or 0
-    )
-    spark = edges.sparkSession
-    # the returned row is pure literals — nothing downstream depends
-    # on the caches, so release them (repeated registry runs in one
-    # session otherwise accumulate executor storage).
-    for c in (adj, oriented, deg, edges):
-        c.unpersist()
-    return spark.range(1).select(
-        F.lit(n_nodes).cast("bigint").alias("n_nodes"),
-        F.lit(n_edges).cast("bigint").alias("n_edges"),
-        F.lit(n_wedges).cast("bigint").alias("n_wedges"),
-        F.lit(n_tri).cast("bigint").alias("n_triangles"),
-    )
+        oriented = (
+            edges.join(du, "u")
+            .join(dv, "v")
+            .select(
+                F.when(fwd, F.col("u")).otherwise(F.col("v")).alias("src"),
+                F.when(fwd, F.col("v")).otherwise(F.col("u")).alias("dst"),
+            )
+            .cache()
+        )
+        # materialize before the adjacency build and edge pass read it
+        oriented.count()
+        # EDGE-ITERATOR closure counting instead of wedge materialization:
+        # the previous form generated the full O(m^1.5) wedge stream (41M
+        # rows at sf0.1) through the join machinery and probed each wedge
+        # against the edge set — ~50-60 s of executor time in one stage.
+        # With out-adjacency arrays, n_triangles = Σ_{(u,v)∈oriented}
+        # |N+(u) ∩ N+(v)|: under the (degree, id) orientation every
+        # triangle a<b<c is counted exactly once, at its (a, b) edge
+        # (c ∈ N+(a) ∩ N+(b); the other two edges contribute nothing —
+        # N+(c) contains only higher nodes). The per-edge intersect costs
+        # d+(u) + d+(v) native array ops, the same O(m^1.5) total bound
+        # with no 41M-row intermediate, and the attach joins move the
+        # node-sized adjacency frame, never a wedge stream. The wedge
+        # count needs no wedges at all: n_wedges = Σ_v C(d+(v), 2), a
+        # droplet aggregate over the adjacency sizes. collect_list order
+        # is partition-dependent, but only set SIZES are consumed —
+        # counts stay a pure function of the graph, bit-identical to the
+        # oracle's wedge-join formulation (verified at all three scales).
+        adj = oriented.groupBy("src").agg(F.collect_list("dst").alias("nb")).cache()
+        # `or 0`: SUM over an empty frame is NULL — an empty/wedge-free
+        # graph must report 0, matching the old COUNT(*) semantics
+        n_wedges = adj.agg(
+            F.sum(F.expr("CAST(size(nb) AS BIGINT) * (size(nb) - 1) DIV 2"))
+        ).first()[0] or 0
+        n_tri = (
+            oriented.join(adj.select("src", F.col("nb").alias("nb_u")), "src")
+            .join(
+                adj.select(F.col("src").alias("dst"), F.col("nb").alias("nb_v")), "dst"
+            )
+            .agg(F.sum(F.expr("CAST(size(array_intersect(nb_u, nb_v)) AS BIGINT)")))
+            .first()[0]
+            or 0
+        )
+        spark = edges.sparkSession
+        # the returned row is pure literals — nothing downstream depends
+        # on the caches, so release them (repeated registry runs in one
+        # session otherwise accumulate executor storage).
+        for c in (adj, oriented, deg, edges):
+            c.unpersist()
+        return spark.range(1).select(
+            F.lit(n_nodes).cast("bigint").alias("n_nodes"),
+            F.lit(n_edges).cast("bigint").alias("n_edges"),
+            F.lit(n_wedges).cast("bigint").alias("n_wedges"),
+            F.lit(n_tri).cast("bigint").alias("n_triangles"),
+        )
 
 
 def bfs_distances(
@@ -461,42 +457,38 @@ def bfs_distances(
     if max_hops < 0:
         raise ValueError(f"bfs_distances requires max_hops >= 0, got {max_hops}")
     with pin_width(edges):
-        out = _bfs_loop(edges, sources, max_hops).cache()
-        out.count()
-    return out
-
-
-def _bfs_loop(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
-    edges = edges.select("src", "dst").cache()
-    frontier = (
-        sources.select(F.col("id").cast("bigint").alias("id"))
-        .distinct()
-        .localCheckpoint()
-    )
-    if frontier.count() == 0:
-        raise ValueError("bfs_distances requires a non-empty source set")
-    reached = frontier.select("id", F.lit(0).cast("int").alias("dist"))
-    for k in range(1, max_hops + 1):
-        # localCheckpoint truncates the per-hop lineage: hop k's
-        # anti-join references the reached set (a union of k legs),
-        # so an uncheckpointed loop re-analyzes a growing plan every
-        # hop and re-executes the whole chain on deep graphs.
-        new = (
-            edges.join(frontier.withColumnRenamed("id", "src"), "src")
-            .select(F.col("dst").alias("id"))
+        edges = edges.select("src", "dst").cache()
+        frontier = (
+            sources.select(F.col("id").cast("bigint").alias("id"))
             .distinct()
-            .join(reached.select("id"), "id", "left_anti")
-            .select("id", F.lit(k).cast("int").alias("dist"))
             .localCheckpoint()
         )
-        if new.count() == 0:
-            break
-        reached = reached.unionByName(new)
-        frontier = new.select("id")
-    # Every level is materialized by its localCheckpoint, so the
-    # result no longer depends on the edge cache.
-    edges.unpersist()
-    return reached
+        if frontier.count() == 0:
+            raise ValueError("bfs_distances requires a non-empty source set")
+        reached = frontier.select("id", F.lit(0).cast("int").alias("dist"))
+        for k in range(1, max_hops + 1):
+            # localCheckpoint truncates the per-hop lineage: hop k's
+            # anti-join references the reached set (a union of k legs),
+            # so an uncheckpointed loop re-analyzes a growing plan every
+            # hop and re-executes the whole chain on deep graphs.
+            new = (
+                edges.join(frontier.withColumnRenamed("id", "src"), "src")
+                .select(F.col("dst").alias("id"))
+                .distinct()
+                .join(reached.select("id"), "id", "left_anti")
+                .select("id", F.lit(k).cast("int").alias("dist"))
+                .localCheckpoint()
+            )
+            if new.count() == 0:
+                break
+            reached = reached.unionByName(new)
+            frontier = new.select("id")
+        # Every level is materialized by its localCheckpoint, so the
+        # result no longer depends on the edge cache.
+        edges.unpersist()
+        out = reached.cache()
+        out.count()
+    return out
 
 
 def weighted_demand_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -557,47 +549,43 @@ def weighted_sssp(
     if rounds < 0:
         raise ValueError(f"weighted_sssp requires rounds >= 0, got {rounds}")
     with pin_width(edges):
-        out = _sssp_loop(edges, sources, rounds).cache()
+        edges = edges.select("src", "dst", F.col("w").cast("bigint").alias("w")).cache()
+        dist = (
+            sources.select(F.col("id").cast("bigint").alias("id"))
+            .distinct()
+            .select("id", F.lit(0).cast("bigint").alias("dist"))
+            .localCheckpoint()
+        )
+        if dist.count() == 0:
+            raise ValueError("weighted_sssp requires a non-empty source set")
+        improved = dist
+        for _ in range(rounds):
+            offers = (
+                edges.join(
+                    improved.select(F.col("id").alias("src"), "dist"), "src"
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
+            )
+            improved = (
+                offers.join(dist, "id", "left")
+                .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
+                .select("id", F.col("nd").alias("dist"))
+                .localCheckpoint()
+            )
+            if improved.count() == 0:
+                break
+            dist = (
+                dist.join(improved.select("id"), "id", "left_anti")
+                .unionByName(improved)
+                .localCheckpoint()
+            )
+        # The final distance map is localCheckpoint'ed (materialized), so
+        # it no longer depends on the edge cache.
+        edges.unpersist()
+        out = dist.cache()
         out.count()
     return out
-
-
-def _sssp_loop(edges: DataFrame, sources: DataFrame, rounds: int) -> DataFrame:
-    edges = edges.select("src", "dst", F.col("w").cast("bigint").alias("w")).cache()
-    dist = (
-        sources.select(F.col("id").cast("bigint").alias("id"))
-        .distinct()
-        .select("id", F.lit(0).cast("bigint").alias("dist"))
-        .localCheckpoint()
-    )
-    if dist.count() == 0:
-        raise ValueError("weighted_sssp requires a non-empty source set")
-    improved = dist
-    for _ in range(rounds):
-        offers = (
-            edges.join(
-                improved.select(F.col("id").alias("src"), "dist"), "src"
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.min(F.col("dist") + F.col("w")).alias("nd"))
-        )
-        improved = (
-            offers.join(dist, "id", "left")
-            .filter(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
-            .select("id", F.col("nd").alias("dist"))
-            .localCheckpoint()
-        )
-        if improved.count() == 0:
-            break
-        dist = (
-            dist.join(improved.select("id"), "id", "left_anti")
-            .unionByName(improved)
-            .localCheckpoint()
-        )
-    # The final distance map is localCheckpoint'ed (materialized), so
-    # it no longer depends on the edge cache.
-    edges.unpersist()
-    return dist
 
 
 def repeat_trading_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -662,41 +650,37 @@ def kcore_peel(
     if rounds < 1:
         raise ValueError(f"kcore_peel requires rounds >= 1, got {rounds}")
     with pin_width(edges):
-        out = _kcore_loop(edges, k, rounds).cache()
+        edges = edges.select("src", "dst").cache()
+        # both directions present => every node appears as a src
+        alive = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
+        peeled = None
+        for r in range(1, rounds + 1):
+            survivors = (
+                edges.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.count(F.lit(1)).alias("_deg"))
+                .filter(F.col("_deg") >= k)
+                .select("id")
+                .localCheckpoint()
+            )
+            removed = (
+                alive.join(survivors, "id", "left_anti")
+                .select("id", F.lit(r).cast("int").alias("peel_round"))
+                .localCheckpoint()
+            )
+            if removed.count() == 0:
+                break
+            peeled = removed if peeled is None else peeled.unionByName(removed)
+            alive = survivors
+        out = alive.select("id", F.lit(0).cast("int").alias("peel_round"))
+        if peeled is not None:
+            out = peeled.unionByName(out)
+        # every component frame is localCheckpoint'ed (materialized), so
+        # the result no longer depends on the edge cache.
+        edges.unpersist()
+        out = out.cache()
         out.count()
-    return out
-
-
-def _kcore_loop(edges: DataFrame, k: int, rounds: int) -> DataFrame:
-    edges = edges.select("src", "dst").cache()
-    # both directions present => every node appears as a src
-    alive = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
-    peeled = None
-    for r in range(1, rounds + 1):
-        survivors = (
-            edges.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.count(F.lit(1)).alias("_deg"))
-            .filter(F.col("_deg") >= k)
-            .select("id")
-            .localCheckpoint()
-        )
-        removed = (
-            alive.join(survivors, "id", "left_anti")
-            .select("id", F.lit(r).cast("int").alias("peel_round"))
-            .localCheckpoint()
-        )
-        if removed.count() == 0:
-            break
-        peeled = removed if peeled is None else peeled.unionByName(removed)
-        alive = survivors
-    out = alive.select("id", F.lit(0).cast("int").alias("peel_round"))
-    if peeled is not None:
-        out = peeled.unionByName(out)
-    # every component frame is localCheckpoint'ed (materialized), so
-    # the result no longer depends on the edge cache.
-    edges.unpersist()
     return out
 
 
@@ -731,46 +715,42 @@ def label_propagation(
     if rounds < 1:
         raise ValueError(f"label_propagation requires rounds >= 1, got {rounds}")
     with pin_width(edges):
-        out = _lpa_loop(edges, rounds).cache()
-        out.count()
-    return out
-
-
-def _lpa_loop(edges: DataFrame, rounds: int) -> DataFrame:
-    edges = edges.select("src", "dst").cache()
-    # both directions present => every node appears as a src
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .select("id", F.col("id").alias("label"))
-        .localCheckpoint()
-    )
-    w = Window.partitionBy("id").orderBy(F.desc("_c"), F.asc("label"))
-    for _ in range(rounds):
-        counts = (
-            edges.join(
-                labels.select(F.col("id").alias("dst"), "label"), "dst"
-            )
-            .groupBy(F.col("src").alias("id"), "label")
-            .agg(F.count(F.lit(1)).alias("_c"))
-        )
-        new = (
-            counts.withColumn("_rk", F.row_number().over(w))
-            .filter(F.col("_rk") == 1)
-            .select("id", "label")
+        edges = edges.select("src", "dst").cache()
+        # both directions present => every node appears as a src
+        labels = (
+            edges.select(F.col("src").alias("id"))
+            .distinct()
+            .select("id", F.col("id").alias("label"))
             .localCheckpoint()
         )
-        changed = (
-            new.alias("n")
-            .join(labels.alias("o"), "id")
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = new
-        if changed == 0:
-            break
-    edges.unpersist()
-    return labels.select("id", F.col("label").alias("community"))
+        w = Window.partitionBy("id").orderBy(F.desc("_c"), F.asc("label"))
+        for _ in range(rounds):
+            counts = (
+                edges.join(
+                    labels.select(F.col("id").alias("dst"), "label"), "dst"
+                )
+                .groupBy(F.col("src").alias("id"), "label")
+                .agg(F.count(F.lit(1)).alias("_c"))
+            )
+            new = (
+                counts.withColumn("_rk", F.row_number().over(w))
+                .filter(F.col("_rk") == 1)
+                .select("id", "label")
+                .localCheckpoint()
+            )
+            changed = (
+                new.alias("n")
+                .join(labels.alias("o"), "id")
+                .filter(F.col("n.label") != F.col("o.label"))
+                .count()
+            )
+            labels = new
+            if changed == 0:
+                break
+        edges.unpersist()
+        out = labels.select("id", F.col("label").alias("community")).cache()
+        out.count()
+    return out
 
 
 def connected_components(edges: DataFrame, iterations: int = 3) -> DataFrame:

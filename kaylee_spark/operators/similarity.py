@@ -658,76 +658,72 @@ def mmr_topk(
     # lineage is already materialized in-scope; the final select is
     # trivial under any caller conf
     with pin_width(corpus):
-        return _mmr_loop(corpus, queries, k, pool, lam, id_col, vec_col, query_id_col)
-
-
-def _mmr_loop(corpus, queries, k, pool, lam, id_col, vec_col, query_id_col) -> DataFrame:
-    cands = cosine_topk(
-        corpus, queries, k=pool, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col
-    )
-    ce = corpus.select(
-        F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
-    )
-    # localCheckpoint (eager) rather than cache: every loop step below
-    # references the previous step's frame THREE times (max-sim join,
-    # anti-join, union), so a lazy lineage grows 3^k plan copies — at
-    # k=5 that is an 81x plan blow-up that costs more to ANALYZE than
-    # to run, and re-invocation OOMs the driver on tree strings.
-    # Checkpointing truncates lineage to the materialized rows (pool x
-    # |queries| at most), keeping every step's plan constant-size.
-    cand_e = (
-        cands.select("query_id", "neighbor_id", F.col("cosine_sim").alias("rel"))
-        .join(ce, "neighbor_id")
-        .localCheckpoint()
-    )
-    a = cand_e.select("query_id", F.col("neighbor_id").alias("a"), F.col("cv").alias("va"))
-    b = cand_e.select("query_id", F.col("neighbor_id").alias("b"), F.col("cv").alias("vb"))
-    psim = (
-        a.join(b, "query_id")
-        .filter(F.col("a") != F.col("b"))
-        .withColumn("sim", cosine(F.col("va"), F.col("vb")))
-        .select("query_id", "a", "b", "sim")
-        .localCheckpoint()
-    )
-    rels = cand_e.select("query_id", "neighbor_id", "rel")
-    w = Window.partitionBy("query_id").orderBy(F.desc("mmr"), F.asc("neighbor_id"))
-    selected = (
-        rels.withColumn("mmr", F.lit(lam) * F.col("rel"))
-        .withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("query_id", "neighbor_id", F.lit(1).alias("rank"), "mmr")
-        .localCheckpoint()
-    )
-    for rank in range(2, k + 1):
-        maxsim = (
-            psim.join(
-                selected.select("query_id", F.col("neighbor_id").alias("b")),
-                ["query_id", "b"],
-            )
-            .groupBy("query_id", F.col("a").alias("neighbor_id"))
-            .agg(F.max("sim").alias("maxsim"))
+        cands = cosine_topk(
+            corpus, queries, k=pool, id_col=id_col, vec_col=vec_col, query_id_col=query_id_col
         )
-        nxt = (
-            rels.join(
-                selected.select("query_id", "neighbor_id"),
-                ["query_id", "neighbor_id"],
-                "left_anti",
-            )
-            .join(maxsim, ["query_id", "neighbor_id"])
-            .withColumn(
-                "mmr", F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.col("maxsim")
-            )
+        ce = corpus.select(
+            F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv")
+        )
+        # localCheckpoint (eager) rather than cache: every loop step below
+        # references the previous step's frame THREE times (max-sim join,
+        # anti-join, union), so a lazy lineage grows 3^k plan copies — at
+        # k=5 that is an 81x plan blow-up that costs more to ANALYZE than
+        # to run, and re-invocation OOMs the driver on tree strings.
+        # Checkpointing truncates lineage to the materialized rows (pool x
+        # |queries| at most), keeping every step's plan constant-size.
+        cand_e = (
+            cands.select("query_id", "neighbor_id", F.col("cosine_sim").alias("rel"))
+            .join(ce, "neighbor_id")
+            .localCheckpoint()
+        )
+        a = cand_e.select("query_id", F.col("neighbor_id").alias("a"), F.col("cv").alias("va"))
+        b = cand_e.select("query_id", F.col("neighbor_id").alias("b"), F.col("cv").alias("vb"))
+        psim = (
+            a.join(b, "query_id")
+            .filter(F.col("a") != F.col("b"))
+            .withColumn("sim", cosine(F.col("va"), F.col("vb")))
+            .select("query_id", "a", "b", "sim")
+            .localCheckpoint()
+        )
+        rels = cand_e.select("query_id", "neighbor_id", "rel")
+        w = Window.partitionBy("query_id").orderBy(F.desc("mmr"), F.asc("neighbor_id"))
+        selected = (
+            rels.withColumn("mmr", F.lit(lam) * F.col("rel"))
             .withColumn("r", F.row_number().over(w))
             .filter(F.col("r") == 1)
-            .select("query_id", "neighbor_id", F.lit(rank).alias("rank"), "mmr")
+            .select("query_id", "neighbor_id", F.lit(1).alias("rank"), "mmr")
+            .localCheckpoint()
         )
-        selected = selected.unionByName(nxt).localCheckpoint()
-    return selected.select(
-        "query_id",
-        F.col("neighbor_id").alias("vec_id"),
-        F.col("rank").cast("int").alias("rank"),
-        F.round("mmr", 6).cast("double").alias("mmr_score"),
-    )
+        for rank in range(2, k + 1):
+            maxsim = (
+                psim.join(
+                    selected.select("query_id", F.col("neighbor_id").alias("b")),
+                    ["query_id", "b"],
+                )
+                .groupBy("query_id", F.col("a").alias("neighbor_id"))
+                .agg(F.max("sim").alias("maxsim"))
+            )
+            nxt = (
+                rels.join(
+                    selected.select("query_id", "neighbor_id"),
+                    ["query_id", "neighbor_id"],
+                    "left_anti",
+                )
+                .join(maxsim, ["query_id", "neighbor_id"])
+                .withColumn(
+                    "mmr", F.lit(lam) * F.col("rel") - F.lit(1.0 - lam) * F.col("maxsim")
+                )
+                .withColumn("r", F.row_number().over(w))
+                .filter(F.col("r") == 1)
+                .select("query_id", "neighbor_id", F.lit(rank).alias("rank"), "mmr")
+            )
+            selected = selected.unionByName(nxt).localCheckpoint()
+        return selected.select(
+            "query_id",
+            F.col("neighbor_id").alias("vec_id"),
+            F.col("rank").cast("int").alias("rank"),
+            F.round("mmr", 6).cast("double").alias("mmr_score"),
+        )
 
 
 def bucket_balanced_sample(
@@ -956,25 +952,21 @@ def kmeans_fit_assign(
     if k < 2:
         raise ValueError(f"kmeans requires k >= 2, got {k}")
     with pin_width(df):
-        out = _kmeans_loop(df, dim, k, iterations, id_col, vec_col).cache()
+        v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
+        seeds = v.orderBy("vec_id").limit(k).collect()
+        if len(seeds) < k:
+            raise ValueError(f"kmeans with k={k} needs >= k vectors, got {len(seeds)}")
+        dims = list(range(dim))
+        centroids = [(j, [r[f"x{i}"] for i in dims]) for j, r in enumerate(seeds)]
+        for _ in range(iterations - 1):
+            centroids = _lloyd_update(v, centroids, dims)
+        dists = _kmeans_distances(v, centroids, dims)
+        cluster, mind = _kmeans_argmin(centroids)
+        out = dists.select(
+            "vec_id", cluster.alias("cluster"), mind.alias("dist_sq")
+        ).cache()
         out.count()
     return out
-
-
-def _kmeans_loop(df, dim, k, iterations, id_col, vec_col) -> DataFrame:
-    v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
-    seeds = v.orderBy("vec_id").limit(k).collect()
-    if len(seeds) < k:
-        raise ValueError(f"kmeans with k={k} needs >= k vectors, got {len(seeds)}")
-    dims = list(range(dim))
-    centroids = [(j, [r[f"x{i}"] for i in dims]) for j, r in enumerate(seeds)]
-    for _ in range(iterations - 1):
-        centroids = _lloyd_update(v, centroids, dims)
-    dists = _kmeans_distances(v, centroids, dims)
-    cluster, mind = _kmeans_argmin(centroids)
-    return dists.select(
-        "vec_id", cluster.alias("cluster"), mind.alias("dist_sq")
-    )
 
 
 def _pq_fit(v, dim: int, m: int, k: int, iterations: int):
@@ -1081,30 +1073,31 @@ def pq_neardup_pairs(
     and the pair joins run under ``pin_width(df)``.
     """
     with pin_width(df):
-        out = _pq_pairs(df, dim, m, k, iterations, id_col, vec_col).cache()
+        codes = _pq_codes(
+            df, dim, m, k, iterations, id_col, vec_col
+        ).select("vec_id", *[f"c{s}" for s in range(m)]).cache()
+        code_cols = [f"c{s}" for s in range(m)]
+        a = codes.select(F.col("vec_id").alias("id_a"), *code_cols)
+        b = codes.select(F.col("vec_id").alias("id_b"), *code_cols)
+        pairs = a.join(b, code_cols).filter(F.col("id_a") < F.col("id_b")).select(
+            "id_a", "id_b"
+        )
+        v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col)
+        va = v.select(
+            F.col("vec_id").alias("id_a"), *[F.col(f"x{i}").alias(f"ax{i}") for i in range(dim)]
+        )
+        vb = v.select(
+            F.col("vec_id").alias("id_b"), *[F.col(f"x{i}").alias(f"bx{i}") for i in range(dim)]
+        )
+        chain = " + ".join(f"(ax{i} - bx{i}) * (ax{i} - bx{i})" for i in range(dim))
+        out = (
+            pairs.join(va, "id_a")
+            .join(vb, "id_b")
+            .selectExpr("id_a", "id_b", f"CAST({chain} AS BIGINT) AS dist_sq")
+            .cache()
+        )
         out.count()
     return out
-
-
-def _pq_pairs(df, dim, m, k, iterations, id_col, vec_col) -> DataFrame:
-    codes = _pq_codes(
-        df, dim, m, k, iterations, id_col, vec_col
-    ).select("vec_id", *[f"c{s}" for s in range(m)]).cache()
-    code_cols = [f"c{s}" for s in range(m)]
-    a = codes.select(F.col("vec_id").alias("id_a"), *code_cols)
-    b = codes.select(F.col("vec_id").alias("id_b"), *code_cols)
-    pairs = a.join(b, code_cols).filter(F.col("id_a") < F.col("id_b")).select(
-        "id_a", "id_b"
-    )
-    v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col)
-    va = v.select(F.col("vec_id").alias("id_a"), *[F.col(f"x{i}").alias(f"ax{i}") for i in range(dim)])
-    vb = v.select(F.col("vec_id").alias("id_b"), *[F.col(f"x{i}").alias(f"bx{i}") for i in range(dim)])
-    chain = " + ".join(f"(ax{i} - bx{i}) * (ax{i} - bx{i})" for i in range(dim))
-    return (
-        pairs.join(va, "id_a")
-        .join(vb, "id_b")
-        .selectExpr("id_a", "id_b", f"CAST({chain} AS BIGINT) AS dist_sq")
-    )
 
 
 def knn_graph(
@@ -1300,62 +1293,58 @@ def pq_adc_topk(
     search runs under ``pin_width(df)``.
     """
     with pin_width(df):
-        out = _pq_adc_search(df, dim, query_ids, m, k, iterations, topk, id_col, vec_col).cache()
+        spark = df.sparkSession
+        v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
+        subspaces, books = _pq_fit(v, dim, m, k, iterations)
+        out = v
+        for s, (dims, cents) in enumerate(zip(subspaces, books)):
+            out = _kmeans_distances(out, cents, dims, tag=f"s{s}_")
+        code_cols = []
+        for s, cents in enumerate(books):
+            code, _ = _kmeans_argmin(cents, tag=f"s{s}_")
+            code_cols.append(code.alias(f"c{s}"))
+        codes = out.select(F.col("vec_id"), *code_cols)
+        qlat = {
+            r["vec_id"]: [r[f"x{i}"] for i in range(dim)]
+            for r in v.filter(F.col("vec_id").isin([int(q) for q in query_ids])).collect()
+        }
+        missing = [q for q in query_ids if q not in qlat]
+        if missing:
+            raise ValueError(f"query ids not in corpus: {missing}")
+        lut_rows = []
+        for qid, qx in qlat.items():
+            for s, (dims, cents) in enumerate(zip(subspaces, books)):
+                for code, cx in cents:
+                    d = sum((qx[i] - cx[j]) ** 2 for j, i in enumerate(dims))
+                    lut_rows.append((int(qid), s, int(code), int(d)))
+        # literal_frame, not createDataFrame: the model-sized lookup table
+        # must not plan a Python-worker scan (measured ~8.6 s of executor
+        # time per bench pass for these 320 rows on local[32])
+        from kaylee_spark.functions import literal_frame
+
+        lut = literal_frame(spark, lut_rows, "query_id long, s int, code int, d long")
+        melted = codes.select(
+            "vec_id",
+            F.explode(
+                F.array(*[
+                    F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("code"))
+                    for s in range(m)
+                ])
+            ).alias("sc"),
+        ).select("vec_id", F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
+        scored = (
+            melted.join(F.broadcast(lut), ["s", "code"])
+            .filter(F.col("vec_id") != F.col("query_id"))
+            .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
+            .agg(F.sum("d").alias("adc_dist"))
+        )
+        w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
+        res = (
+            scored.withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= topk)
+            .select("query_id", "neighbor_id", "adc_dist", "rank")
+        )
+        v.unpersist()
+        out = res.cache()
         out.count()
     return out
-
-
-def _pq_adc_search(df, dim, query_ids, m, k, iterations, topk, id_col, vec_col) -> DataFrame:
-    spark = df.sparkSession
-    v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col).cache()
-    subspaces, books = _pq_fit(v, dim, m, k, iterations)
-    out = v
-    for s, (dims, cents) in enumerate(zip(subspaces, books)):
-        out = _kmeans_distances(out, cents, dims, tag=f"s{s}_")
-    code_cols = []
-    for s, cents in enumerate(books):
-        code, _ = _kmeans_argmin(cents, tag=f"s{s}_")
-        code_cols.append(code.alias(f"c{s}"))
-    codes = out.select(F.col("vec_id"), *code_cols)
-    qlat = {
-        r["vec_id"]: [r[f"x{i}"] for i in range(dim)]
-        for r in v.filter(F.col("vec_id").isin([int(q) for q in query_ids])).collect()
-    }
-    missing = [q for q in query_ids if q not in qlat]
-    if missing:
-        raise ValueError(f"query ids not in corpus: {missing}")
-    lut_rows = []
-    for qid, qx in qlat.items():
-        for s, (dims, cents) in enumerate(zip(subspaces, books)):
-            for code, cx in cents:
-                d = sum((qx[i] - cx[j]) ** 2 for j, i in enumerate(dims))
-                lut_rows.append((int(qid), s, int(code), int(d)))
-    # literal_frame, not createDataFrame: the model-sized lookup table
-    # must not plan a Python-worker scan (measured ~8.6 s of executor
-    # time per bench pass for these 320 rows on local[32])
-    from kaylee_spark.functions import literal_frame
-
-    lut = literal_frame(spark, lut_rows, "query_id long, s int, code int, d long")
-    melted = codes.select(
-        "vec_id",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(s).alias("s"), F.col(f"c{s}").alias("code"))
-                for s in range(m)
-            ])
-        ).alias("sc"),
-    ).select("vec_id", F.col("sc.s").alias("s"), F.col("sc.code").alias("code"))
-    scored = (
-        melted.join(F.broadcast(lut), ["s", "code"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", F.col("vec_id").alias("neighbor_id"))
-        .agg(F.sum("d").alias("adc_dist"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-    res = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= topk)
-        .select("query_id", "neighbor_id", "adc_dist", "rank")
-    )
-    v.unpersist()
-    return res

@@ -232,29 +232,44 @@ def scoped_conf(spark, confs: dict):
                 del _OPEN_SCOPES[id(spark)]
 
 
-#: input bytes one task of a pinned loop is sized for. A loop's
-#: per-step frames are node- or model-sized, far smaller than its
-#: input, so the width follows the input at a fine grain: 256 KB gives
-#: every sf0.1 fixture loop at least 2 tasks (d16's 0.6 MB of
-#: documents get 3; one task cost d16 18% of its wall time), while the
-#: multi-MB graph inputs reach the session's width.
-PIN_TASK_BYTES = 256 * 1024
+#: bytes a task of a pinned loop reads. Every task of every loop step
+#: pays a fixed launch, shuffle-write and commit cost, so a task needs
+#: megabytes of data work to earn it. Measured on a 4-core host at
+#: sf0.1 with the session width at 16: the eight graph loops (2.9-7.3
+#: MB read) ran fastest at widths 2-4 and 22-54% slower at 16 than at
+#: 4; the dedup and embedding loops (under 1 MB read) ran within about
+#: 10% of each other at widths 1, 2 and 4.
+PIN_TASK_BYTES = 2 * 1024 * 1024
+
+
+def _read_bytes(plan) -> tuple[int, bool]:
+    """(bytes ``plan`` reads, whether it is join-free).
+
+    A join-free branch (a leaf and the unary nodes above it) counts
+    Spark's size estimate at its top, which scales a scan's file size
+    by the share of its columns kept. A node with several children
+    sums its branches: without CBO its own estimate is their product.
+    """
+    kids = plan.children()
+    parts = [_read_bytes(kids.apply(i)) for i in range(kids.size())]
+    if len(parts) <= 1 and all(chain for _, chain in parts):
+        return int(plan.stats().sizeInBytes()), True
+    return sum(b for b, _ in parts), False
 
 
 def pin_width(frame: DataFrame):
     """Scope for an iterative droplet loop over ``frame``: fix
     ``spark.sql.shuffle.partitions`` to a width derived from the
-    frame's input AND switch AQE off.
+    bytes the frame reads AND switch AQE off.
 
-    The width is ceil(input bytes / PIN_TASK_BYTES), clamped to [1,
-    the session's ``spark.sql.shuffle.partitions``]. Input bytes are
-    the sum of ``stats().sizeInBytes`` over the leaves of the frame's
-    optimized plan: the file sizes for a parquet scan, read without a
-    Spark job. The root's estimate is not used, since without CBO a
-    join's is the product of its inputs. A leaf with no real size (a
-    ``LogicalRDD`` from ``createDataFrame`` or a checkpoint) reports
-    ``Long.MaxValue`` or such a product, so it gives the session's
-    width.
+    The width is ceil(bytes read / PIN_TASK_BYTES), clamped to [1,
+    the session's ``spark.sql.shuffle.partitions``]. Bytes read come
+    from the frame's optimized plan with no Spark job: for each
+    join-free branch, Spark's size estimate at its top (a parquet
+    scan's file size, scaled by the columns the branch keeps; see
+    ``_read_bytes``). A leaf with no real size (a ``LogicalRDD`` from
+    ``createDataFrame`` or a checkpoint) reports ``Long.MaxValue``,
+    so it gives the session's width.
 
     A batch-tuned width pays near-empty partition commits on every
     step of a loop whose frames are node- or model-sized. Inside the
@@ -271,8 +286,7 @@ def pin_width(frame: DataFrame):
     must scope the override per query (cloned session / SQL hints).
     """
     spark = frame.sparkSession
-    leaves = frame._jdf.queryExecution().optimizedPlan().collectLeaves()
-    size = sum(int(leaves.apply(i).stats().sizeInBytes()) for i in range(leaves.size()))
+    size, _ = _read_bytes(frame._jdf.queryExecution().optimizedPlan())
     cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     width = max(1, min(cap, -(-size // PIN_TASK_BYTES)))
     return scoped_conf(

@@ -66,13 +66,25 @@ def test_overlapping_scope_raises_and_changes_nothing(spark):
     assert spark.conf.getAll == before
 
 
-def test_pin_width_grows_with_input_bytes(spark, sf_dir):
-    small = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    big = spark.read.parquet(os.path.join(os.path.dirname(sf_dir), "sf0.1", "documents.parquet"))
-    assert int(spark.conf.get(PARTS)) >= 3
-    assert _pinned_width(small) < _pinned_width(big)
-    # a join is sized by its leaves, not by its product estimate
-    assert _pinned_width(small.join(small.select("doc_id"), "doc_id")) == _pinned_width(small)
+def _lineitem(spark, sf_dir, sf):
+    return spark.read.parquet(os.path.join(os.path.dirname(sf_dir), sf, "lineitem.parquet"))
+
+
+def test_pin_width_grows_with_input_bytes(at_width, sf_dir):
+    s = at_width(32)
+    small = _lineitem(s, sf_dir, "sf0.001")
+    big = _lineitem(s, sf_dir, "sf0.1")
+    assert 32 > _pinned_width(big) > _pinned_width(small)
+
+
+def test_pin_width_counts_kept_columns_and_sums_join_branches(at_width, sf_dir):
+    big = _lineitem(at_width(32), sf_dir, "sf0.1")
+    keys = big.select("l_orderkey", "l_partkey")
+    # a branch reads only the columns it keeps
+    assert _pinned_width(keys) < _pinned_width(big)
+    # a join reads the sum of its branches, not its product estimate
+    joined = big.join(keys.withColumnRenamed("l_partkey", "p"), "l_orderkey")
+    assert _pinned_width(big) <= _pinned_width(joined) <= _pinned_width(big) + 1
 
 
 def test_pin_width_clamps_to_one_and_session_width(at_width):
@@ -91,10 +103,10 @@ def test_unknown_size_leaf_gives_session_width(at_width):
 
 
 def test_pin_width_starts_no_job(spark, sf_dir):
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").filter("doc_id > 3")
+    frame = _lineitem(spark, sf_dir, "sf0.1").filter("l_orderkey > 3")
     tracker = spark.sparkContext.statusTracker()
     before = sorted(tracker.getJobIdsForGroup())
-    _pinned_width(docs)
+    _pinned_width(frame)
     assert sorted(tracker.getJobIdsForGroup()) == before
 
 
