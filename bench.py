@@ -1,6 +1,14 @@
-"""Benchmark harness: runs every registry query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
-ONE JSON line: {"metric", "value", "unit", "queries", "sf"}.
+"""Benchmark harness: runs every driver-facing registry query at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value",
+"unit", "queries", "sf"}.
+
+Usage: python bench.py [query ...]
+
+Named queries (from either registry tier) replace the driver-facing
+set: only they are warmed and timed, by the same method — the A/B
+harness for one query family. $SPARK_GRAFT_BENCH_PASSES sets the pass
+count (default 3).
 
 Each query executes end-to-end into a noop sink (full plan runs, no
 collect/serialization overhead measured). Before timing, every query
@@ -28,7 +36,7 @@ import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from kaylee_spark.queries import clear_process_stores, load_all  # noqa: E402
+from kaylee_spark.queries import clear_process_stores, load_all, load_everything  # noqa: E402
 from kaylee_spark.session import get_spark  # noqa: E402
 from kaylee_spark.sources import load_table  # noqa: E402
 
@@ -37,10 +45,16 @@ def _warn(msg: str) -> None:
     print(f"[bench] {msg}", file=sys.stderr, flush=True)
 
 
-def main() -> None:
+def main(names: list[str]) -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     registry = load_all()
+    if names:
+        everything = load_everything()
+        unknown = sorted(set(names) - set(everything))
+        if unknown:
+            raise SystemExit(f"unknown queries: {', '.join(unknown)}")
+        registry = {name: everything[name] for name in names}
     spark = get_spark("kaylee_bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -169,4 +183,4 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    main(sys.argv[1:])

@@ -94,40 +94,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def dot_fixed(a: Column | str, b: Column | str, dim: int) -> Column:
-    """Dot product unrolled over a KNOWN dimension.
-
-    MEASURED SLOWER THAN ``dot`` IN THE HOT PATHS — kept for the
-    record, not used by the similarity operators. The original theory
-    (unrolling keeps the dot inside whole-stage codegen while HOFs
-    interpret) does not survive contact with the actual stages: the
-    verify stage already carries HOF nodes (the ``transform``
-    normalization), whole-stage codegen falls back for the stage
-    either way, and then the unrolled form is a ~127-node interpreted
-    expression tree per row while ``aggregate``'s fold is a tight
-    per-element loop. On 310k candidate pairs at dim=64 (sf0.1 s03):
-    unrolled ~7.2 s, 4x16-chunked ~7.3 s, HOF fold ~2.0 s — and the
-    two are bit-identical (same left-to-right association; verified
-    over all 124,750 sf0.01 pairs). Profile before unrolling.
-
-    Pass column NAMES when possible: the name form builds the unrolled
-    expression as one parsed SQL string (a single py4j round trip,
-    ~5 ms) instead of ~5*dim Column-operator calls (~2 s of driver time
-    at dim=64, measured). SQL ``+``/``*`` parse left-associative, so
-    both forms evaluate in the identical order. Name form assumes
-    array<double> inputs (all vector columns in this engine are —
-    normalized/cast once at scan)."""
-    from pyspark.sql import functions as F
-
-    if isinstance(a, str) and isinstance(b, str):
-        return F.expr(" + ".join(f"{a}[{i}] * {b}[{i}]" for i in range(dim)))
-    out = a[0].cast("double") * b[0].cast("double")
-    for i in range(1, dim):
-        out = out + a[i].cast("double") * b[i].cast("double")
-    return out
-
-
-
 def literal_frame(spark, rows, schema_ddl: str) -> DataFrame:
     """Droplet-sized driver-local rows as a DataFrame WITHOUT the
     Python-worker scan that ``spark.createDataFrame(list)`` plans.

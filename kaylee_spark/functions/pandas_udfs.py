@@ -39,13 +39,6 @@ def pd_token_count(text: pd.Series) -> pd.Series:
     return text.fillna("").map(lambda t: len(pat.findall(t)))
 
 
-@pandas_udf("double")
-def pd_median(values: pd.Series) -> float:
-    """Grouped-agg pandas_udf: interpolated median (numpy definition,
-    identical to DuckDB's MEDIAN on integer inputs)."""
-    return float(values.median())
-
-
 def lang_stats_pandas(docs: DataFrame) -> DataFrame:
     """Grouped-map applyInPandas: per-language corpus stats.
 

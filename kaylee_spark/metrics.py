@@ -17,7 +17,6 @@ free, where a separate validation query would double the scan bill.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation
-from pyspark.sql import functions as F
 
 
 def observed(df: DataFrame, name: str, *metrics: Column) -> tuple[DataFrame, Observation]:
@@ -29,24 +28,3 @@ def observed(df: DataFrame, name: str, *metrics: Column) -> tuple[DataFrame, Obs
     """
     obs = Observation(name)
     return df.observe(obs, *metrics), obs
-
-
-def row_count_observed(df: DataFrame, name: str = "rows") -> tuple[DataFrame, Observation]:
-    """The most common production check: row count + per-run freshness
-    riding along with whatever action the caller performs."""
-    return observed(df, name, F.count(F.lit(1)).alias("n_rows"))
-
-
-def null_rate_observed(
-    df: DataFrame, cols: list[str], name: str = "null_rates"
-) -> tuple[DataFrame, Observation]:
-    """Null-fraction per column, accumulated during the caller's action
-    — the data-quality gate pattern (alert when a upstream schema
-    change starts nulling a join key) without a second scan."""
-    metrics = [F.count(F.lit(1)).alias("n_rows")]
-    for c in cols:
-        metrics.append(
-            (F.sum(F.when(F.col(c).isNull(), 1).otherwise(0)) / F.count(F.lit(1)))
-            .alias(f"null_rate_{c}")
-        )
-    return observed(df, name, *metrics)

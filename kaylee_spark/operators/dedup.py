@@ -1308,9 +1308,9 @@ def write_lsh_index(
     for the exact-verify stage. This is the persisted form of the
     state incremental_neardup_pairs recomputes from the corpus frame —
     build it once per corpus snapshot, probe it every ingest without
-    touching corpus text again (the IVF-at-rest idea, ivf_write_index,
-    applied to text LSH). Banding defaults are planner-derived for
-    the probe ``threshold`` (resolve_banding); the RESOLVED config
+    touching corpus text again (the IVF-at-rest idea applied to text
+    LSH). Banding defaults are planner-derived for the probe
+    ``threshold`` (resolve_banding); the RESOLVED config
     (num_hashes, bands, shingle n) is persisted as index metadata at
     ``{path}/meta`` so probe_lsh_index reads the baked banding instead
     of re-deriving it from a possibly-different threshold.

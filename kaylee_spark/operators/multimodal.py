@@ -3,9 +3,10 @@
 Design (per the build brief): image/audio/video payloads are opaque
 ``binary`` columns with a typed metadata struct alongside. The Spark
 side — schema, partition sizing, Arrow batch shape, mapInPandas UDF
-signatures — is real and tested; the actual codec work is stubbed
-behind ``DECODERS`` because no image/audio libraries exist in this
-container (each stub is deterministic so tests are stable).
+signatures — is real and tested. PNG and PCM WAV are decoded in
+stdlib (png_decode_rgb, wav_decode_pcm16); compressed formats need
+codec libraries (PIL/ffmpeg) that the engine does not depend on, so
+for those only the container header is parsed (sniff_media_meta).
 
 At 100 TB: binary payloads dominate row size, so all transforms here
 are mapInPandas (streaming Arrow batches, constant memory) and
@@ -21,9 +22,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BinaryType,
-    FloatType,
     IntegerType,
     LongType,
     StringType,
@@ -52,35 +51,6 @@ MEDIA_SCHEMA = StructType(
         ),
     ]
 )
-
-FEATURE_SCHEMA = StructType(
-    [
-        StructField("media_id", LongType(), False),
-        StructField("modality", StringType(), False),
-        StructField("n_bytes", LongType(), True),
-        StructField("payload_sha", StringType(), True),
-        StructField("features", ArrayType(FloatType()), True),
-    ]
-)
-
-
-def real_decode(payload: bytes, modality: str):
-    """The true codec path. PNG (png_decode_rgb: chunk parse ->
-    zlib.decompress -> per-scanline unfilter) and PCM WAV
-    (wav_decode_pcm16: RIFF walk -> int16 samples) are decoded
-    END-TO-END in stdlib — no external library needed. Compressed
-    formats (JPEG/GIF/MP3/MP4...) genuinely require codec libraries
-    (PIL/ffmpeg/soundfile) absent in this container and stay
-    env-blocked; plumbing callers use the deterministic fake below."""
-    if payload is not None and payload[:8] == b"\x89PNG\r\n\x1a\n":
-        return png_decode_rgb(payload)
-    if payload is not None and payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
-        return wav_decode_pcm16(payload)
-    raise NotImplementedError(
-        "compressed media codecs (JPEG/GIF/MP3/video — PIL/ffmpeg) are "
-        "not installed in this environment; use fake_features "
-        "(deterministic stub) — swap here when libs exist"
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -242,18 +212,6 @@ def png_decode_rgb(payload: bytes):
     return int(w), int(h), out.reshape(h, w, bpp)
 
 
-def fake_features(payload: bytes, dim: int = 8) -> list[float]:
-    """Deterministic stand-in for decode->feature-extract: simple
-    byte-histogram moments. Pure-Python, stable across runs."""
-    if payload is None or len(payload) == 0:
-        return [0.0] * dim
-    buckets = [0] * dim
-    for i, byte in enumerate(payload):
-        buckets[byte % dim] += 1
-    n = len(payload)
-    return [round(b / n, 6) for b in buckets]
-
-
 def synth_media_from_documents(docs: DataFrame) -> DataFrame:
     """Build a multimodal table from the documents fixture: the text
     bytes stand in for an opaque payload. Exercises the real schema,
@@ -273,118 +231,14 @@ def synth_media_from_documents(docs: DataFrame) -> DataFrame:
     )
 
 
-#: filename-extension -> (modality, mime) for the file-ingest path
-_EXT_MODALITY = {
-    "jpg": ("image", "image/jpeg"), "jpeg": ("image", "image/jpeg"),
-    "png": ("image", "image/png"), "gif": ("image", "image/gif"),
-    "wav": ("audio", "audio/wav"), "mp3": ("audio", "audio/mpeg"),
-    "flac": ("audio", "audio/flac"),
-    "mp4": ("video", "video/mp4"), "mkv": ("video", "video/x-matroska"),
-    "webm": ("video", "video/webm"),
-}
-
-
-def media_from_files(spark, path: str, glob: str | None = None, recursive: bool = False) -> DataFrame:
-    """REAL ingest path for a multimodal corpus: a directory of media
-    files becomes the engine's media schema (media_id, modality,
-    payload, meta) via the binaryFile source — one row per file, glob
-    filtered at listing time, payload never decoded until an operator
-    asks. Modality/mime derive from the extension; width/height/
-    duration stay null until a (codec-dependent) probe fills them.
-    media_id is xxhash64(path) — stable across re-listing, and joins
-    as an 8-byte key instead of the path string.
-    """
-    from kaylee_spark.sources import read_binary_files
-
-    files = read_binary_files(spark, path, glob=glob, recursive=recursive)
-    ext = F.lower(F.element_at(F.split(F.col("path"), "\\."), -1))
-    modality = ext
-    mime = ext
-    for e, (mod, mm) in _EXT_MODALITY.items():
-        modality = F.when(ext == e, mod).otherwise(modality)
-        mime = F.when(ext == e, mm).otherwise(mime)
-    return files.select(
-        F.xxhash64("path").alias("media_id"),
-        modality.alias("modality"),
-        F.col("content").alias("payload"),
-        F.struct(
-            mime.alias("mime"),
-            F.lit(None).cast("int").alias("width"),
-            F.lit(None).cast("int").alias("height"),
-            F.lit(None).cast("long").alias("duration_ms"),
-            F.col("length").cast("long").alias("n_bytes"),
-        ).alias("meta"),
-    )
-
-
-def extract_features(media: DataFrame, dim: int = 8) -> DataFrame:
-    """Decode + feature-extract over Arrow batches (mapInPandas).
-
-    The iterator-of-batches shape is the scale contract: constant
-    memory regardless of partition size, payloads never concatenated.
-    """
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib
-
-        for pdf in batches:
-            out = pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "modality": pdf["modality"],
-                    "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-                    "payload_sha": [
-                        hashlib.sha256(p).hexdigest() if p is not None else None for p in pdf["payload"]
-                    ],
-                    "features": [fake_features(p, dim) for p in pdf["payload"]],
-                }
-            )
-            yield out
-
-    return media.mapInPandas(process, schema=FEATURE_SCHEMA)
-
-
-def resize_stub(media: DataFrame, width: int, height: int) -> DataFrame:
-    """Image resize plumbing: passes payload through the mapInPandas
-    path and rewrites metadata; actual pixel work is the stubbed codec."""
-
-    def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            meta = pd.DataFrame(
-                {
-                    "mime": pdf["meta"].map(lambda m: m["mime"] if m else None),
-                    "width": width,
-                    "height": height,
-                    "duration_ms": pdf["meta"].map(lambda m: m["duration_ms"] if m else None),
-                    "n_bytes": pdf["meta"].map(lambda m: m["n_bytes"] if m else None),
-                }
-            )
-            pdf = pdf.copy()
-            pdf["meta"] = meta.to_dict("records")
-            yield pdf
-
-    return media.mapInPandas(process, schema=MEDIA_SCHEMA)
-
-
-def frame_sample_stub(media: DataFrame, every_ms: int = 1000) -> DataFrame:
-    """Video frame-sampling plumbing: emits one row per sampled frame
-    index (payload decode stubbed; frame count derived from metadata)."""
-    n_frames = F.greatest((F.coalesce(F.col("meta.duration_ms"), F.lit(0)) / every_ms).cast("int"), F.lit(1))
-    return (
-        media.filter(F.col("modality") == "video")
-        .withColumn("frame_idx", F.explode(F.sequence(F.lit(0), n_frames - 1)))
-        .select("media_id", "frame_idx", F.col("payload").alias("frame_payload_stub"))
-    )
-
-
 def sniff_media_meta(payload: bytes | None):
     """REAL container-header parsing — pure stdlib ``struct``, no
     codec libraries: returns (mime, width, height, duration_ms), all
     None when the payload matches no known magic. Full pixel decode
-    stays env-blocked (real_decode above), but dimensions/duration
-    live in the container HEADER, and at 100 TB header-probing is the
-    cheap first pass that routes/filters media before any expensive
-    decode (drop sub-thumbnail images, cap durations) — reading ~64
+    of compressed formats needs codec libraries (PIL/ffmpeg), but
+    dimensions/duration live in the container HEADER, and at 100 TB
+    header-probing is the cheap first pass that routes/filters media
+    before any expensive decode (drop sub-thumbnail images, cap durations) — reading ~64
     bytes per multi-MB payload.
 
     Formats: PNG (IHDR), GIF (logical screen descriptor), JPEG (SOF
@@ -430,7 +284,7 @@ def probe_media(media: DataFrame) -> DataFrame:
     (sniff_media_meta) over Arrow batches: mime from magic bytes (more
     trustworthy than the ingest extension), dimensions/duration where
     the format carries them, n_bytes always. Same constant-memory
-    mapInPandas shape as extract_features; unknown payloads keep their
+    mapInPandas shape as the other batch operators here; unknown payloads keep their
     ingest meta untouched except n_bytes."""
 
     def process(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -688,7 +542,7 @@ def wav_decode_pcm16(payload: bytes):
     sample array. Returns (sample_rate, numpy int16 array).
 
     Compressed audio (MP3/FLAC/AAC) genuinely needs external codecs
-    and stays env-blocked in real_decode."""
+    (ffmpeg/soundfile) that the engine does not depend on."""
     import struct
 
     import numpy as np

@@ -29,17 +29,6 @@ def _hash_bucket(key: Column | str, seed: int) -> Column:
     return F.pmod(F.xxhash64(c, F.lit(seed)), F.lit(_BUCKETS))
 
 
-def deterministic_sample(df: DataFrame, key: str, fraction: float, seed: int = 42) -> DataFrame:
-    """Keep ~`fraction` of rows, chosen by seeded hash of `key`.
-
-    Reproducible: membership depends only on (key value, seed), never
-    on partitioning, task retries, or row order.
-    """
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError("fraction must be in [0, 1]")
-    return df.filter(_hash_bucket(key, seed) < int(fraction * _BUCKETS))
-
-
 def stratified_sample(
     df: DataFrame, key: str, strata_col: str, fractions: dict, seed: int = 42
 ) -> DataFrame:

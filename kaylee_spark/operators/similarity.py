@@ -313,55 +313,6 @@ def ivf_topk(
     return _rerank_topk(cands, q, assigned.select("neighbor_id", "cv"), k, dim, parity_rerank)
 
 
-def ivf_write_index(
-    corpus: DataFrame,
-    path: str,
-    n_centroids: int = 16,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-    max_iter: int = 5,
-) -> list[tuple[int, list[float]]]:
-    """Materialize the IVF index: assign every corpus vector to its
-    inverted list and write parquet PARTITIONED BY list_id.
-
-    This is the 100 TB layout the in-memory ivf_topk simulates: with
-    one directory per list, a query that probes p of k lists reads only
-    p/k of the FILES — partition pruning happens in the file index
-    before any IO, which is the whole point of IVF at rest. Returns the
-    centroids (list_id, vector) for the query-side probe ranking;
-    persist them next to the index in any real deployment.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(F.col(vec_col)).alias("cv"))
-    featured = c.withColumn("features", array_to_vector("cv"))
-    model = KMeans(
-        k=n_centroids, seed=seed, maxIter=max_iter, initMode="random",
-        featuresCol="features", predictionCol="list_id",
-    ).fit(featured)
-    (
-        model.transform(featured)
-        .select("neighbor_id", "cv", "list_id")
-        .write.mode("overwrite")
-        .partitionBy("list_id")
-        .parquet(path)
-    )
-    return [(l, [float(x) for x in ctr]) for l, ctr in enumerate(model.clusterCenters())]
-
-
-def ivf_read_lists(spark, path: str, list_ids: list[int]) -> DataFrame:
-    """Read only the probed inverted lists from a written IVF index.
-
-    The `list_id IN (...)` predicate is a partition filter — Spark's
-    file index prunes the unprobed directories before planning any
-    scan task (assert `PartitionFilters` in `.explain`; tested)."""
-    df = spark.read.parquet(path)
-    return df.filter(F.col("list_id").isin(list_ids))
-
-
 def embedding_neardup_pairs(
     corpus: DataFrame,
     threshold: float = 0.95,

@@ -138,17 +138,6 @@ def token_count(text_col="text") -> Column:
     return F.size(tokens(text_col)).cast("bigint")
 
 
-def bpe_ish_token_count(text_col="text") -> Column:
-    """Sub-word-ish token count: alpha runs chunk into <=4-char pieces,
-    digits and punctuation count one piece each (a cheap proxy for BPE
-    token budgeting at corpus scale). regexp_extract_all counts the
-    pieces directly -- no separator char that real text could collide
-    with."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    pieces = F.regexp_extract_all(c, F.lit(r"([a-zA-Z]{1,4}|[0-9]|[^a-zA-Z0-9\s])"), 1)
-    return F.size(pieces).cast("bigint")
-
-
 def stopword_ratio(text_col="text", stopwords: list[str] | None = None) -> Column:
     """Fraction of tokens that are stopwords — integer counts divided
     once, so bit-identical across engines."""
@@ -158,28 +147,10 @@ def stopword_ratio(text_col="text", stopwords: list[str] | None = None) -> Colum
     return (n_stop / F.greatest(F.size(toks), F.lit(1))).cast("double")
 
 
-def punct_ratio(text_col="text") -> Column:
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
-    n_punct = F.length(c) - F.length(F.regexp_replace(c, r"[^\w\s]", ""))
-    return (n_punct / F.greatest(F.length(c), F.lit(1))).cast("double")
-
-
 def mean_token_len(text_col="text") -> Column:
     toks = tokens(text_col)
     total = F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t))
     return (total / F.greatest(F.size(toks), F.lit(1))).cast("double")
-
-
-def quality_score(text_col="text") -> Column:
-    """Composite quality score in [0,1]: rewards stopword presence and
-    sane token lengths, penalizes punctuation soup. Weights are fixed
-    constants -> deterministic double arithmetic."""
-    sw = stopword_ratio(text_col)
-    pr = punct_ratio(text_col)
-    mtl = mean_token_len(text_col)
-    len_ok = F.when((mtl >= 2.0) & (mtl <= 12.0), F.lit(1.0)).otherwise(F.lit(0.0))
-    score = F.lit(0.4) * F.least(sw * 4, F.lit(1.0)) + F.lit(0.4) * len_ok + F.lit(0.2) * (F.lit(1.0) - F.least(pr * 5, F.lit(1.0)))
-    return score.cast("double")
 
 
 def lang_id(text_col="text") -> Column:
@@ -230,22 +201,6 @@ def fingerprint_portable(text_col="text", modulus: int = (1 << 31) - 1, base: in
         F.lit(0).cast("long"),
         lambda acc, t: (acc * base + tok_h(t)) % F.lit(modulus),
     ).cast("long")
-
-
-def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Attach the full analysis column set to a document DataFrame."""
-    return df.withColumns(
-        {
-            "n_tokens": token_count(text_col),
-            "n_tokens_bpe": bpe_ish_token_count(text_col),
-            "stopword_ratio": stopword_ratio(text_col),
-            "punct_ratio": punct_ratio(text_col),
-            "mean_token_len": mean_token_len(text_col),
-            "quality": quality_score(text_col),
-            "lang_pred": lang_id(text_col),
-            "fingerprint": fingerprint(text_col),
-        }
-    )
 
 
 # ---------------------------------------------------------------------------

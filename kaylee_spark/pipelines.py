@@ -87,25 +87,6 @@ def curate(
     return CurationResult(train=train, eval=ev, rejected=rejected)
 
 
-def prepare_training_corpus(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    chunk_tokens: int = 128,
-    overlap: int = 16,
-) -> DataFrame:
-    """Post-curation release prep: PII scrub, then context-window
-    chunking — the last two steps before tokenization. Runs AFTER
-    dedup on purpose: redaction rewrites text, and deduping the
-    redacted form would merge documents that differ only inside their
-    PII; chunking last keeps dedup/clustering at document granularity.
-    Both stages are row-local (scan-speed), so this adds no shuffle to
-    the ladder. Output: (doc, chunk_idx, chunk_text, n_tokens).
-    """
-    scrubbed = docs.withColumn(text_col, T.redact_pii(text_col))
-    return T.chunk_documents(scrubbed, id_col, text_col, chunk_tokens, overlap)
-
-
 def pretraining_mix(
     docs: DataFrame,
     budgets: dict[str, int],

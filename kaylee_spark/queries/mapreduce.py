@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from kaylee_spark.core.mapreduce import MapReduceJob
 from kaylee_spark.operators.skew import scoped_conf
 from kaylee_spark.queries import query
+from kaylee_spark.queries.streaming import DRAIN_WIDTH
 from kaylee_spark.sources import load_table
 
 _WORDS_ORACLE = """
@@ -155,8 +156,8 @@ def m05_stream_datafn_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaylee_spark.sources.pydatasource import register
 
     register(spark)
-    # 8 state keys total — see _drain_staged_stream's sizing note
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": "4"}):
+    # 8 state keys total — see DRAIN_WIDTH
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": DRAIN_WIDTH}):
         # 4 micro-batches over the same 8000-row domain: enough batches
         # to exercise real offset advancement (the incremental contract
         # m05 exists to prove), without paying 8x the fixed per-batch

@@ -53,37 +53,22 @@ def _ntz(col: str):
     ).alias(col)
 
 
-#: how many state keys one drain state-store partition should carry —
-#: the single definition site for every bounded drain's shuffle width
-#: (VERDICT r14 item 7: six scattered "4" literals meant a fixture
-#: with higher key cardinality would silently underparallelize state).
-_DRAIN_KEYS_PER_PARTITION = 32
-
-
-def _drain_width(approx_keys: int = 128) -> str:
-    """State/shuffle width for a bounded streaming drain.
-
-    A stateful operator creates (and COMMITS, every micro-batch) one
-    state-store partition per ``spark.sql.shuffle.partitions``, so the
-    width must track state KEY CARDINALITY — a property of the query,
-    not of the cluster. The demo drains keep ~dozens-to-hundreds of
-    keys (hour-windows × event types, per-user sessions, register
-    groups): at ~32 keys per partition they land on width 4, the value
-    every r14 per-drain A/B converged on (8 paid pure commit overhead,
-    2 was inside noise of 4). A deployment with millions of session
-    keys passes its own estimate and scales the width instead of
-    inheriting a demo constant. Returns str for conf.set.
-    """
-    import math
-
-    return str(max(1, math.ceil(approx_keys / _DRAIN_KEYS_PER_PARTITION)))
+#: shuffle (= state-store) width of every bounded streaming drain. A
+#: stateful operator creates and COMMITS one state-store partition per
+#: shuffle partition every micro-batch, and these drains hold only tens
+#: to hundreds of keys, so a wide drain pays commits for nothing. r14's
+#: per-drain A/B settled on 4 (8 paid pure commit overhead), and e39's
+#: interleaved solo A/B at sf0.1 (min of 4) read width 8 = 4.99 s,
+#: 4 = 4.28 s, 2 = 4.06 s: 2's edge is inside run noise, and 4 keeps
+#: the state tasks parallel.
+DRAIN_WIDTH = "4"
 
 
 def _drain_confs() -> dict[str, str]:
     """The UTC + drain-width override the event-time drains run under."""
     return {
         "spark.sql.session.timeZone": "UTC",
-        "spark.sql.shuffle.partitions": _drain_width(),
+        "spark.sql.shuffle.partitions": DRAIN_WIDTH,
     }
 
 
@@ -811,10 +796,10 @@ def e18_streamed_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropDuplicates over (user_id, event_type) -> availableNow drain.
     The dedup STATE STORE (not a batch twin) produces this row;
     key-only projection makes the emitted set exactly batch DISTINCT
-    regardless of arrival order, so the SQL oracle is exact. The
-    watermark-bounded variant (dropDuplicatesWithinWatermark, e05's
-    real twin) stays pytest-verified — its eviction timing is
-    engine-internal and has no closed-form oracle."""
+    regardless of arrival order, so the SQL oracle is exact. A
+    watermark-bounded variant (dropDuplicatesWithinWatermark) has no
+    closed-form oracle — its eviction timing is engine-internal — so
+    the engine does not ship one."""
     drained = _drain_staged_stream(
         spark,
         sf_dir,
@@ -1535,7 +1520,7 @@ def e38_streamed_upsert_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files whose write/read commits dominate the drain. The returned
     # frame is a parquet read of the final version — independent of
     # the conf the scope restores.
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": _drain_width()}):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": DRAIN_WIDTH}):
         return ST.streamed_upsert_snapshot(
             spark,
             base,
@@ -1595,15 +1580,10 @@ def e39_streamed_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream-stream trigger is paid 4x instead of 6x — the e36/e35
     # amortization dial applied here (measured 8.1 s -> ~5 s at sf0.1)
     staged = ST.stage_events_with_flush(spark, sf_dir, n_files=2)
-    # 4 sequential micro-batches x join-state tasks: size the state
-    # shuffle by key cardinality (a few hundred users), not the batch
-    # default — see _drain_staged_stream's sizing note. 4, matching
-    # every other drain: a symmetric-hash outer join commits FOUR
-    # state stores per partition per side per trigger, so the pinned
-    # width multiplies straight into commit machinery (interleaved
-    # solo A/B at sf0.1, min of 4: width 8 = 4.99 s, 4 = 4.28 s,
-    # 2 = 4.06 s — 2's edge over 4 is inside run noise, 4 keeps the
-    # state tasks parallel over ~100 keys each).
+    # 4 sequential micro-batches x join-state tasks at DRAIN_WIDTH (its
+    # A/B was measured on this drain): a symmetric-hash outer join
+    # commits FOUR state stores per partition per side per trigger, so
+    # the width multiplies straight into commit machinery.
     with scoped_conf(spark, _drain_confs()):
         # one file per trigger: the two sentinels MUST land in separate
         # batches for the tail flush (see stage_events_with_flush).
@@ -2096,7 +2076,7 @@ def e45_streamed_view_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     deltas.repartition(4).write.mode("overwrite").parquet(staged)
 
-    with scoped_conf(spark, {"spark.sql.shuffle.partitions": _drain_width()}):
+    with scoped_conf(spark, {"spark.sql.shuffle.partitions": DRAIN_WIDTH}):
         stream = (
             spark.readStream.schema(deltas.schema)
             .option("maxFilesPerTrigger", 2)

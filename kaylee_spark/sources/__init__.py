@@ -4,8 +4,7 @@ The reference's only source is a lazily mmap-scanned local text file
 (`/root/reference/example.py:8-20`); this module generalizes that to
 partitioned columnar scans: every fixture table is a parquet file and
 loads through ``spark.read.parquet`` so Catalyst gets predicate
-pushdown + column pruning for free. CSV/JSON/text loaders are exposed
-for parity with generic sources.
+pushdown + column pruning for free.
 """
 
 from __future__ import annotations
@@ -82,65 +81,3 @@ def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register all fixture tables as temp views for spark.sql use."""
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)
-
-
-def read_orc(spark: SparkSession, path: str, **options) -> DataFrame:
-    """ORC columnar source (bundled with Spark; same pushdown/pruning
-    machinery as parquet — PushedFilters/ReadSchema reach the scan).
-    The interchange format when upstream lives in a Hive/ORC world."""
-    return spark.read.options(**options).orc(path)
-
-
-def read_xml(spark: SparkSession, path: str, row_tag: str = "row", **options) -> DataFrame:
-    """XML source — NATIVE in Spark 4 (the former spark-xml package
-    moved into core; probed working in this build, unlike avro whose
-    external module is not deployed — docs/COVERAGE.md §5). ``rowTag``
-    names the repeating element that becomes a row; schema inference
-    or an explicit ``schema`` option work like the JSON reader. The
-    interchange format when upstream is SOAP/feeds/config dumps."""
-    return spark.read.option("rowTag", row_tag).options(**options).format("xml").load(path)
-
-
-def read_binary_files(
-    spark: SparkSession, path: str, glob: str | None = None, recursive: bool = False
-) -> DataFrame:
-    """Raw-file source: one row per file with (path, modificationTime,
-    length, content binary) — the INGEST path for multimodal corpora
-    (image/audio/video files on a store become a binary column + typed
-    metadata, then flow through operators/multimodal.py's mapInPandas
-    plumbing). ``glob`` filters by filename (e.g. "*.jpg") at LISTING
-    time, before any read. At 100 TB pair with
-    spark.sql.files.maxPartitionBytes so many small files coalesce
-    into sane tasks rather than one task per file.
-    """
-    r = spark.read.format("binaryFile")
-    if glob:
-        r = r.option("pathGlobFilter", glob)
-    if recursive:
-        r = r.option("recursiveFileLookup", "true")
-    return r.load(path)
-
-
-def read_json_tolerant(
-    spark: SparkSession, path: str, schema: str, corrupt_col: str = "_corrupt_record", **options
-) -> DataFrame:
-    """JSON ingestion that survives malformed lines — the default for
-    web-scraped / third-party feeds at 100 TB, where some fraction of
-    records is ALWAYS broken and a single bad line must not kill a
-    20-hour job.
-
-    PERMISSIVE mode parses what it can; unparseable lines land intact
-    in ``corrupt_col`` (all schema fields null) so the pipeline can
-    count, quarantine, or reprocess them instead of crashing
-    (FAILFAST) or silently losing them (DROPMALFORMED). An explicit
-    schema is REQUIRED: schema inference reads the data twice and
-    silently drops the corrupt column.
-    """
-    full_schema = f"{schema}, {corrupt_col} STRING"
-    return (
-        spark.read.schema(full_schema)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", corrupt_col)
-        .options(**options)
-        .json(path)
-    )

@@ -11,8 +11,6 @@ Scale guidance encoded here:
   read; never partition by a high-cardinality key (file explosion).
 - bucketBy(key) pre-shuffles ONCE at write; later joins/aggs on that
   key skip their Exchange entirely (asserted in tests/test_sinks.py).
-- csv/json exist for interchange, not analytics — row-oriented, no
-  pushdown, no stats.
 """
 
 from __future__ import annotations
@@ -76,37 +74,6 @@ def compact_parquet(
     shutil.rmtree(path)
     os.rename(tmp, path)
     return n_files
-
-
-def write_csv(df: DataFrame, path: str, mode: str = "overwrite", **options) -> None:
-    opts = {"header": "true"}
-    opts.update(options)
-    df.write.mode(mode).options(**opts).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite", **options) -> None:
-    df.write.mode(mode).options(**options).json(path)
-
-
-def write_xml(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    row_tag: str = "row",
-    root_tag: str = "rows",
-    **options,
-) -> None:
-    """XML sink (native in Spark 4 — see sources.read_xml). Row-
-    oriented interchange like csv/json: no pushdown, no stats — for
-    handing data to XML-consuming systems, not for analytics."""
-    (
-        df.write.mode(mode)
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .options(**options)
-        .format("xml")
-        .save(path)
-    )
 
 
 def write_bucketed_table(

@@ -3,8 +3,8 @@
 The reference has NO stream semantics — its closest analogue is
 incremental task streaming over sockets, which is scheduling, not
 streaming (SURVEY.md §2.3). This module supplies the streaming layer a
-user of the engine needs: event-time windows (tumbling / sliding /
-session), watermarks for late data, and stateful dedup.
+user of the engine needs: event-time windows (tumbling / session),
+watermarks for late data, and stateful dedup against a corpus.
 
 Correctness statement (tested in tests/test_streaming.py): because
 Spark's batch and streaming share one semantics, each streaming
@@ -127,15 +127,6 @@ def tumbling_counts(events: DataFrame, window: str = "1 hour", watermark: str = 
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), dec_sum("value").alias("total_value"))
         .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "total_value")
-    )
-
-
-def sliding_counts(events: DataFrame, window: str = "1 hour", slide: str = "15 minutes", watermark: str = "2 hours") -> DataFrame:
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window, slide).alias("w"))
-        .agg(F.count("*").alias("n_events"), dec_sum("value").alias("total_value"))
-        .select(F.col("w.start").alias("window_start"), "n_events", "total_value")
     )
 
 
@@ -272,14 +263,6 @@ def stage_events_with_flush(spark: SparkSession, sf_dir: str, n_files: int = 4) 
             os.utime(os.path.join(out, n), (base_t + i, base_t + i))
     _STAGE_CACHE[key] = out
     return out
-
-
-def stream_dedup(events: DataFrame, keys: list[str] | None = None, watermark: str = "2 hours") -> DataFrame:
-    """Stateful dedup keyed on (user_id, event_type) within the
-    watermark horizon — state is GC'd as the watermark advances, so
-    memory is bounded at scale (unlike plain dropDuplicates)."""
-    keys = keys or ["user_id", "event_type"]
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
 DOCUMENTS_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"

@@ -14,7 +14,7 @@ import subprocess
 import sys
 
 
-def test_bench_stdout_contract(tmp_path):
+def _run_bench(tmp_path, *names):
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     env = dict(
         os.environ,
@@ -23,13 +23,17 @@ def test_bench_stdout_contract(tmp_path):
         SPARK_GRAFT_BENCH_PASSES="1",
         SPARK_GRAFT_BENCH_DETAIL=str(tmp_path / "detail.json"),
     )
-    proc = subprocess.run(
-        [sys.executable, os.path.join(repo, "bench.py")],
+    return subprocess.run(
+        [sys.executable, os.path.join(repo, "bench.py"), *names],
         env=env,
         capture_output=True,
         text=True,
         timeout=900,
     )
+
+
+def test_bench_stdout_contract(tmp_path):
+    proc = _run_bench(tmp_path)
     assert proc.returncode == 0, proc.stderr[-2000:]
     lines = [ln for ln in proc.stdout.splitlines() if ln.strip()]
     assert len(lines) == 1, f"stdout must be ONE JSON line, got {len(lines)}"
@@ -48,6 +52,19 @@ def test_bench_stdout_contract(tmp_path):
     detail = json.load(open(tmp_path / "detail.json"))
     assert set(detail["queries_median"]) == set(result["queries"])
     assert "queries_median" not in result
+
+
+def test_bench_named_queries_span_both_tiers(tmp_path):
+    """Named queries replace the driver-facing set, from either tier;
+    an unknown name fails before any Spark work."""
+    proc = _run_bench(tmp_path, "no_such_query")
+    assert proc.returncode != 0 and "no_such_query" in proc.stderr
+    # q01 is driver-facing, a01 is extra-tier
+    proc = _run_bench(tmp_path, "q01_pricing_summary", "a01_count_distinct")
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    result = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert set(result["queries"]) == {"q01_pricing_summary", "a01_count_distinct"}
+    assert result["n_queries"] == 2
 
 
 def test_clear_process_stores_resets_model_store():

@@ -10,29 +10,6 @@ from kaylee_spark import metrics as M
 from kaylee_spark.sources import load_table
 
 
-def test_row_count_observed(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events")
-    df, obs = M.row_count_observed(ev)
-    written = df.filter(F.col("value") >= 0)
-    n_out = written.count()  # the action that drives the observation
-    got = obs.get
-    # the observation sits on the scan side of the filter: full count
-    assert got["n_rows"] == ev.count()
-    assert n_out <= got["n_rows"]
-
-
-def test_null_rate_observed(spark):
-    df = spark.createDataFrame(
-        [(1, "a"), (2, None), (3, None), (4, "d")], ["id", "v"]
-    )
-    observed, obs = M.null_rate_observed(df, ["id", "v"])
-    observed.write.format("noop").mode("overwrite").save()
-    got = obs.get
-    assert got["n_rows"] == 4
-    assert got["null_rate_id"] == 0.0
-    assert got["null_rate_v"] == 0.5
-
-
 def test_observed_custom_metric(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     df, obs = M.observed(

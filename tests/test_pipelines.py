@@ -52,25 +52,6 @@ def test_curate_is_deterministic(spark, sf_dir):
     assert _ids(a.eval) == _ids(b.eval)
 
 
-def test_prepare_training_corpus(spark):
-    """Release prep after curation: PII scrubbed from every chunk,
-    long docs split into overlapping windows, short docs one chunk."""
-    from kaylee_spark.pipelines import prepare_training_corpus
-
-    long_text = ("email me at bob@example.com please " * 8).strip()
-    docs = spark.createDataFrame(
-        [(1, long_text), (2, "short clean doc")], ["doc_id", "text"]
-    )
-    out = prepare_training_corpus(docs, chunk_tokens=16, overlap=4).collect()
-    by_doc = {}
-    for r in out:
-        by_doc.setdefault(r["doc"], []).append(r)
-    assert len(by_doc[1]) > 1  # 40 tokens at stride 12 -> several chunks
-    assert all("<EMAIL>" in r["chunk_text"] for r in by_doc[1])
-    assert not any("bob@example.com" in r["chunk_text"] for r in by_doc[1])
-    assert len(by_doc[2]) == 1 and by_doc[2][0]["chunk_text"] == "short clean doc"
-
-
 def test_pretraining_mix_budget_and_gate(spark):
     from kaylee_spark.pipelines import pretraining_mix
 

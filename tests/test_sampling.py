@@ -3,34 +3,12 @@ fraction accuracy, and partitioning-invariance."""
 
 from __future__ import annotations
 
-from kaylee_spark.operators.sampling import (
-    deterministic_sample,
-    stratified_sample,
-    train_eval_split,
-)
+from kaylee_spark.operators.sampling import stratified_sample, train_eval_split
 from kaylee_spark.sources import load_table
 
 
 def _ids(df):
     return {r["doc_id"] for r in df.select("doc_id").collect()}
-
-
-def test_sample_reproducible_and_partition_invariant(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    a = _ids(deterministic_sample(docs, "doc_id", 0.3))
-    b = _ids(deterministic_sample(docs.repartition(7), "doc_id", 0.3))
-    c = _ids(deterministic_sample(docs.coalesce(1), "doc_id", 0.3))
-    assert a == b == c and len(a) > 0
-
-
-def test_sample_fraction_accuracy_and_seed_independence(spark, sf_dir):
-    docs = load_table(spark, sf_dir, "documents")
-    n = docs.count()
-    kept = len(_ids(deterministic_sample(docs, "doc_id", 0.5, seed=1)))
-    # hash uniformity: binomial(n, 0.5) within 5 sigma
-    assert abs(kept - 0.5 * n) < 5 * (0.25 * n) ** 0.5
-    other = _ids(deterministic_sample(docs, "doc_id", 0.5, seed=2))
-    assert other != _ids(deterministic_sample(docs, "doc_id", 0.5, seed=1))
 
 
 def test_stratified_sample_respects_strata(spark, sf_dir):

@@ -98,30 +98,6 @@ def test_embedding_neardup_finds_duplicates(spark):
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
 
-def test_dot_fixed_name_form_bit_identical(spark):
-    """The expr-string fast path of dot_fixed must produce the same
-    bits as the Column-operator form (same left-to-right association),
-    including subnormal and negative values — regression pin for the
-    py4j-reduction rewrite."""
-    import struct
-
-    from pyspark.sql import functions as F
-
-    from kaylee_spark.functions import dot_fixed
-
-    import numpy as np
-
-    rng = np.random.default_rng(11)
-    a = [float(x) for x in rng.standard_normal(16)] + [1e-300, -0.0, 1.5e-17, 2.0]
-    b = [float(x) for x in rng.standard_normal(16)] + [-1e-300, 7.0, -2.5e16, 0.5]
-    df = spark.createDataFrame([(a, b)], "a array<double>, b array<double>")
-    got = df.select(
-        dot_fixed("a", "b", 20).alias("s"),
-        dot_fixed(F.col("a"), F.col("b"), 20).alias("c"),
-    ).collect()[0]
-    assert struct.pack("d", got.s) == struct.pack("d", got.c)
-
-
 def test_table_signatures_match_numpy(spark):
     """The one-string SQL signature expression must agree with a
     straightforward numpy reimplementation of the same fold —
@@ -146,36 +122,6 @@ def test_table_signatures_match_numpy(spark):
                 acc = acc * 2 + bb
             want.append(acc)
         assert got[i] == want, (i, got[i], want)
-
-
-def test_ivf_partitioned_index_prunes_files(spark, sf_dir, tmp_path):
-    """The written IVF index must (a) round-trip every vector, and
-    (b) prune unprobed list directories at the FILE level — the
-    physical plan's scan carries a PartitionFilters entry on list_id
-    and reads strictly fewer files than the full index."""
-    from kaylee_spark.operators.similarity import ivf_read_lists, ivf_write_index
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    path = str(tmp_path / "ivf_index")
-    centroids = ivf_write_index(emb, path, n_centroids=8)
-    assert len(centroids) == 8
-
-    full = spark.read.parquet(path)
-    assert full.count() == emb.count()
-
-    probed = ivf_read_lists(spark, path, [0, 1])
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "list_id" in plan
-    # pruned read touches only the probed directories (input_file_name
-    # over the filtered scan = files actually read; inputFiles() would
-    # report the whole relation pre-pruning)
-    from pyspark.sql import functions as F
-
-    n_all = full.select(F.input_file_name()).distinct().count()
-    n_probed = probed.select(F.input_file_name()).distinct().count()
-    assert 0 < n_probed < n_all
-    # and the probed rows are exactly the rows assigned to those lists
-    assert probed.count() == full.filter("list_id in (0, 1)").count()
 
 
 def test_quantization_roundtrip_bound_and_ann_recall(spark, sf_dir):

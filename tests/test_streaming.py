@@ -41,15 +41,6 @@ def test_session_stream_equals_batch(spark, events_dir):
     assert canon(streamed) == canon(batch)
 
 
-def test_stream_dedup_bounded_state(spark, events_dir):
-    deduped = ST.run_to_memory(ST.stream_dedup(ST.events_stream(spark, events_dir, files_per_trigger=2)))
-    batch = _batch_events(spark, events_dir)
-    n_keys = batch.select("user_id", "event_type").distinct().count()
-    # watermark (2h) >> event-time span per microbatch, so every
-    # duplicate key collapses exactly once
-    assert deduped.count() == n_keys
-
-
 def test_late_data_dropped_past_watermark(spark, tmp_path):
     # file 1: events at 10:00-10:30; file 2: a very late event at 09:00
     on_time = spark.createDataFrame(
@@ -172,12 +163,6 @@ def test_foreach_batch_idempotent_restart(spark, events_dir, tmp_path):
     assert result.select("batch_id").distinct().count() == 2  # 4 files / 2 per trigger
     drain()  # restart: no new batches, no duplicates
     assert spark.read.parquet(out).count() == n_src
-
-
-def test_sliding_stream_equals_batch(spark, events_dir):
-    streamed = ST.run_to_memory(ST.sliding_counts(ST.events_stream(spark, events_dir)), output_mode="complete")
-    batch = ST.sliding_counts(_batch_events(spark, events_dir), watermark="0 seconds")
-    assert canon(streamed) == canon(batch)
 
 
 def test_stream_stream_join_equals_batch(spark, events_dir):

@@ -1,6 +1,15 @@
 """Dump .explain("formatted") for flagship queries + automated plan
 assertions (pushdown present, no cartesian products, broadcasts on
-dims) into docs/PLANS.md. Run: python tools/dump_plans.py [sf_dir]
+dims) into docs/PLANS.md.
+
+With an output directory and a suffix, it instead writes each named
+query's formatted plan (from either registry tier; default: every
+driver-facing query) to <outdir>/<query>_<suffix>.txt — before/after
+evidence for a plan change. A query that fails to build records a
+SKIP line instead of a plan.
+
+Usage: python tools/dump_plans.py [sf_dir]
+       python tools/dump_plans.py <sf_dir> <outdir> <suffix> [query ...]
 """
 
 from __future__ import annotations
@@ -11,7 +20,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from kaylee_spark.operators.skew import scoped_conf  # noqa: E402
-from kaylee_spark.queries import load_everything  # noqa: E402
+from kaylee_spark.queries import load_all, load_everything  # noqa: E402
 from kaylee_spark.session import get_spark  # noqa: E402
 
 SHOWCASE = [
@@ -234,16 +243,37 @@ MUST_CONTAIN = {
 }
 
 
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+
+def dump_each(spark, reg, sf_dir: str, outdir: str, suffix: str, names: list[str]) -> None:
+    os.makedirs(outdir, exist_ok=True)
+    for name in names or sorted(load_all()):
+        path = os.path.join(outdir, f"{name}_{suffix}.txt")
+        try:
+            plan = _formatted(reg[name].fn(spark, sf_dir))
+        except Exception as exc:
+            plan = f"SKIP: {type(exc).__name__}: {exc}"
+        with open(path, "w") as f:
+            f.write(plan)
+        print(f"wrote {path}", flush=True)
+
+
 def main() -> None:
+    if len(sys.argv) == 3:
+        raise SystemExit("an output directory needs a suffix: see the module docstring")
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     reg = load_everything()
     spark = get_spark("plans")
     spark.sparkContext.setLogLevel("ERROR")
+    if len(sys.argv) > 3:
+        dump_each(spark, reg, sf_dir, sys.argv[2], sys.argv[3], sys.argv[4:])
+        return
     out = ["# Physical plans (generated by tools/dump_plans.py)\n"]
     problems = []
     for name, note in SHOWCASE:
-        df = reg[name].fn(spark, sf_dir)
-        p = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        p = _formatted(reg[name].fn(spark, sf_dir))
         if "CartesianProduct" in p:
             problems.append(f"{name}: CartesianProduct in plan")
         # s01/q17 intentionally cross-join against a tiny broadcast side
@@ -283,8 +313,7 @@ def main() -> None:
         "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold": "1kb",
     }
     with scoped_conf(spark, confs):
-        df = reg["q03_top_orders"].fn(spark, sf_dir)
-        p = df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+        p = _formatted(reg["q03_top_orders"].fn(spark, sf_dir))
         if "might_contain" not in p and "bloomfilter" not in p.lower():
             problems.append("bloom-demo: no runtime bloom filter injected into q03 under shuffle-join config")
         out.append(
