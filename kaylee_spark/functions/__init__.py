@@ -9,6 +9,8 @@ JVM-side, whole-stage-codegen'd, never row-at-a-time Python.
 
 from __future__ import annotations
 
+from decimal import Decimal
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -17,23 +19,57 @@ from pyspark.sql import functions as F
 #
 # Floating-point SUM is order-dependent; Spark's partial-aggregate merge
 # order varies run to run, so a raw double SUM cannot hash-match any
-# oracle bit-for-bit. Accumulating in DECIMAL is exact and associative,
-# so the same trick on both engines yields identical doubles. The
-# DECIMAL(24,6) narrowing is part of the query SEMANTICS (both sides do
-# it). Scale 6 matters: the fixture money columns carry exactly 2
-# decimals, so products of two/three of them carry <= 6 — at scale 6
+# oracle bit-for-bit. An exact sum in DECIMAL is associative, so the
+# same sum on both engines yields identical doubles. The DECIMAL(24,6)
+# narrowing is part of the query SEMANTICS (the oracle side casts each
+# row to it). Scale 6 matters: the fixture money columns carry exactly
+# 2 decimals, so products of two/three of them carry <= 6 — at scale 6
 # the cast is exact (tie-free), whereas at scale 2 products land
 # exactly on .005 boundaries and Spark (rounds the shortest decimal
 # repr, BigDecimal.valueOf) disagrees with DuckDB (rounds the exact
 # binary value) by one cent.
+#
+# The Spark side never builds that decimal per row (a BigDecimal per
+# row, via Double.toString, was about half of q01's CPU). money_sum
+# takes each row's unscaled value u = sign(x)·floor(|x|·10^6 + 0.5), a
+# bigint rounded half away from zero like the decimal cast, and sums it
+# exactly as three 21-bit long limbs (low and middle limbs unsigned,
+# the top one signed); no limb sum can overflow below 2^42 rows a
+# group. The limbs are recombined once per group into decimal(38,6).
+#
+# Contract: a row value carries <= 6 decimals and |x| < 2^50/10^6
+# (about 1.13e9). Then x·10^6 lies within 1/4 of the integer the
+# decimal cast produces, so every sum equals the cast-then-sum one
+# (tests/test_money_sum.py). NaN and ±inf raise: u is rounded in
+# double and the ANSI cast to bigint rejects them, where the decimal
+# cast silently turned them into NULL rows. So does |x| >= 2^63/10^6.
+# Under spark.sql.ansi.enabled=false that cast saturates instead.
 # ---------------------------------------------------------------------------
 
-_DEC = "decimal(24,6)"
+_LIMB_BITS = 21
+_LIMB_MASK = (1 << _LIMB_BITS) - 1
+# one unit of each limb (low, middle, top), counted in whole money units
+_LIMB_UNITS = [Decimal(1 << (_LIMB_BITS * i)).scaleb(-6) for i in range(3)]
 
 
-def dec(col) -> Column:
-    """Column cast to the engine's exact money type."""
-    return F.col(col).cast(_DEC) if isinstance(col, str) else col.cast(_DEC)
+def money_sum(col) -> Column:
+    """Exact SUM of a double column at scale 6, as decimal(38,6).
+
+    Equals ``sum(cast(col as decimal(24,6)))`` on every value the
+    module contract admits; NULL for an empty or all-NULL group.
+    """
+    x = F.col(col) if isinstance(col, str) else col
+    u = (x * 1e6 + F.signum(x) * 0.5).cast("bigint")
+    limbs = [
+        u.bitwiseAND(_LIMB_MASK),
+        F.shiftright(u, _LIMB_BITS).bitwiseAND(_LIMB_MASK),
+        F.shiftright(u, 2 * _LIMB_BITS),
+    ]
+    lo, mid, top = (
+        F.sum(limb).cast("decimal(20,0)") * F.lit(unit)
+        for limb, unit in zip(limbs, _LIMB_UNITS)
+    )
+    return (lo + mid + top).cast("decimal(38,6)")
 
 
 def dec_sum(col) -> Column:
@@ -48,13 +84,13 @@ def dec_sum(col) -> Column:
     the quantum stays coarser than ulp spacing up to ~10^13, so the
     conversion is bit-identical through any realistic money sum.
     """
-    return F.round(F.sum(dec(col)), 2).cast("double")
+    return F.round(money_sum(col), 2).cast("double")
 
 
 def dec_avg(col) -> Column:
     """Order-independent AVG: cent-rounded exact decimal sum / count,
     in doubles (lockstep with oracle_dec_avg)."""
-    return (F.round(F.sum(dec(col)), 2).cast("double") / F.count(dec(col))).cast("double")
+    return (dec_sum(col) / F.count(col)).cast("double")
 
 
 def oracle_dec_sum(expr: str) -> str:

@@ -22,13 +22,14 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
+from pyspark.sql.types import LongType
 
 #: word / number / single-punctuation pieces — a cheap BPE-ish proxy.
 #: Simple character classes only, so Python re and DuckDB's RE2 agree.
 TOKEN_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
 
-@pandas_udf("long")
+@pandas_udf(LongType())
 def pd_token_count(text: pd.Series) -> pd.Series:
     """Scalar pandas_udf: regex token count per document.
 

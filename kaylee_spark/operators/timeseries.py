@@ -210,13 +210,13 @@ def rollup_cascade(
         if coarse % fine != 0 or coarse <= fine:
             raise ValueError(f"steps must coarsen by integer multiples, got {steps}")
 
-    from kaylee_spark.functions import dec
+    from kaylee_spark.functions import money_sum
 
     cur = df.groupBy(
         *key_cols, _epoch_bucket(ts_col, steps[0]).alias("bucket")
     ).agg(
         F.count(value_col).alias("n_events"),
-        F.sum(dec(value_col)).cast("decimal(38,6)").alias("__dec"),
+        money_sum(value_col).alias("__dec"),
     ).cache()
 
     def emit(level: DataFrame, step: str) -> DataFrame:

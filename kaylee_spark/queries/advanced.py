@@ -8,7 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kaylee_spark.functions import dec, dec_sum, oracle_dec_sum
+from kaylee_spark.functions import dec_sum, oracle_dec_sum
 from kaylee_spark.operators.joins import asof_join, range_join
 from kaylee_spark.operators.multimodal import synth_media_from_documents
 from kaylee_spark.queries import query

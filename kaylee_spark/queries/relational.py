@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from kaylee_spark.functions import dec, dec_avg, dec_sum, oracle_dec_avg, oracle_dec_sum
+from kaylee_spark.functions import dec_avg, dec_sum, money_sum, oracle_dec_avg, oracle_dec_sum
 from kaylee_spark.queries import query
 from kaylee_spark.sources import load_table
 
@@ -956,10 +956,10 @@ def q27_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q8 shape: one region's revenue share per order year —
     a ratio of two conditional aggregates in a single pass.
 
-    Scale: the share is ONE hash agg (two decimal accumulators per
-    year), not two scans; snowflake dims broadcast; the only shuffle
-    is lineitem⋈orders. Both numerator and denominator accumulate in
-    exact decimal, so the final double division is bit-identical to
+    Scale: the share is ONE hash agg (two exact money sums per year),
+    not two scans; snowflake dims broadcast; the only shuffle is
+    lineitem⋈orders. Numerator and denominator are both exact
+    (``dec_sum``), so the final double division is bit-identical to
     the oracle's.
     """
     li = _t(spark, sf_dir, "lineitem")
@@ -967,8 +967,7 @@ def q27_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     sup = _t(spark, sf_dir, "supplier")
     nat = _t(spark, sf_dir, "nation")
     reg = _t(spark, sf_dir, "region")
-    disc = dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-    zero = F.lit(0).cast("decimal(24,6)")
+    disc = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
@@ -977,8 +976,8 @@ def q27_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.year("o_orderdate").alias("o_year"))
         .agg(
             (
-                F.round(F.sum(F.when(F.col("r_name") == "ASIA", disc).otherwise(zero)), 2).cast("double")
-                / F.round(F.sum(disc), 2).cast("double")
+                dec_sum(F.when(F.col("r_name") == "ASIA", disc).otherwise(0.0))
+                / dec_sum(disc)
             ).cast("double").alias("asia_share")
         )
     )
@@ -1126,19 +1125,13 @@ def q31_dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     left-anti join on a date-filtered payload-free orders projection
     (the filter pushes to the parquet scan), and the close is one
     map-side-combined aggregate."""
-    from kaylee_spark.functions import dec
-
     cust = load_table(spark, sf_dir, "customer")
     orders = (
         load_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate") >= F.lit("2000-01-01").cast("date"))
         .select("o_custkey")
     )
-    row = cust.filter(F.col("c_acctbal") > 0.0).agg(
-        F.round(F.sum(dec("c_acctbal")), 2).cast("double").alias("s"),
-        F.count(dec("c_acctbal")).alias("n"),
-    ).first()
-    avg_bal = row["s"] / row["n"]
+    avg_bal = cust.filter(F.col("c_acctbal") > 0.0).agg(dec_avg("c_acctbal")).first()[0]
     return (
         cust.filter(F.col("c_acctbal") > F.lit(avg_bal))
         .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
@@ -1295,10 +1288,10 @@ def q33_front_loaded_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal nested form would scan lineitem three times. The part-name
     filter is a broadcast semi-join (2k rows), supplier⋈nation a
     broadcast, and the final per-supplier count reuses tiny group
-    cardinality. Both quantity sums stay exact DECIMAL(24,6) end to
-    end, so the > comparison is bit-identical across engines; the
-    NULL case (no early shipments) drops the pair in both (NULL
-    comparison is false in WHERE, conditional-sum NULL fails the
+    cardinality. Both quantity sums are exact at scale 6
+    (``money_sum``), so the > comparison is bit-identical across
+    engines; the NULL case (no early shipments) drops the pair in both
+    (NULL comparison is false in WHERE, conditional-sum NULL fails the
     filter).
 
     100 TB: the only wide shuffle is keyed on (partkey, suppkey) —
@@ -1317,8 +1310,8 @@ def q33_front_loaded_supply(spark: SparkSession, sf_dir: str) -> DataFrame:
         li.join(F.broadcast(small_parts), li.l_partkey == small_parts.p_partkey, "left_semi")
         .groupBy("l_partkey", "l_suppkey")
         .agg(
-            F.sum(F.when(early, dec("l_quantity"))).alias("qty_early"),
-            F.sum(dec("l_quantity")).alias("qty_total"),
+            money_sum(F.when(early, F.col("l_quantity"))).alias("qty_early"),
+            money_sum("l_quantity").alias("qty_total"),
         )
         .filter(F.col("qty_early") * 2 > F.col("qty_total"))
     )
@@ -1737,7 +1730,7 @@ def q39_important_part_values(spark: SparkSession, sf_dir: str) -> DataFrame:
     per = (
         li.join(F.broadcast(sup), li.l_suppkey == F.col("s_suppkey"))
         .groupBy("l_partkey")
-        .agg(F.round(F.sum(dec(rev)), 2).alias("r"))
+        .agg(F.round(money_sum(rev), 2).alias("r"))
         .localCheckpoint()
     )
     totals = per.agg(

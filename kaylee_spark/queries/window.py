@@ -214,13 +214,13 @@ def w06_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     in doubles, rounded 6dp on both engines. Partitioned by nation —
     no global-order window; at 100 TB the partition key is whatever
     business dimension bounds the ranking scope."""
-    from kaylee_spark.functions import dec
+    from kaylee_spark.functions import money_sum
 
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
     nation = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
-        F.round(F.sum(dec("o_totalprice")), 2).alias("rev_dec")
+        F.round(money_sum("o_totalprice"), 2).alias("rev_dec")
     )
     j = (
         rev.join(customer, rev.custkey == customer.c_custkey)
