@@ -45,7 +45,7 @@ from __future__ import annotations
 from collections.abc import Callable, Iterable, Iterator
 from typing import Any
 
-from pyspark.rdd import RDD
+from pyspark.rdd import RDD, portable_hash
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -114,22 +114,18 @@ class MapReduceJob:
         mapped = rdd.flatMap(lambda kv: mapfn(kv[0], kv[1]))
 
         n = self.num_partitions or self.spark.sparkContext.defaultParallelism
+        # portable_hash is PySpark's own default partitioner
+        part = self.partition_fn or portable_hash
         if combiner is not None:
             # SHUFFLE+REDUCE with map-side partial aggregation: the
             # distributed fix for the reference's central-dict shuffle.
-            if self.partition_fn is not None:
-                reduced = mapped.reduceByKey(combiner, numPartitions=n, partitionFunc=self.partition_fn)
-            else:
-                reduced = mapped.reduceByKey(combiner, numPartitions=n)
+            reduced = mapped.reduceByKey(combiner, numPartitions=n, partitionFunc=part)
             # reducefn still gets (k, iter-of-partials) so holistic
             # post-processing (e.g. final normalize) keeps working.
             return reduced.map(lambda kv: (kv[0], reducefn(kv[0], iter([kv[1]]))))
         # Holistic reducer: exact reference semantics — full lazy value
         # iterator per key (`client.py:204-208`), distributed + spillable.
-        if self.partition_fn is not None:
-            grouped = mapped.groupByKey(numPartitions=n, partitionFunc=self.partition_fn)
-        else:
-            grouped = mapped.groupByKey(numPartitions=n)
+        grouped = mapped.groupByKey(numPartitions=n, partitionFunc=part)
         return grouped.map(lambda kv: (kv[0], reducefn(kv[0], iter(kv[1]))))
 
     def results(self) -> dict:

@@ -10,21 +10,22 @@ SURVEY.md §2.2 "distinct"):
             candidate pairs only within buckets (LSH). Avoids the
             O(n^2) all-pairs join; cost is output-bound, standard for
             web-scale near-dedup.
-- SimHash:  64-bit signature per doc; near-dup iff small Hamming
-            distance; bucketed by bit-chunks for sub-quadratic search.
+- SimHash:  62-bit portable signature per doc; near-dup iff small
+            Hamming distance; bucketed by bit-chunks (Pigeonhole) for
+            sub-quadratic search.
 - n-gram Jaccard: exact pairwise similarity, driven THROUGH the
             inverted index (pairs sharing >=1 shingle), not a cross
             join — still quadratic in the worst case, so it's the
             verify stage after LSH at scale, or standalone at small n.
 
 Everything is built-in-function based (xxhash64, explode, groupBy);
-no Python in the hot path except the SimHash bit-fold which uses an
-Arrow-batched pandas UDF.
+no Python in the hot path.
 """
 
 from __future__ import annotations
 
 import warnings
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -733,42 +734,6 @@ def resolve_banding(
     return num_hashes, bands
 
 
-def minhash_lsh_pairs(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int = 3,
-    num_hashes: int | None = 64,
-    bands: int | None = 16,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """Near-duplicate pairs via banded MinHash LSH.
-
-    bands=16 x rows=4 over 64 hashes -> candidate iff any band matches
-    (s-curve threshold ~ (1/16)^(1/4) ≈ 0.5); pass None to let
-    lsh_planner pick the banding for ``threshold``. Candidates are
-    verified with the estimated Jaccard = fraction of equal signature
-    slots. The band-bucket join replaces the O(n^2) cross join: cost
-    scales with bucket occupancy, not corpus size squared.
-    """
-    num_hashes, bands = resolve_banding(num_hashes, bands, threshold)
-    sig = minhash_signatures(df, id_col, text_col, n, num_hashes).cache()
-    cands = _lsh_candidates(sig, num_hashes, bands)
-    cands = cands.join(
-        sig.select(F.col("doc").alias("doc_a"), F.col("signature").alias("sig_a")), "doc_a"
-    ).join(sig.select(F.col("doc").alias("doc_b"), F.col("signature").alias("sig_b")), "doc_b")
-    est = F.aggregate(
-        F.zip_with("sig_a", "sig_b", lambda x, y: (x == y).cast("int")),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    ) / F.lit(num_hashes)
-    return (
-        cands.withColumn("est_jaccard", est.cast("double"))
-        .filter(F.col("est_jaccard") >= threshold)
-        .select("doc_a", "doc_b", "est_jaccard")
-    )
-
-
 def minhash_lsh_verified_pairs(
     df: DataFrame,
     id_col: str,
@@ -943,8 +908,8 @@ def dedup_clusters(
       the corpus's df histogram (one extra shingle scan into a
       droplet-sized aggregate, plus — when no ``n_docs`` hint is
       given — a count job on the corpus frame; at scale pass
-      ``n_docs`` from catalog statistics, same as simhash_pairs, so
-      planning reads no data at all): exact inverted-index while its
+      ``n_docs`` from catalog statistics, so planning reads no data
+      at all): exact inverted-index while its
       Sigma C(df,2) candidate volume stays below the LSH path's fixed
       signature cost, banded LSH once shingle sharing makes the exact
       join explode — SURVEY §4.2's "dedup-pipeline staging" decision,
@@ -997,17 +962,12 @@ def dedup_clusters(
 # SimHash
 # ---------------------------------------------------------------------------
 
-_SIMHASH_BITS = 64
-
 # Portable token hash: two 31-bit polynomial rolling hashes (bases 31
 # and 131, both mod the Mersenne prime 2^31-1) packed into one 62-bit
 # integer. Every step is plain int64 arithmetic (acc < 2^31, so
 # acc*131 + 0x10FFFF < 2^39 — no overflow), which any SQL engine
 # folds identically — that is what lets an external auditor re-derive
-# the signatures (the DuckDB oracle does exactly this). xxhash64
-# mixes better and costs one call per token instead of one fold step
-# per character — keep portable=False when cross-engine verification
-# isn't required.
+# the signatures (the DuckDB oracle does exactly this).
 PORTABLE_HASH_MOD = 2147483647  # 2^31 - 1
 PORTABLE_HASH_BASES = (31, 131)
 PORTABLE_SIMHASH_BITS = 62
@@ -1027,9 +987,9 @@ def portable_token_hash_sql(tok_expr: str) -> str:
     return f"({folds[0]} * CAST({1 << 31} AS BIGINT) + {folds[1]})"
 
 
-def simhash(df: DataFrame, id_col: str, text_col: str, portable: bool = False) -> DataFrame:
-    """64-bit SimHash per document from token xxhash64s (or 62-bit
-    from the portable polynomial hash when ``portable=True``).
+def simhash(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """62-bit SimHash per document from the portable polynomial token
+    hash, so any SQL engine can re-derive every signature.
 
     Fully JVM-side: explode tokens -> token hash -> per-bit
     conditional-sum votes in ONE hash aggregate (map-side partial,
@@ -1039,13 +999,10 @@ def simhash(df: DataFrame, id_col: str, text_col: str, portable: bool = False) -
     earlier pandas-UDF fold over collect_list was ~10x slower and
     materialized whole documents.)
     """
-    bits = PORTABLE_SIMHASH_BITS if portable else _SIMHASH_BITS
+    bits = PORTABLE_SIMHASH_BITS
     toks = df.select(F.col(id_col).alias("doc"), F.explode(tokens(text_col)).alias("tok"))
-    if portable:
-        hashed = toks.select("doc", F.expr(portable_token_hash_sql("tok")).alias("h"))
-    else:
-        hashed = toks.select("doc", F.xxhash64("tok").alias("h"))
-    # Both the 64 bit-vote aggregates and the signature reassembly are
+    hashed = toks.select("doc", F.expr(portable_token_hash_sql("tok")).alias("h"))
+    # Both the bit-vote aggregates and the signature reassembly are
     # single parsed SQL strings: the Column-operator form costs ~400
     # py4j round trips (~2.5 s of driver time per run, measured); one
     # expr() each crosses the bridge once. shiftright & 1 extracts bit
@@ -1064,6 +1021,84 @@ def simhash(df: DataFrame, id_col: str, text_col: str, portable: bool = False) -
     return per_doc.select("doc", sig.alias("simhash"))
 
 
+@dataclass(frozen=True)
+class Pigeonhole:
+    """The pigeonhole split of a ``bits``-bit signature for Hamming
+    search within ``max_hamming``: max_hamming+1 disjoint chunks of
+    width bits // (max_hamming+1). A pair within distance max_hamming
+    differs in at most max_hamming chunks, so at least one chunk
+    agrees exactly — bucketing on (chunk, key) loses no pair, and an
+    exact popcount verifies the candidates. Chunks may leave the top
+    bits % chunks bits un-keyed; that only ADDS candidates, the
+    popcount still sees every bit.
+
+    ``keys`` bands a signature column into its chunk keys; ``verify``
+    keeps a joined candidate once (in its FIRST agreeing chunk) and
+    only within distance. hamming_pairs, hamming_probe and the
+    candidate counters of tools/dedup_scale_probe.py share it.
+    """
+
+    max_hamming: int
+    bits: int
+
+    def __post_init__(self):
+        if self.bits < self.max_hamming + 1:
+            raise ValueError(
+                f"pigeonhole Hamming search needs bits >= max_hamming + 1 "
+                f"(got bits={self.bits}, max_hamming={self.max_hamming}); width "
+                "would floor to 0 and every chunk key would be 0 (a full cross join)"
+            )
+
+    @property
+    def chunks(self) -> int:
+        return self.max_hamming + 1
+
+    @property
+    def width(self) -> int:
+        return self.bits // self.chunks
+
+    @property
+    def mask(self) -> int:
+        return (1 << self.width) - 1
+
+    def keys(self, sig_col: str) -> Column:
+        """explode of one struct(chunk, key) per chunk of ``sig_col``."""
+        return F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(c).alias("chunk"),
+                        F.shiftrightunsigned(F.col(sig_col), c * self.width)
+                        .bitwiseAND(F.lit(self.mask))
+                        .alias("key"),
+                    )
+                    for c in range(self.chunks)
+                ]
+            )
+        )
+
+    def verify(self, joined: DataFrame, sh_a: str, sh_b: str) -> DataFrame:
+        """Candidates of a (chunk, key) join that met in their first
+        agreeing chunk and lie within max_hamming, with ``hamming``.
+
+        A pair can meet in several agreeing chunks; both signatures
+        ride the join, so the first agreeing chunk (the lowest zero
+        chunk of the XOR) is arithmetic, not a distinct. The join
+        guarantees SOME chunk agrees, so the CASE always hits."""
+        w, mask = self.width, self.mask
+        first_agree = "CASE " + " ".join(
+            f"WHEN (shiftrightunsigned({sh_a}, {c * w}) & {mask}) = "
+            f"(shiftrightunsigned({sh_b}, {c * w}) & {mask}) THEN {c}"
+            for c in range(self.chunks)
+        ) + " END"
+        ham = F.bit_count(F.col(sh_a).bitwiseXOR(F.col(sh_b)))
+        return (
+            joined.filter(F.col("chunk") == F.expr(first_agree))
+            .withColumn("hamming", ham.cast("int"))
+            .filter(F.col("hamming") <= self.max_hamming)
+        )
+
+
 def hamming_pairs(
     sig: DataFrame,
     max_hamming: int,
@@ -1071,60 +1106,20 @@ def hamming_pairs(
     id_col: str = "doc",
     sig_col: str = "simhash",
     out_prefix: str = "doc",
-    blocks: int | None = None,
 ) -> DataFrame:
     """All id pairs whose ``bits``-bit signatures differ in at most
     ``max_hamming`` bits — COMPLETE (every qualifying pair emitted,
-    exactly once) and sub-quadratic.
+    exactly once) and sub-quadratic: a self-join on the Pigeonhole
+    chunk keys, then its first-agree dedup and popcount verify.
 
-    Pigeonhole bucketing: split the signature into ``blocks`` disjoint
-    chunks (default: lsh_planner.hamming_plan's choice — max_hamming+1
-    when the corpus size is unknown); a pair within distance
-    max_hamming has its differing bits inside at most max_hamming
-    chunks, so in SOME (blocks - max_hamming)-sized chunk set both
-    signatures agree — all candidates come from agreeing-key buckets,
-    then exact popcount verifies. With blocks = max_hamming+1 the key
-    is one chunk (the classic construction, shortest keys, fewest
-    tables); deeper blocking keys multiple chunks per table for
-    exponentially fewer false candidates at a C(blocks, max_hamming)
-    table fan-out — the Manku et al. WWW'07 trade hamming_plan
-    cost-models from n_docs. (Chunks of width bits // blocks may leave
-    the top bits un-keyed; that only ADDS candidates — completeness is
-    unaffected, the popcount still sees every bit.)
-
-    Candidate dedup (a pair can surface from several agreeing tables)
-    is ARITHMETIC, not a shuffle: each side carries its 8-byte
-    signature through the bucket join, so after the join we know every
-    table's agreement from ``sig_a XOR sig_b`` and keep the pair only
-    in the FIRST agreeing table's bucket. One shuffle total past the
-    signature frame — no pair-distinct exchange, no signature
-    re-attach joins (an earlier ids-only+rejoin shape paid three
-    shuffles to save 8 bytes/row of join width; strictly worse at any
-    scale since |candidates| >= |banded rows|).
+    One shuffle total past the signature frame: each side carries its
+    8-byte signature through the bucket join, so there is no
+    pair-distinct exchange and no signature re-attach join (an earlier
+    ids-only+rejoin shape paid three shuffles to save 8 bytes/row of
+    join width; strictly worse at any scale since |candidates| >=
+    |banded rows|).
     """
-    if blocks is None:
-        from kaylee_spark.operators.lsh_planner import hamming_plan
-
-        blocks = hamming_plan(max_hamming, bits).blocks
-    if blocks > max_hamming + 1:
-        return _hamming_pairs_blocked(
-            sig, max_hamming, bits, blocks, id_col, sig_col, out_prefix
-        )
-    if blocks != max_hamming + 1:
-        raise ValueError(
-            f"blocks={blocks} < max_hamming+1={max_hamming + 1} cannot "
-            "guarantee completeness (pigeonhole needs every "
-            f"{max_hamming}-error pattern to leave one block clean)"
-        )
-    chunks = max_hamming + 1
-    if bits < chunks:
-        raise ValueError(
-            f"hamming_pairs needs bits >= max_hamming + 1 "
-            f"(got bits={bits}, max_hamming={max_hamming}); width would "
-            "floor to 0 and every chunk key would be 0 (a full cross join)"
-        )
-    width = bits // chunks
-    mask = (1 << width) - 1
+    ph = Pigeonhole(max_hamming, bits)
     a_id, b_id = f"{out_prefix}_a", f"{out_prefix}_b"
     # Cache the signature frame: both join branches read it, and —
     # more important — without a materialization barrier Catalyst
@@ -1138,120 +1133,12 @@ def hamming_pairs(
     banded = sig.select(
         F.col(id_col).alias("id"),
         F.col(sig_col).alias("sig"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftrightunsigned(F.col(sig_col), c * width).bitwiseAND(F.lit(mask)).alias("key"),
-                    )
-                    for c in range(chunks)
-                ]
-            )
-        ).alias("cb"),
+        ph.keys(sig_col).alias("cb"),
     ).select("id", "sig", "cb.chunk", "cb.key")
     a = banded.select(F.col("id").alias(a_id), F.col("sig").alias("sh_a"), "chunk", "key")
     b = banded.select(F.col("id").alias(b_id), F.col("sig").alias("sh_b"), "chunk", "key")
-    # first agreeing chunk = index of the lowest zero chunk of the XOR;
-    # the join guarantees SOME chunk agrees, so the CASE always hits.
-    first_agree = "CASE " + " ".join(
-        f"WHEN (shiftrightunsigned(sh_a, {c * width}) & {mask}) = (shiftrightunsigned(sh_b, {c * width}) & {mask}) THEN {c}"
-        for c in range(chunks)
-    ) + " END"
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        a.join(b, ["chunk", "key"])
-        .filter(F.col(a_id) < F.col(b_id))
-        .filter(F.col("chunk") == F.expr(first_agree))
-        .withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(a_id, b_id, "hamming")
-    )
-
-
-def _signed64(mask: int) -> int:
-    """Reinterpret an unsigned 64-bit mask as the signed BIGINT Spark
-    literals require (a kept top block of a 64-bit signature sets bit
-    63)."""
-    return mask - (1 << 64) if mask >= (1 << 63) else mask
-
-
-def _hamming_pairs_blocked(
-    sig: DataFrame,
-    max_hamming: int,
-    bits: int,
-    blocks: int,
-    id_col: str,
-    sig_col: str,
-    out_prefix: str,
-) -> DataFrame:
-    """Deep-blocking pigeonhole (hamming_pairs with
-    blocks > max_hamming+1): one bucket table per max_hamming-subset
-    of blocks, bucket key = the signature with the subset's blocks
-    masked OUT (i.e. agreement required on every other block — the
-    same 8-byte column serves as the key, no bit re-packing). A pair
-    within distance max_hamming differs in at most max_hamming blocks,
-    so the table wildcarding exactly those blocks keys it equal —
-    completeness for every design, which is why hamming_plan can
-    cost-choose the depth freely. First-agreeing-table arithmetic
-    dedup and the exact popcount verify mirror the shallow path.
-    """
-    import itertools
-    import math
-
-    width = bits // blocks
-    if width < 1:
-        raise ValueError(f"blocks={blocks} exceeds bits={bits}")
-    # Same sanity ceiling hamming_plan enforces (max_tables=64): an
-    # explicitly pinned deep config like blocks=62, max_hamming=6
-    # would otherwise build C(62,6) ~ 6e7 structs PER ROW in the
-    # exploded array — a plan that never finishes compiling, let
-    # alone running.
-    n_tables = math.comb(blocks, max_hamming)
-    if n_tables > 64:
-        raise ValueError(
-            f"blocks={blocks}, max_hamming={max_hamming} needs "
-            f"C({blocks},{max_hamming})={n_tables} bucket tables "
-            "(> 64) — use hamming_plan to pick a feasible depth"
-        )
-    a_id, b_id = f"{out_prefix}_a", f"{out_prefix}_b"
-    block_mask = [((1 << width) - 1) << (j * width) for j in range(blocks)]
-    subsets = list(itertools.combinations(range(blocks), max_hamming))
-    keep = [
-        _signed64(sum(block_mask[j] for j in range(blocks) if j not in s))
-        for s in subsets
-    ]
-    sig = sig.cache()  # same materialization barrier as the shallow path
-    banded = sig.select(
-        F.col(id_col).alias("id"),
-        F.col(sig_col).alias("sig"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("table"),
-                        F.col(sig_col).bitwiseAND(F.lit(keep[t])).alias("key"),
-                    )
-                    for t in range(len(subsets))
-                ]
-            )
-        ).alias("tb"),
-    ).select("id", "sig", "tb.table", "tb.key")
-    a = banded.select(F.col("id").alias(a_id), F.col("sig").alias("sh_a"), "table", "key")
-    b = banded.select(F.col("id").alias(b_id), F.col("sig").alias("sh_b"), "table", "key")
-    first_agree = "CASE " + " ".join(
-        f"WHEN ((sh_a ^ sh_b) & CAST({keep[t]} AS BIGINT)) = 0 THEN {t}"
-        for t in range(len(subsets))
-    ) + " END"
-    ham = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        a.join(b, ["table", "key"])
-        .filter(F.col(a_id) < F.col(b_id))
-        .filter(F.col("table") == F.expr(first_agree))
-        .withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(a_id, b_id, "hamming")
-    )
+    cands = a.join(b, ["chunk", "key"]).filter(F.col(a_id) < F.col(b_id))
+    return ph.verify(cands, "sh_a", "sh_b").select(a_id, b_id, "hamming")
 
 
 def simhash_pairs(
@@ -1259,36 +1146,15 @@ def simhash_pairs(
     id_col: str,
     text_col: str,
     max_hamming: int = 3,
-    portable: bool = False,
-    blocks: int | None = None,
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Near-dup pairs by SimHash Hamming distance <= max_hamming
-    (pigeonhole bucketing + exact popcount verify — see hamming_pairs
-    for the completeness argument and shuffle accounting).
-
-    The blocking depth defaults to lsh_planner.hamming_plan's
-    cost-model choice — pass ``n_docs`` (a corpus-size estimate; a
-    catalog rowcount, never a fresh count job) to let it trade table
-    fan-out against expected bucket collisions: at fixture scale the
-    classic max_hamming+1 split wins, at 10^9 docs the planner moves
-    to deeper blocking whose longer keys keep buckets sparse. Every
-    design in the space has recall exactly 1.0 (pigeonhole), so the
-    OUTPUT is blocking-independent — only the cost moves, which is
-    what lets the d05 oracle stay valid for any planner choice.
-
-    ``portable=True`` builds the signatures from the portable
-    polynomial token hash instead of xxhash64, making the whole pair
-    set re-derivable by any SQL engine (the d05 oracle brute-forces
-    it); the default keeps xxhash64 for raw speed."""
-    bits = PORTABLE_SIMHASH_BITS if portable else _SIMHASH_BITS
-    if blocks is None:
-        from kaylee_spark.operators.lsh_planner import hamming_plan
-
-        blocks = hamming_plan(max_hamming, bits, n_docs=n_docs).blocks
-    sig = simhash(df, id_col, text_col, portable=portable)
+    (pigeonhole bucketing + exact popcount verify — see Pigeonhole
+    for the completeness argument). The signatures are portable, so
+    any SQL engine can re-derive the whole pair set (the d05 oracle
+    brute-forces it)."""
+    sig = simhash(df, id_col, text_col)
     return hamming_pairs(
-        sig, max_hamming, bits, id_col="doc", sig_col="simhash", out_prefix="doc", blocks=blocks
+        sig, max_hamming, PORTABLE_SIMHASH_BITS, id_col="doc", sig_col="simhash", out_prefix="doc"
     )
 
 
@@ -1696,40 +1562,16 @@ def hamming_probe(
     Duplicate meetings dedup arithmetically (first agreeing chunk of
     the XOR — both signatures ride the join), never via a distinct.
 
-    Output: (``corpus_id``, ``probe_id``, hamming), exactly once.
+    Output: (``corpus_id``, ``probe_id``, hamming), exactly once; when
+    the two id names coincide they come out as ``<id>_c``/``<id>_p``.
     """
-    chunks = max_hamming + 1
-    if bits < chunks:
-        # width would floor to 0 and every chunk key would be 0 —
-        # still complete, but silently a full corpus×probe cross
-        # product. Degenerate parameters must fail loudly (ADVICE r11).
-        raise ValueError(
-            f"hamming_probe needs bits >= max_hamming + 1 "
-            f"(got bits={bits}, max_hamming={max_hamming})"
-        )
-    # bits % chunks high-order remainder bits are left out of every
-    # chunk key: bucketing is weaker (more candidates) but the exact
-    # popcount verify keeps the output correct.
-    width = bits // chunks
-    mask = (1 << width) - 1
+    ph = Pigeonhole(max_hamming, bits)
 
     def banded(df: DataFrame, idc: str, out_id: str, out_sig: str) -> DataFrame:
         return df.select(
             F.col(idc).alias(out_id),
             F.col(sig_col).alias(out_sig),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("chunk"),
-                            F.shiftrightunsigned(F.col(sig_col), c * width)
-                            .bitwiseAND(F.lit(mask))
-                            .alias("key"),
-                        )
-                        for c in range(chunks)
-                    ]
-                )
-            ).alias("cb"),
+            ph.keys(sig_col).alias("cb"),
         ).select(out_id, out_sig, "cb.chunk", "cb.key")
 
     out_c = f"{corpus_id}_c" if corpus_id == probe_id else corpus_id
@@ -1738,16 +1580,5 @@ def hamming_probe(
     # Catalyst re-evaluates the signature fold per exploded chunk row
     corp = banded(corpus_sig.localCheckpoint(eager=True), corpus_id, out_c, "sh_c")
     prob = banded(probe_sig.localCheckpoint(eager=True), probe_id, out_p, "sh_p")
-    first_agree = "CASE " + " ".join(
-        f"WHEN (shiftrightunsigned(sh_c, {c * width}) & {mask}) = "
-        f"(shiftrightunsigned(sh_p, {c * width}) & {mask}) THEN {c}"
-        for c in range(chunks)
-    ) + " END"
-    ham = F.bit_count(F.col("sh_c").bitwiseXOR(F.col("sh_p")))
-    return (
-        corp.join(F.broadcast(prob), ["chunk", "key"])
-        .filter(F.col("chunk") == F.expr(first_agree))
-        .withColumn("hamming", ham.cast("int"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select(out_c, out_p, "hamming")
-    )
+    cands = corp.join(F.broadcast(prob), ["chunk", "key"])
+    return ph.verify(cands, "sh_c", "sh_p").select(out_c, out_p, "hamming")

@@ -3,17 +3,13 @@ for custom optimizer work in this engine (everything relational is
 Catalyst's job; LSH banding/table choice is a *library-level* cost
 decision Spark cannot make for us).
 
-Five pure planners, no Spark dependency, fully deterministic:
+Four pure planners, no Spark dependency, fully deterministic:
 
 - ``minhash_plan``      — (bands, rows) for banded MinHash from the
                           standard S-curve P(candidate) = 1-(1-s^r)^b.
 - ``signlsh_plan``      — (tables, planes) for random-hyperplane
                           (sign) LSH from the angular collision law
                           q(s) = 1 - arccos(s)/pi.
-- ``hamming_plan``      — block count for pigeonhole Hamming-ball
-                          search (SimHash, d05): every design in the
-                          space has recall exactly 1.0, so the choice
-                          is purely fan-out vs expected collisions.
 - ``plan_max_df``       — the document-frequency cap for inverted-
                           index exact-Jaccard (d03/d12/d16), chosen
                           from a df histogram so the Sigma df^2
@@ -22,10 +18,15 @@ Five pure planners, no Spark dependency, fully deterministic:
                           (d06): exact inverted-index vs LSH+verify,
                           decided from the same df histogram.
 
-All five minimize *downstream verified work* (candidate volume)
+All four minimize *downstream verified work* (candidate volume)
 subject to a recall floor at the caller's threshold — the objective
 that matters at 100 TB, where every surviving candidate pays an exact
 verification join. Outputs are recorded per-query in docs/SCALE.md.
+
+SimHash's Hamming search (dedup.Pigeonhole, d05/s03/s12/d23) has no
+planner: its max_hamming+1 chunk split is complete by construction,
+and a deeper blocking pays off only once a corpus-size estimate says
+buckets crowd, which no caller has at plan time.
 
 Planner ~ reference: sdiehl/kaylee has no analogue (no optimizer at
 all); this is north-star scope per SURVEY §4.2.
@@ -194,92 +195,6 @@ def signlsh_plan(
             f"recall {target_recall} at cosine {cos_threshold}"
         )
     return best
-
-
-@dataclass(frozen=True)
-class HammingPlan:
-    """A pigeonhole blocking design for Hamming-ball search (SimHash
-    near-dup, d05): the ``bits``-wide signature splits into ``blocks``
-    disjoint blocks and one bucket table is built per ``radius``-subset
-    of blocks (key = every block OUTSIDE the subset). Any pair within
-    Hamming distance ``radius`` has all differing bits inside SOME
-    radius-subset, so its table keys them equal — recall is exactly
-    1.0 for EVERY design in the space; the planner only trades cost.
-
-    ``blocks = radius + 1`` is the classic single-agreeing-chunk
-    pigeonhole (tables = radius+1, shortest keys); deeper blocking
-    buys exponentially longer keys (fewer false candidates) for a
-    combinatorial table fan-out — the Manku et al. WWW'07 trade.
-    """
-
-    bits: int
-    radius: int
-    blocks: int
-    tables: int
-    keyed_bits: int
-    exp_banded_rows: float
-    exp_candidates: float
-    cost: float
-
-
-def hamming_plan(
-    radius: int,
-    bits: int = 62,
-    n_docs: int | None = None,
-    max_tables: int = 64,
-) -> HammingPlan:
-    """Choose the block count for pigeonhole Hamming search.
-
-    Cost model (uniform-bit signatures): a design with c blocks pays
-    ``tables * N`` banded rows through the bucket shuffle plus an
-    expected ``tables * C(N,2) / 2^keyed_bits`` false-candidate pairs
-    into the exact popcount verify, where keyed_bits =
-    (bits // c) * (c - radius). Minimizing the sum picks the shallow
-    c = radius+1 design while buckets stay sparse and migrates to
-    deeper blocking once expected collisions dominate the fan-out —
-    at 10^9 docs the collision term is everything, which is why the
-    100 TB design differs from the fixture's.
-
-    ``n_docs=None`` (size unknown at plan time) returns the
-    minimal-fan-out c = radius+1 design — the N->0 limit of the cost
-    model and the cheapest complete construction.
-    """
-    if radius < 0:
-        raise ValueError("radius must be >= 0")
-    if bits < radius + 1:
-        raise ValueError(f"bits={bits} cannot host {radius + 1} non-empty blocks")
-    designs: list[HammingPlan] = []
-    n = float(n_docs) if n_docs else 0.0
-    for c in range(radius + 1, bits + 1):
-        width = bits // c
-        if width < 1:
-            break
-        tables = math.comb(c, radius)
-        if tables > max_tables:
-            continue
-        keyed = width * (c - radius)
-        banded = tables * n
-        cands = tables * (n * (n - 1.0) / 2.0) / float(2**keyed)
-        designs.append(
-            HammingPlan(
-                bits=bits,
-                radius=radius,
-                blocks=c,
-                tables=tables,
-                keyed_bits=keyed,
-                exp_banded_rows=banded,
-                exp_candidates=cands,
-                cost=banded + cands,
-            )
-        )
-    if not designs:
-        raise ValueError(
-            f"no blocking with <= {max_tables} tables exists for "
-            f"radius {radius} over {bits} bits"
-        )
-    # min cost; ties (e.g. n_docs=None makes every cost 0) break toward
-    # the fewest tables, then the shallowest split
-    return min(designs, key=lambda p: (p.cost, p.tables, p.blocks))
 
 
 def candidate_pairs_bound(df_histogram: list[tuple[int, int]], max_df: int) -> int:

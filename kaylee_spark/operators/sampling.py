@@ -29,27 +29,6 @@ def _hash_bucket(key: Column | str, seed: int) -> Column:
     return F.pmod(F.xxhash64(c, F.lit(seed)), F.lit(_BUCKETS))
 
 
-def stratified_sample(
-    df: DataFrame, key: str, strata_col: str, fractions: dict, seed: int = 42
-) -> DataFrame:
-    """Per-stratum deterministic sampling (e.g. per-language corpus
-    balancing): `fractions` maps stratum value -> keep fraction; strata
-    absent from the map are dropped.
-
-    One codegen'd CASE over the stratum column — no per-stratum jobs,
-    no shuffle (contrast: df.sampleBy is Bernoulli and irreproducible
-    under retries).
-    """
-    bucket = _hash_bucket(key, seed)
-    expr = None
-    for value, frac in fractions.items():
-        cond = (F.col(strata_col) == F.lit(value)) & (bucket < int(frac * _BUCKETS))
-        expr = cond if expr is None else (expr | cond)
-    if expr is None:
-        raise ValueError("fractions must not be empty")
-    return df.filter(expr)
-
-
 def train_eval_split(
     df: DataFrame, key: str, eval_fraction: float = 0.1, seed: int = 42
 ) -> tuple[DataFrame, DataFrame]:
@@ -64,40 +43,6 @@ def train_eval_split(
     bucket = _hash_bucket(key, seed)
     threshold = int(eval_fraction * _BUCKETS)
     return df.filter(bucket >= threshold), df.filter(bucket < threshold)
-
-
-def weighted_sample_k(
-    df: DataFrame, key: str, weight_col: str, k: int, seed: int = 42
-) -> DataFrame:
-    """Deterministic weighted sample WITHOUT replacement, exactly k rows
-    (or all rows with positive weight, if fewer).
-
-    Efraimidis–Spirakis A-ES: each row scores u^(1/w) where u is the
-    seeded-hash uniform of its key and w its weight; the k largest
-    scores ARE a weighted sample without replacement. With all weights
-    equal it degrades to a uniform exact-k sample (the distributed,
-    deterministic replacement for driver-side reservoir sampling).
-
-    Scale shape: the score is one codegen'd expression and the top-k is
-    TakeOrderedAndProject — per-partition heaps of size k, then a
-    single k-row merge on the driver; no global sort, no shuffle of the
-    data. Rows with weight <= 0 or null are excluded (selection
-    probability zero). Ties (identical key hash AND weight) break on
-    the key itself, so the sample is a pure function of (data, seed) —
-    stable under retries, partitioning, and cluster size, same contract
-    as everything else in this module.
-    """
-    if k <= 0:
-        raise ValueError("k must be positive")
-    u = (_hash_bucket(key, seed) + F.lit(0.5)) / F.lit(_BUCKETS)
-    score = F.pow(u, F.lit(1.0) / F.col(weight_col))
-    return (
-        df.filter(F.col(weight_col) > 0)
-        .withColumn("_es_score", score)
-        .orderBy(F.desc("_es_score"), F.col(key))
-        .limit(k)
-        .drop("_es_score")
-    )
 
 
 def stratified_sample_k(
@@ -115,7 +60,8 @@ def stratified_sample_k(
     Skew note: a hot stratum funnels through one task here (window
     rank). For exact-k that is inherent (k-selection needs the
     stratum's candidates together); when approximate per-stratum rates
-    suffice, use ``stratified_sample`` (scan-speed, no shuffle).
+    suffice, use ``portable_stratified_sample`` (scan-speed, no
+    shuffle).
     """
     from pyspark.sql import Window
 
@@ -198,7 +144,7 @@ def portable_bucket(key: Column | str) -> Column:
     """Bucket in [0, 1e6) from PURE INTEGER arithmetic:
     ``((key mod (2^31-1)) * 2654435761) mod 1e6``.
 
-    xxhash64 (the production path above) exists only inside Spark, so
+    xxhash64 (``_hash_bucket`` above) exists only inside Spark, so
     hash-membership sampling can't be re-derived by an external SQL
     engine for audit. This multiplicative hash is three integer ops
     any engine evaluates identically — the sample membership itself
@@ -206,8 +152,7 @@ def portable_bucket(key: Column | str) -> Column:
     a corpus sample without rerunning Spark. The 2^31-1 pre-fold keeps
     the product inside int64 for arbitrary bigint keys. Mixing is
     Knuth-multiplicative: amply uniform for sampling rates, weaker
-    than xxhash64 for adversarial/clustered keys — keep the seeded
-    xxhash64 path when cross-engine verification isn't required.
+    than xxhash64 for adversarial/clustered keys.
     """
     c = F.col(key) if isinstance(key, str) else key
     return (c % F.lit(_PORTABLE_FOLD)) * F.lit(PORTABLE_MULT) % F.lit(PORTABLE_PPM)
@@ -221,10 +166,12 @@ def portable_bucket_sql(key_expr: str) -> str:
 def portable_stratified_sample(
     df: DataFrame, key: str, strata_col: str, ppm: dict[str, int], default_ppm: int = 0
 ) -> DataFrame:
-    """Per-stratum sampling with portable-hash membership: keep a row
-    when its bucket < its stratum's parts-per-million rate. Same
-    contract as stratified_sample (pure function of the data, no
-    shuffle, single codegen'd CASE) but every kept row is provable by
+    """Per-stratum deterministic sampling (e.g. per-language corpus
+    balancing): keep a row when its portable bucket < its stratum's
+    parts-per-million rate; strata absent from ``ppm`` keep
+    ``default_ppm``. A pure function of the data — no shuffle, one
+    codegen'd CASE (contrast: df.sampleBy is Bernoulli and
+    irreproducible under retries) — and every kept row is provable by
     any SQL engine."""
     rate = None
     for value, p in ppm.items():
@@ -237,10 +184,16 @@ def portable_stratified_sample(
 def weighted_sample_k_portable(
     df: DataFrame, key: str, weight_col: str, k: int
 ) -> DataFrame:
-    """Oracle-verifiable twin of weighted_sample_k (the d05/t16
-    portability pattern): same Efraimidis–Spirakis exactly-k weighted
-    sample without replacement, but every ingredient is re-derivable
-    by an external SQL engine —
+    """Deterministic weighted sample WITHOUT replacement, exactly k rows
+    (or all rows with positive weight, if fewer), keyed by an integer
+    ``key``.
+
+    Efraimidis–Spirakis A-ES: each row scores u^(1/w) where u is the
+    uniform of its key and w its weight; the k largest scores ARE a
+    weighted sample without replacement. With all weights equal it
+    degrades to a uniform exact-k sample (the distributed,
+    deterministic replacement for driver-side reservoir sampling).
+    Every ingredient is re-derivable by an external SQL engine —
 
     - uniform: u = (portable_bucket(key) + 0.5) / 1e6, pure integer
       arithmetic then ONE exact IEEE division;
@@ -251,10 +204,10 @@ def weighted_sample_k_portable(
       TakeOrderedAndProject, per-partition heaps, no global sort, no
       data shuffle.
 
-    Production samplers without a cross-engine audit requirement
-    should prefer weighted_sample_k (seeded xxhash64 — stronger mixing
-    on adversarial/clustered keys). Rows with weight <= 0 or null are
-    excluded, as in the sibling."""
+    Rows with weight <= 0 or null are excluded (selection probability
+    zero). Ties break on the key itself, so the sample is a pure
+    function of the data — stable under retries, partitioning and
+    cluster size."""
     if k <= 0:
         raise ValueError("k must be positive")
     u = (portable_bucket(key) + F.lit(0.5)) / F.lit(float(PORTABLE_PPM))

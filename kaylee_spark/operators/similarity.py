@@ -313,48 +313,6 @@ def ivf_topk(
     return _rerank_topk(cands, q, assigned.select("neighbor_id", "cv"), k, dim, parity_rerank)
 
 
-def embedding_neardup_pairs(
-    corpus: DataFrame,
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    n_tables: int = 1,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
-) -> DataFrame:
-    """Embedding-cosine near-duplicate pairs via multi-table LSH self-join.
-
-    A pair is a candidate if it shares a sign-signature bucket in ANY of
-    the n_tables independent tables; candidates are deduped on the bare
-    id pair (ids only through the shuffle — never dim-wide vectors) and
-    exact-cosine verified. Recall tunes via (n_planes, n_tables): high
-    thresholds need one table of many planes; moderate thresholds need
-    several tables of few planes (s-curve, same math as MinHash bands).
-    Cost ~ sum of squared bucket sizes per table, not n^2.
-    """
-    c = corpus.select(F.col(id_col).alias("vid"), _as_double(F.col(vec_col)).alias("v"))
-
-    tables = [random_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
-    banded = c.select("vid", F.posexplode(_table_signatures("v", tables)).alias("table", "bucket"))
-    a = banded.select(F.col("vid").alias("id_a"), "table", "bucket")
-    b = banded.select(F.col("vid").alias("id_b"), "table", "bucket")
-    cands = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    cnorm = _with_normalized(c, "v", "vn")
-    return (
-        cands.join(cnorm.select(F.col("vid").alias("id_a"), F.col("vn").alias("va")), "id_a")
-        .join(cnorm.select(F.col("vid").alias("id_b"), F.col("vn").alias("vb")), "id_b")
-        .withColumn("cosine_sim", dot(F.col("va"), F.col("vb")).cast("double"))
-        .filter(F.col("cosine_sim") >= threshold)
-        .select("id_a", "id_b", "cosine_sim")
-    )
-
-
 #: Sign-signature constants: ±1 hyperplane entries derived from the
 #: Knuth multiplicative hash folded through the Mersenne prime 2^31-1
 #: — three integer ops any engine (or auditor) reproduces exactly.
@@ -445,9 +403,7 @@ def sign_neardup_pairs(
     signature predicate is integer-exact, and the pigeonhole bucketed
     plan (operators/dedup.hamming_pairs) is COMPLETE for it — so the
     sub-quadratic Spark plan emits exactly the pair set a quadratic
-    scan (or the DuckDB oracle) defines. The float-LSH + exact-cosine
-    path above (embedding_neardup_pairs) remains the recall-tunable
-    production alternative."""
+    scan (or the DuckDB oracle) defines."""
     sig = sign_signatures(corpus, bits=bits, dim=dim, id_col=id_col, vec_col=vec_col)
     from kaylee_spark.operators.dedup import hamming_pairs
 

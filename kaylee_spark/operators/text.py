@@ -172,24 +172,14 @@ def lang_id(text_col="text") -> Column:
     return out
 
 
-def fingerprint(text_col="text", modulus: int = (1 << 31) - 1, base: int = 257) -> Column:
+def fingerprint_portable(text_col="text", modulus: int = (1 << 31) - 1, base: int = 257) -> Column:
     """Polynomial rolling hash over tokens (order-sensitive document
     fingerprint): fp = sum(base^i * h(tok_i)) mod p, folded
-    sequentially with aggregate() -> deterministic. Modulus is Mersenne
-    2^31-1 so acc*base + h stays well inside int64 (no ANSI overflow)."""
-    toks = tokens(text_col)
-    return F.aggregate(
-        toks,
-        F.lit(0).cast("long"),
-        lambda acc, t: (acc * base + F.pmod(F.xxhash64(t), F.lit(modulus))) % F.lit(modulus),
-    ).cast("long")
-
-
-def fingerprint_portable(text_col="text", modulus: int = (1 << 31) - 1, base: int = 257) -> Column:
-    """Rolling-hash fingerprint using a token hash expressible in plain
-    SQL (for oracle cross-checks): h(tok) = ascii(first)*96031 +
-    ascii(last)*1299709 + length(tok)*2654435761, all mod p, folded in
-    token order. Production code should prefer ``fingerprint`` (xxhash64)."""
+    sequentially with aggregate() -> deterministic. The token hash is
+    expressible in plain SQL, so an oracle can re-derive it: h(tok) =
+    ascii(first)*96031 + ascii(last)*1299709 + length(tok)*2654435761,
+    all mod p. The modulus is Mersenne 2^31-1, so acc*base + h stays
+    well inside int64 (no ANSI overflow)."""
     toks = tokens(text_col)
     tok_h = lambda t: (  # noqa: E731
         F.ascii(t.substr(F.lit(1), F.lit(1))) * F.lit(96031)

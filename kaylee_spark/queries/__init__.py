@@ -16,11 +16,13 @@ Contract per entry (see repo driver docs):
   then records a rows-only check).
 
 Determinism rules used throughout (so value-hashes match bit-for-bit):
-- SUM/AVG over double columns go through DECIMAL(18,2) accumulation
-  then cast back to double: decimal addition is exact and
-  order-independent, so Spark's nondeterministic partial-agg merge
-  order and DuckDB's scan order produce identical bits. A raw double
-  SUM would differ in the last ulp from run to run.
+- SUM/AVG over double columns go through ``functions.money_sum``
+  (``dec_sum``/``dec_avg`` on top of it): each value is rounded to its
+  scale-6 integer and summed exactly on long limbs, then cast back to
+  double. Integer addition is exact and order-independent, so Spark's
+  nondeterministic partial-agg merge order and DuckDB's scan order
+  produce identical bits. A raw double SUM would differ in the last
+  ulp from run to run.
 - every LIMIT/top-k query adds a unique tie-break column to its sort.
 """
 

@@ -194,9 +194,7 @@ def d04_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator default. Driver-verifiable because that config has
     recall 1.0 on the fixture at J>=0.5 (checked exhaustively in
     tests/test_dedup.py), so the verified output EQUALS the exact
-    Jaccard pair set and shares d03's SQL oracle shape. The pure
-    estimate-verified variant (no exact stage) remains exercised via
-    D.minhash_lsh_pairs in tests with recall bounds.
+    Jaccard pair set and shares d03's SQL oracle shape.
     """
     return D.minhash_lsh_verified_pairs(
         load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.5
@@ -263,7 +261,7 @@ def _d05_oracle() -> str:
     element equals Spark's 0-seeded aggregate() because 0*b + c1 =
     c1), the same per-bit votes, the same sign rule — then cross-
     joins signatures and popcounts. Pigeonhole bucketing is COMPLETE
-    for hamming <= d (operators/dedup.hamming_pairs), so the bucketed
+    for hamming <= d (operators/dedup.Pigeonhole), so the bucketed
     Spark plan must emit exactly this quadratic reference set.
     """
     m, (b1, b2) = D.PORTABLE_HASH_MOD, D.PORTABLE_HASH_BASES
@@ -297,19 +295,14 @@ def _d05_oracle() -> str:
 
 @query("d05_simhash_pairs", oracle=_d05_oracle(), extra=True)
 def d05_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs (Hamming<=6 via pigeonhole bucketing +
-    exact popcount verify), built on the PORTABLE polynomial token
-    hash so the full pair set is re-derivable by the DuckDB oracle
-    (three integer ops per fold step — any engine computes them
-    identically). The blocking depth is lsh_planner.hamming_plan's
-    cost-model choice (7 blocks at unknown corpus size; deeper
-    multi-table blocking at 10^9 docs) — every design has pigeonhole
-    recall 1.0, so this oracle verifies ANY planner output. The
-    xxhash64 signature path stays available (portable=False) for
-    ingests that don't need external audit."""
-    return D.simhash_pairs(
-        load_table(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=6, portable=True
-    )
+    """SimHash near-dup pairs (Hamming<=6 via pigeonhole bucketing on
+    7 chunks of the 62-bit signature + exact popcount verify), built on
+    the PORTABLE polynomial token hash so the full pair set is
+    re-derivable by the DuckDB oracle (three integer ops per fold
+    step — any engine computes them identically). Pigeonhole recall
+    is 1.0, so the bucketed plan must emit exactly the oracle's
+    quadratic pair set."""
+    return D.simhash_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text", max_hamming=6)
 
 
 @query(

@@ -145,13 +145,10 @@ def s03_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-dup pairs by 24-bit sign-signature Hamming
     distance <= 3 (SRP-LSH: hamming/bits estimates angle/pi, so <=3
     of 24 is the ~22-degree near-duplicate cone). Signatures are
-    integer-exact (±1 integer hyperplanes, DECIMAL projections) and
+    integer-exact (±1 integer hyperplanes, fixed-point BIGINT projections) and
     come off the scan with no shuffle; pairs come from the COMPLETE
     pigeonhole-bucketed hamming join — sub-quadratic plan, quadratic-
-    verified output. The float-LSH + exact-cosine threshold variant
-    (operators/similarity.embedding_neardup_pairs) remains the
-    recall-tunable production path, property-tested in
-    tests/test_similarity.py."""
+    verified output."""
     emb = load_table(spark, sf_dir, "embeddings")
     return S.sign_neardup_pairs(emb, max_hamming=3, dim=64)
 

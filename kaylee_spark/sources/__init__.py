@@ -40,36 +40,51 @@ def table_path(sf_dir: str, name: str) -> str:
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one fixture table (pushdown/pruning-capable).
 
-    Some generations of the events fixture store ``ts`` as parquet
-    TIMESTAMP(NANOS), which Spark rejects outright; for those, read it
-    as nanos-since-epoch long and floor-convert to a microsecond
-    timestamp — exactly what DuckDB's micro-precision TIMESTAMP does,
-    so both engines see identical values. Current fixtures store
-    ``ts`` as TIMESTAMP(MICROS), which reads as TIMESTAMP_NTZ with no
-    conversion needed — so the legacy path is gated on the dtype
-    actually read, never applied unconditionally.
+    Current fixtures store the events ``ts`` as parquet
+    TIMESTAMP(MICROS), which reads as TIMESTAMP_NTZ with no conversion.
+    Some older generations stored TIMESTAMP(NANOS), which Spark rejects
+    outright; for those, read it as nanos-since-epoch long and
+    floor-convert to a microsecond timestamp — exactly what DuckDB's
+    micro-precision TIMESTAMP does, so both engines see identical
+    values. The footer says which (pyarrow reads it, no Spark job), and
+    only a NANOS file reads under ``nanosAsLong``: scoped to the read,
+    which is materialized inside the scope so no later plan of the
+    frame needs the conf.
     """
-    if name == "events":
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    path = table_path(sf_dir, name)
+    if name == "events" and _footer_ts_unit(path) == "ns":
         from pyspark.sql import functions as F
 
-        df = spark.read.parquet(table_path(sf_dir, name))
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # legacy nanos fixture. Integer DIV, not /: nanos-since-epoch
-            # (~1.7e18) exceeds double precision, so a float divide would
-            # be off by ~hundreds of ns. Produce TIMESTAMP_NTZ via pure
-            # epoch arithmetic: every other fixture column reads as NTZ,
-            # and an LTZ here would shift window boundaries under a
-            # non-UTC driver session.
-            return df.withColumn(
-                "ts",
-                F.expr(
-                    "timestampadd(MICROSECOND, ts DIV 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
+        from kaylee_spark.operators.skew import scoped_conf
+
+        with scoped_conf(spark, {"spark.sql.legacy.parquet.nanosAsLong": "true"}):
+            # Integer DIV, not /: nanos-since-epoch (~1.7e18) exceeds
+            # double precision, so a float divide would be off by
+            # ~hundreds of ns. Produce TIMESTAMP_NTZ via pure epoch
+            # arithmetic: every other fixture column reads as NTZ, and
+            # an LTZ here would shift window boundaries under a non-UTC
+            # driver session.
+            return (
+                spark.read.parquet(path)
+                .withColumn(
+                    "ts",
+                    F.expr(
+                        "timestampadd(MICROSECOND, ts DIV 1000, TIMESTAMP_NTZ '1970-01-01 00:00:00')"
+                    ),
+                )
+                .localCheckpoint(eager=True)
             )
-        return df
-    return spark.read.parquet(table_path(sf_dir, name))
+    return spark.read.parquet(path)
+
+
+def _footer_ts_unit(path: str) -> str | None:
+    """The time unit of the parquet ``ts`` column ("us", "ns", ...),
+    read from the footer of the file (or a directory's first file)."""
+    import pyarrow as pa
+    import pyarrow.dataset as ds
+
+    t = ds.dataset(path, format="parquet").schema.field("ts").type
+    return t.unit if pa.types.is_timestamp(t) else None
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -128,27 +128,15 @@ LEAK_QUERIES = [
 @pytest.mark.parametrize("name", LEAK_QUERIES)
 def test_query_leaves_session_conf_unchanged(spark, sf_dir, name):
     from kaylee_spark.queries import load_everything
-    from kaylee_spark.sources import load_table
 
-    # load_table("events") sets spark.sql.legacy.parquet.nanosAsLong for
-    # the life of the session (the one conf write outside scoped_conf,
-    # see test_no_conf_write_outside_scoped_conf); load it once so the
-    # snapshot already holds it.
-    load_table(spark, sf_dir, "events")
     before = spark.conf.getAll
     load_everything()[name].fn(spark, sf_dir).count()
     assert spark.conf.getAll == before
 
 
-# (module path relative to the repo, enclosing function, conf key)
-ALLOWED_CONF_WRITES = {
-    ("kaylee_spark/sources/__init__.py", "load_table", "spark.sql.legacy.parquet.nanosAsLong"),
-}
-
-
 def _conf_writes(path: str):
-    """(function, key-or-None, line) for each ``<x>.conf.set/unset``
-    call in one module; key is the literal first argument if any."""
+    """(function, line) for each ``<x>.conf.set/unset`` call in one
+    module."""
     tree = ast.parse(open(path).read(), filename=path)
     out = []
 
@@ -164,9 +152,7 @@ def _conf_writes(path: str):
                 and isinstance(child.func.value, ast.Attribute)
                 and child.func.value.attr == "conf"
             ):
-                arg = child.args[0] if child.args else None
-                key = arg.value if isinstance(arg, ast.Constant) else None
-                out.append((func, key, child.lineno))
+                out.append((func, child.lineno))
             visit(child, func)
 
     visit(tree, None)
@@ -188,10 +174,10 @@ def test_no_conf_write_outside_scoped_conf():
     offenders = []
     n_scoped = 0
     for rel, path in _package_modules():
-        for func, key, line in _conf_writes(path):
+        for func, line in _conf_writes(path):
             if rel == "kaylee_spark/operators/skew.py" and func == "scoped_conf":
                 n_scoped += 1
-            elif (rel, func, key) not in ALLOWED_CONF_WRITES:
+            else:
                 offenders.append(f"{rel}:{line} in {func}()")
     assert n_scoped, "the guard no longer sees scoped_conf's own writes"
     assert not offenders, "conf writes outside scoped_conf: " + ", ".join(offenders)

@@ -3,12 +3,15 @@
 An AST reference scan over the product code (the package, tools/,
 perfbench/ without its self-tests, bench.py and __spark_entry__.py) finds every top-level
 function or class under kaylee_spark/ that no product code reaches.
-A reference is any identifier: a name, an attribute, an imported name
-or an identifier-shaped string. References from a helper's own body
-do not count, and neither do references from helpers that are
-themselves unreached, so the scan runs to a fixed point. Registry
-queries (``@query``) are roots. Tests are not product code: a helper
-only they call is dead weight unless it is listed in KEEP.
+A reference is a name that the function using it does not bind
+itself (a local variable or parameter of the same name is not the
+helper), an attribute, an imported name, or a string handed to
+``getattr``/``hasattr`` (a column alias of the same name is not).
+References from a helper's own body do not count, and neither do
+references from helpers that are themselves unreached, so the scan
+runs to a fixed point. Registry queries (``@query``) are roots.
+Tests are not product code: a helper only they call is dead weight
+unless it is listed in KEEP.
 """
 
 from __future__ import annotations
@@ -31,12 +34,8 @@ KEEP = {
     "stream_to_parquet": "README's checkpointed parquet streaming sink",
     "read_results": "the committed-manifest reader of the results sink",
     "repetition_profile": "reference for the repetition filter's reached twin",
-    "minhash_lsh_pairs": "README's MinHash-LSH near-dedup",
     "shingles": "reference for the hashed shingling twin",
-    "stratified_sample": "README's deterministic stratified split",
     "stratified_sample_k": "README's exact-k-per-stratum sample",
-    "weighted_sample_k": "README's Efraimidis-Spirakis weighted sample",
-    "embedding_neardup_pairs": "README's embedding near-dup",
 }
 
 
@@ -50,18 +49,53 @@ def _files(roots) -> list[Path]:
     return out
 
 
-def _identifiers(node: ast.AST):
-    for n in ast.walk(node):
-        if isinstance(n, ast.Name):
-            yield n.id
-        elif isinstance(n, ast.Attribute):
-            yield n.attr
-        elif isinstance(n, ast.alias):
-            yield n.name.rsplit(".", 1)[-1]
-            if n.asname:
-                yield n.asname
-        elif isinstance(n, ast.Constant) and isinstance(n.value, str) and n.value.isidentifier():
-            yield n.value
+_SCOPES = (ast.FunctionDef, ast.AsyncFunctionDef, ast.Lambda)
+
+
+def _own_nodes(scope: ast.AST):
+    """The nodes of ``scope`` outside any scope nested in it."""
+    for child in ast.iter_child_nodes(scope):
+        yield child
+        if not isinstance(child, (*_SCOPES, ast.ClassDef)):
+            yield from _own_nodes(child)
+
+
+def _bound_in(scope: ast.AST) -> set[str]:
+    """Names a function or lambda binds itself: its parameters, the
+    names it assigns and the defs it nests."""
+    args = scope.args
+    params = (*args.posonlyargs, *args.args, *args.kwonlyargs, args.vararg, args.kwarg)
+    bound = {a.arg for a in params if a}
+    for n in _own_nodes(scope):
+        if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Load):
+            bound.add(n.id)
+        elif isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            bound.add(n.name)
+    return bound
+
+
+def _identifiers(node: ast.AST, bound: frozenset = frozenset()):
+    if isinstance(node, _SCOPES):
+        bound = bound | _bound_in(node)
+    if isinstance(node, ast.Name):
+        if node.id not in bound:
+            yield node.id
+    elif isinstance(node, ast.Attribute):
+        yield node.attr
+    elif isinstance(node, ast.alias):
+        yield node.name.rsplit(".", 1)[-1]
+        if node.asname:
+            yield node.asname
+    elif (
+        isinstance(node, ast.Call)
+        and getattr(node.func, "id", None) in ("getattr", "hasattr")
+        and len(node.args) > 1
+        and isinstance(node.args[1], ast.Constant)
+        and isinstance(node.args[1].value, str)
+    ):
+        yield node.args[1].value
+    for child in ast.iter_child_nodes(node):
+        yield from _identifiers(child, bound)
 
 
 def _is_query(node) -> bool:
@@ -125,11 +159,23 @@ def test_scan_counts_each_reference_form(tmp_path, monkeypatch):
         "def self_only(): return self_only()\n"
         "def via_dead(): pass\n"
         "def dead_caller(): return via_dead()\n"
+        "def by_local(): pass\n"
+        "def by_alias(): pass\n"
         "@query('q')\n"
         "def root(): return by_name()\n"
     )
     (tmp_path / "tool.py").write_text(
         "import kaylee_spark.m as m\nm.by_attr()\ngetattr(m, 'by_string')\n"
+        # a local variable and a column alias that share a helper's
+        # name do not reach it
+        "def report(df, by_local=None):\n"
+        "    return by_local, [by_local for by_local in df], df.alias('by_alias')\n"
     )
     monkeypatch.setitem(globals(), "ROOT", tmp_path)
-    assert unreached(("kaylee_spark", "tool.py")) == {"self_only", "via_dead", "dead_caller"}
+    assert unreached(("kaylee_spark", "tool.py")) == {
+        "self_only",
+        "via_dead",
+        "dead_caller",
+        "by_local",
+        "by_alias",
+    }

@@ -39,8 +39,8 @@ def test_minhash_identical_docs_full_signature_match(spark):
         [(1, "w1 w2 w3 w4 w5 w6 w7 w8"), (2, "w1 w2 w3 w4 w5 w6 w7 w8"), (3, "z1 z2 z3 z4 z5 z6 z7 z8")],
         ["doc_id", "text"],
     )
-    pairs = D.minhash_lsh_pairs(df, "doc_id", "text", threshold=0.9).collect()
-    assert [(r["doc_a"], r["doc_b"], r["est_jaccard"]) for r in pairs] == [(1, 2, 1.0)]
+    pairs = D.minhash_lsh_verified_pairs(df, "doc_id", "text", threshold=0.9).collect()
+    assert [(r["doc_a"], r["doc_b"], r["jaccard"]) for r in pairs] == [(1, 2, 1.0)]
 
 
 def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
@@ -51,7 +51,7 @@ def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
     }
     approx = {
         (r["doc_a"], r["doc_b"])
-        for r in D.minhash_lsh_pairs(docs, "doc_id", "text", n=3, threshold=0.3).collect()
+        for r in D.minhash_lsh_verified_pairs(docs, "doc_id", "text", n=3, threshold=0.3).collect()
     }
     if exact:
         recall = len(exact & approx) / len(exact)
@@ -70,14 +70,11 @@ def test_simhash_identical_docs(spark):
     assert {(r["doc_a"], r["doc_b"]) for r in pairs} >= {(1, 2)}
 
 
-def test_hamming_pairs_deep_blocking_matches_classic(spark):
-    """hamming_plan's large-N design (deep blocking, one table per
-    radius-subset) must emit EXACTLY the classic radius+1 design's
-    pair set — pigeonhole recall is 1.0 at every depth, the planner
-    only moves cost. Planted signatures spread the differing bits
-    across blocks (the adversarial case for any blocking)."""
-    from kaylee_spark.operators.lsh_planner import hamming_plan
-
+def test_hamming_pairs_planted_signatures(spark):
+    """The pigeonhole pair set on planted 62-bit signatures whose
+    differing bits spread across chunks (the adversarial case for any
+    blocking): every pair within distance 3, exactly once, and
+    nothing farther."""
     base = int("10" * 31, 2)  # alternating 62-bit pattern
     sigs = [
         (1, base),
@@ -87,58 +84,11 @@ def test_hamming_pairs_deep_blocking_matches_classic(spark):
         (5, base ^ ((1 << 40) - 1)),                           # far from all
     ]
     df = spark.createDataFrame(sigs, "doc long, simhash long")
-    expected = {(1, 2, 1), (1, 3, 3), (2, 3, 2)}
-
-    classic = {
+    got = sorted(
         (r["doc_a"], r["doc_b"], r["hamming"])
         for r in D.hamming_pairs(df, 3, 62).collect()
-    }
-    assert classic == expected
-
-    deep_plan = hamming_plan(3, 62, n_docs=10**9)
-    assert deep_plan.blocks > 4
-    deep = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in D.hamming_pairs(df, 3, 62, blocks=deep_plan.blocks).collect()
-    }
-    assert deep == expected
-
-    # under-blocked designs cannot guarantee completeness -> refused
-    import pytest
-
-    with pytest.raises(ValueError, match="completeness"):
-        D.hamming_pairs(df, 3, 62, blocks=3)
-
-    # over-deep explicit designs are refused BEFORE plan construction:
-    # blocks=31, max_hamming=3 would need C(31,3)=4495 bucket tables
-    # (hamming_plan caps at 64) — an exploded array that size per row
-    # never finishes compiling
-    with pytest.raises(ValueError, match="bucket tables"):
-        D.hamming_pairs(df, 3, 62, blocks=31)
-
-
-def test_simhash_pairs_output_is_blocking_invariant(spark):
-    """The n_docs hint changes only the plan, never the pair set."""
-    df = spark.createDataFrame(
-        [
-            (1, "w1 w2 w3 w4 w5 w6"),
-            (2, "w1 w2 w3 w4 w5 w6"),  # identical: hamming 0 at any depth
-            (3, "completely different words over here now"),
-        ],
-        ["doc_id", "text"],
     )
-    default = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in D.simhash_pairs(df, "doc_id", "text", max_hamming=6).collect()
-    }
-    at_scale = {
-        (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in D.simhash_pairs(
-            df, "doc_id", "text", max_hamming=6, n_docs=10**9
-        ).collect()
-    }
-    assert default == at_scale
-    assert {(a, b) for a, b, _ in default} >= {(1, 2)}
+    assert got == [(1, 2, 1), (1, 3, 3), (2, 3, 2)]
 
 
 def test_connected_components_literal_graph(spark):
@@ -250,22 +200,15 @@ def test_simhash_golden_signature(spark):
     """Golden pin for the simhash SQL-string rewrite: the signature of
     a known document must stay stable across refactors (any change to
     the vote or reassembly arithmetic flips this)."""
-    df = spark.createDataFrame([(1, "the quick brown fox"), (2, "the quick brown fox")], ["doc_id", "text"])
+    text = "the quick brown fox"
+    df = spark.createDataFrame([(1, text), (2, text)], ["doc_id", "text"])
     sigs = [r["simhash"] for r in D.simhash(df, "doc_id", "text").collect()]
     assert sigs[0] == sigs[1]
     # bit-vote semantics: each bit of the signature is the majority bit
-    # of the token hashes; recompute directly from xxhash64 values
-    from pyspark.sql import functions as F
-
-    hs = [
-        r["h"]
-        for r in df.filter(F.col("doc_id") == 1)
-        .select(F.explode(F.split("text", " ")).alias("t"))
-        .select(F.xxhash64("t").alias("h"))
-        .collect()
-    ]
+    # of the token hashes; recompute from the pure-Python token hash
+    hs = [_py_portable_hash(t) for t in text.split()]
     want = 0
-    for i in range(64):
+    for i in range(D.PORTABLE_SIMHASH_BITS):
         votes = sum(1 if (h >> i) & 1 else -1 for h in hs)
         if votes > 0:
             want |= 1 << i

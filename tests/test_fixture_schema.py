@@ -100,3 +100,35 @@ def test_fixture_loads_rows(spark, sf_dir, table):
     # a loader that errors lazily (analysis-time casts) fails HERE, not
     # deep inside the first query that touches the table
     assert load_table(spark, sf_dir, table).limit(1).count() == 1
+
+
+def test_legacy_nanos_events_read_as_ntz_micros(spark, tmp_path):
+    """An events file whose footer stores ts as TIMESTAMP(NANOS) loads
+    as TIMESTAMP_NTZ floored to the microsecond, and the read leaves
+    no conf behind on the session."""
+    import datetime as dt
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_060_000_000_999]
+    table = pa.table(
+        {
+            "event_id": pa.array([1, 2], pa.int64()),
+            "ts": pa.array(ns, pa.timestamp("ns")),
+            "user_id": pa.array([7, 8], pa.int64()),
+            "event_type": ["view", "click"],
+            "value": [1.5, None],
+            "props": ["{}", "{}"],
+        }
+    )
+    pq.write_table(table, tmp_path / "events.parquet", version="2.6")
+    assert pq.read_schema(tmp_path / "events.parquet").field("ts").type == pa.timestamp("ns")
+    before = spark.conf.getAll
+    df = load_table(spark, str(tmp_path), "events")
+    assert spark.conf.getAll == before
+    assert dict(df.dtypes) == EXPECTED["events"]
+    epoch = dt.datetime(1970, 1, 1)
+    assert [r["ts"] for r in df.orderBy("event_id").collect()] == [
+        epoch + dt.timedelta(microseconds=n // 1000) for n in ns
+    ]

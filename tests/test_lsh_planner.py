@@ -67,38 +67,6 @@ def test_resolve_banding_honors_half_pinned_budget():
         D.resolve_banding(None, 16, 0.5)
 
 
-def test_hamming_plan_defaults_to_classic_pigeonhole():
-    """Unknown corpus size (and fixture-scale sizes) -> the classic
-    radius+1 split, i.e. exactly the shipped d05 designs."""
-    from kaylee_spark.operators.lsh_planner import hamming_plan
-
-    plan = hamming_plan(3, 62)
-    assert (plan.blocks, plan.tables) == (4, 4)
-    assert hamming_plan(6, 62).blocks == 7  # d05's max_hamming=6 design
-    assert hamming_plan(3, 62, n_docs=5_000).blocks == 4
-
-
-def test_hamming_plan_deepens_at_scale():
-    """At 10^9 docs the collision term dominates: the planner must
-    move to deeper blocking (longer keys, more tables) and that design
-    must genuinely beat the classic one under the same cost model."""
-    from kaylee_spark.operators.lsh_planner import hamming_plan
-
-    n = 10**9
-    deep = hamming_plan(3, 62, n_docs=n)
-    assert deep.blocks > 4
-    assert deep.keyed_bits > 15
-    classic_cost = 4 * n + 4 * (n * (n - 1) / 2) / 2**15
-    assert deep.cost < classic_cost / 100
-    # recall is structural (pigeonhole), not probabilistic: every
-    # design the planner can emit keys C(blocks, radius) wildcards
-    assert deep.tables == __import__("math").comb(deep.blocks, 3)
-    with pytest.raises(ValueError):
-        hamming_plan(-1, 62)
-    with pytest.raises(ValueError):
-        hamming_plan(70, 62)
-
-
 def test_signlsh_plan_reproduces_shipped_s02_config():
     """The shipped ANN config (4 planes x 12 tables, 1-bit probe) is
     the planner's own choice at recall 0.9999 / cosine 0.45 / 48 bits
@@ -208,68 +176,3 @@ def test_plans_are_frozen_dataclasses():
     assert isinstance(plan, BandingPlan)
     with pytest.raises(Exception):
         plan.bands = 1
-
-
-def test_hamming_plan_cost_model_matches_measured_candidates(spark):
-    """The planner's expected-candidate model must track MEASURED
-    bucket collisions on uniform signatures — the evidence that the
-    blocking choice is real cost-based planning, not a formula nobody
-    checked. 50k deterministic pseudo-uniform 62-bit signatures:
-    classic 4-block keying (15 keyed bits) must produce ~1e5 collision
-    pairs, the deep 6-block/20-table design (30 keyed bits) a few
-    dozen — a >1000x measured reduction, each within a small factor of
-    its model prediction."""
-    import itertools
-
-    from pyspark.sql import functions as F
-
-    from kaylee_spark.operators.lsh_planner import HammingPlan, hamming_plan
-
-    n, bits, radius = 50_000, 62, 3
-    sigs = spark.range(n).select(
-        # xxhash64 of the id, masked to 62 bits: uniform, deterministic
-        F.shiftrightunsigned(F.xxhash64("id"), 2).alias("sig")
-    )
-
-    def measured_collisions(plan: HammingPlan) -> int:
-        width = bits // plan.blocks
-        subsets = list(itertools.combinations(range(plan.blocks), radius))
-        masks = []
-        for s in subsets:
-            m = 0
-            for j in range(plan.blocks):
-                if j not in s:
-                    m |= ((1 << width) - 1) << (j * width)
-            masks.append(m - (1 << 64) if m >= (1 << 63) else m)
-        banded = sigs.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(t).alias("table"),
-                            F.col("sig").bitwiseAND(F.lit(masks[t])).alias("key"),
-                        )
-                        for t in range(len(subsets))
-                    ]
-                )
-            ).alias("tb")
-        ).select("tb.table", "tb.key")
-        occ = banded.groupBy("table", "key").agg(F.count(F.lit(1)).alias("c")).filter("c > 1")
-        row = occ.select(F.sum(F.expr("c * (c - 1) / 2")).alias("pairs")).first()
-        return int(row["pairs"] or 0)
-
-    classic = hamming_plan(radius, bits, n_docs=5_000)      # blocks = 4
-    deep = hamming_plan(radius, bits, n_docs=10**9)         # deeper
-    assert classic.blocks == 4 and deep.blocks > 4
-
-    # re-predict at THIS n (the plans above carry their own n_docs)
-    def predict(plan: HammingPlan) -> float:
-        keyed = (bits // plan.blocks) * (plan.blocks - radius)
-        return plan.tables * (n * (n - 1) / 2) / 2**keyed
-
-    m_classic, m_deep = measured_collisions(classic), measured_collisions(deep)
-    assert m_classic > 1000 * max(m_deep, 1)          # the reduction is real
-    assert 0.5 * predict(classic) <= m_classic <= 2.0 * predict(classic)
-    # the deep design's expectation is ~23 pairs; Poisson noise is
-    # material at that count, so bound loosely but meaningfully
-    assert m_deep <= 8 * predict(deep)

@@ -66,7 +66,7 @@ def test_text_profile_columns(spark):
         T.token_count("text").alias("n_tokens"),
         T.stopword_ratio("text").alias("stopword_ratio"),
         T.lang_id("text").alias("lang_pred"),
-        T.fingerprint("text").alias("fingerprint"),
+        T.fingerprint_portable("text").alias("fingerprint"),
     )
     prof = {r["doc_id"]: r for r in profiled.collect()}
     assert prof[1]["n_tokens"] == 4
@@ -78,7 +78,7 @@ def test_text_profile_columns(spark):
 
 def test_fingerprint_order_sensitive(spark):
     df = spark.createDataFrame([(1, "a b c"), (2, "c b a")], ["doc_id", "text"])
-    fps = {r["doc_id"]: r["fp"] for r in df.select("doc_id", T.fingerprint("text").alias("fp")).collect()}
+    fps = {r["doc_id"]: r["fp"] for r in df.select("doc_id", T.fingerprint_portable("text").alias("fp")).collect()}
     assert fps[1] != fps[2]
 
 

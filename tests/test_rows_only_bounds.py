@@ -48,28 +48,25 @@ def test_d05_pigeonhole_bucketing_is_complete(spark, sf_dir):
     all-pairs Hamming<=k set computed from the same signatures — the
     pigeonhole guarantee (any pair within k differing bits agrees on
     >=1 of k+1 chunks) has no probabilistic slack, so bucketing may
-    lose nothing. Checked on BOTH signature families: the xxhash64
-    production path (64-bit) and the portable polynomial path
-    (62-bit, the oracle-gated d05 configuration)."""
+    lose nothing."""
     from kaylee_spark.operators.dedup import simhash, simhash_pairs
 
     docs = load_table(spark, sf_dir, "documents")
-    for portable in (False, True):
-        got = {
-            (r.doc_a, r.doc_b, r.hamming)
-            for r in simhash_pairs(docs, "doc_id", "text", max_hamming=6, portable=portable).collect()
-        }
-        sig = simhash(docs, "doc_id", "text", portable=portable)
-        a = sig.select(F.col("doc").alias("doc_a"), F.col("simhash").alias("sh_a"))
-        b = sig.select(F.col("doc").alias("doc_b"), F.col("simhash").alias("sh_b"))
-        brute = (
-            a.crossJoin(b)
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"))
-            .filter(F.col("hamming") <= 6)
-        )
-        want = {(r.doc_a, r.doc_b, r.hamming) for r in brute.collect()}
-        assert got == want, f"portable={portable}"
+    got = {
+        (r.doc_a, r.doc_b, r.hamming)
+        for r in simhash_pairs(docs, "doc_id", "text", max_hamming=6).collect()
+    }
+    sig = simhash(docs, "doc_id", "text")
+    a = sig.select(F.col("doc").alias("doc_a"), F.col("simhash").alias("sh_a"))
+    b = sig.select(F.col("doc").alias("doc_b"), F.col("simhash").alias("sh_b"))
+    brute = (
+        a.crossJoin(b)
+        .filter(F.col("doc_a") < F.col("doc_b"))
+        .withColumn("hamming", F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b"))).cast("int"))
+        .filter(F.col("hamming") <= 6)
+    )
+    want = {(r.doc_a, r.doc_b, r.hamming) for r in brute.collect()}
+    assert got == want
 
 
 def test_s03_bucketed_pairs_equal_brute_force(spark, sf_dir):

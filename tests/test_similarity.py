@@ -94,7 +94,7 @@ def test_embedding_neardup_finds_duplicates(spark):
     near = [0.1 * i + (0.001 if i == 0 else 0.0) for i in range(8)]
     ortho = [1.0 if i == 0 else -0.5 * i for i in range(8)]
     df = spark.createDataFrame([(1, base), (2, near), (3, ortho)], ["vec_id", "embedding"])
-    pairs = S.embedding_neardup_pairs(df, threshold=0.999, n_planes=4, dim=8).collect()
+    pairs = S.sign_neardup_pairs(df, max_hamming=3, dim=8).collect()
     assert {(r["id_a"], r["id_b"]) for r in pairs} == {(1, 2)}
 
 

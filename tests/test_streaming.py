@@ -431,7 +431,7 @@ def test_hamming_guard_degenerate_bits(spark):
     with pytest.raises(ValueError, match="bits >= max_hamming"):
         hamming_probe(df, df, max_hamming=24, bits=24)
     with pytest.raises(ValueError, match="bits >= max_hamming"):
-        D.hamming_pairs(df, 24, 24, blocks=25, id_col="vid", sig_col="sig")
+        D.hamming_pairs(df, 24, 24, id_col="vid", sig_col="sig")
 
 
 def test_rate_source_drain_survives_checkpoint_restart(spark, tmp_path):

@@ -119,57 +119,25 @@ def measure(sf_dir: str) -> dict:
         lambda: D.minhash_lsh_verified_pairs(docs, "doc_id", "text", n=3, num_hashes=32, bands=16, threshold=0.5).count(),
     )
 
-    # d05: pigeonhole chunk-bucket volume on portable 62-bit signatures
-    def d05_cands():
-        sig = D.simhash(docs, "doc_id", "text", portable=True)
-        chunks, width = 7, 62 // 7
-        mask = (1 << width) - 1
-        banded = sig.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("chunk"),
-                            F.shiftrightunsigned("simhash", c * width).bitwiseAND(F.lit(mask)).alias("key"),
-                        )
-                        for c in range(chunks)
-                    ]
-                )
-            ).alias("cb")
-        ).select("cb.chunk", "cb.key")
+    def pigeonhole_cands(sig, sig_col, max_hamming, bits):
+        """Σ C(occupancy, 2) over the (chunk, key) buckets the pair
+        join of dedup.Pigeonhole meets in."""
+        keys = D.Pigeonhole(max_hamming, bits).keys(sig_col)
+        banded = sig.select(keys.alias("cb")).select("cb.chunk", "cb.key")
         occ = banded.groupBy("chunk", "key").agg(F.count("*").alias("n"))
         return int(occ.agg(F.sum(F.expr("n * (n - 1) / 2"))).first()[0] or 0)
 
+    # d05: pigeonhole chunk-bucket volume on portable 62-bit signatures
     timed(
         "d05_simhash",
-        d05_cands,
-        lambda: D.simhash_pairs(docs, "doc_id", "text", max_hamming=6, portable=True).count(),
+        lambda: pigeonhole_cands(D.simhash(docs, "doc_id", "text"), "simhash", 6, D.PORTABLE_SIMHASH_BITS),
+        lambda: D.simhash_pairs(docs, "doc_id", "text", max_hamming=6).count(),
     )
 
     # s03: pigeonhole chunk-bucket volume on 24-bit sign signatures
-    def s03_cands():
-        sig = S.sign_signatures(emb, dim=64)
-        chunks, width = 4, 24 // 4
-        mask = (1 << width) - 1
-        banded = sig.select(
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(c).alias("chunk"),
-                            F.shiftrightunsigned("sig", c * width).bitwiseAND(F.lit(mask)).alias("key"),
-                        )
-                        for c in range(chunks)
-                    ]
-                )
-            ).alias("cb")
-        ).select("cb.chunk", "cb.key")
-        occ = banded.groupBy("chunk", "key").agg(F.count("*").alias("n"))
-        return int(occ.agg(F.sum(F.expr("n * (n - 1) / 2"))).first()[0] or 0)
-
     timed(
         "s03_signlsh",
-        s03_cands,
+        lambda: pigeonhole_cands(S.sign_signatures(emb, dim=64), "sig", 3, S.SIGNATURE_BITS),
         lambda: S.sign_neardup_pairs(emb, max_hamming=3, dim=64).count(),
     )
 
