@@ -1,7 +1,8 @@
 """Benchmark harness: runs every driver-facing registry query at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] and prints ONE JSON line: {"metric", "value",
-"unit", "queries", "sf"}.
+"unit", "queries", "cpus", "sf"} — ``cpus`` is the session's
+defaultParallelism, the core count the record was measured at.
 
 Usage: python bench.py [query ...]
 
@@ -157,6 +158,8 @@ def main(names: list[str]) -> None:
         "median_rel_spread_pct": spread_pct,
         "metric": "total_query_wall_seconds",
         "unit": "sec",
+        # a record compares only with runs at the same core count
+        "cpus": spark.sparkContext.defaultParallelism,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "value": total,
     }

@@ -11,7 +11,7 @@ from __future__ import annotations
 
 from decimal import Decimal
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -43,8 +43,12 @@ from pyspark.sql import functions as F
 # (tests/test_money_sum.py). NaN and ±inf raise: u is rounded in
 # double and the ANSI cast to bigint rejects them, where the decimal
 # cast silently turned them into NULL rows. So does |x| >= 2^63/10^6.
-# Under spark.sql.ansi.enabled=false that cast saturates instead.
+# Under spark.sql.ansi.enabled=false that cast would make NaN 0 and
+# saturate an overflow, so on such a session a guard in front of it
+# raises instead, and queries return the same rows in both modes.
 # ---------------------------------------------------------------------------
+
+ANSI = "spark.sql.ansi.enabled"
 
 _LIMB_BITS = 21
 _LIMB_MASK = (1 << _LIMB_BITS) - 1
@@ -56,10 +60,19 @@ def money_sum(col) -> Column:
     """Exact SUM of a double column at scale 6, as decimal(38,6).
 
     Equals ``sum(cast(col as decimal(24,6)))`` on every value the
-    module contract admits; NULL for an empty or all-NULL group.
+    module contract admits; NULL for an empty or all-NULL group. A NaN,
+    infinite or out-of-range row raises whatever ``spark.sql.ansi.enabled``
+    is: the active session's value, read when the Column is built,
+    decides whether the cast raises by itself or needs the guard.
     """
     x = F.col(col) if isinstance(col, str) else col
-    u = (x * 1e6 + F.signum(x) * 0.5).cast("bigint")
+    scaled = x * 1e6 + F.signum(x) * 0.5
+    u = scaled.cast("bigint")
+    spark = SparkSession.getActiveSession()
+    if spark is not None and spark.conf.get(ANSI, "true").lower() != "true":
+        bad = F.isnan(scaled) | (F.abs(scaled) >= F.lit(2.0**63))
+        message = f"money_sum: a NaN, infinite or out-of-range value, which {ANSI}=false sums silently"
+        u = F.when(bad, F.raise_error(F.lit(message))).otherwise(u)
     limbs = [
         u.bitwiseAND(_LIMB_MASK),
         F.shiftright(u, _LIMB_BITS).bitwiseAND(_LIMB_MASK),

@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from kaylee_spark.operators.skew import pin_width
+from kaylee_spark.operators.text import positional_grams, tokens
 
 
 # ---------------------------------------------------------------------------
@@ -64,10 +65,6 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def tokens(text_col: str = "text") -> Column:
-    return F.filter(F.split(F.col(text_col), " "), lambda t: t != "")
-
-
 def _gram_array(text_col: str, n: int) -> Column:
     """array of word n-grams of one document, duplicates removed.
 
@@ -78,8 +75,6 @@ def _gram_array(text_col: str, n: int) -> Column:
     full exchange of the shingle stream, which at 100 TB is the single
     largest avoidable shuffle in the dedup family.)
     """
-    from kaylee_spark.operators.text import positional_grams
-
     return F.array_distinct(positional_grams(tokens(text_col), n))
 
 
@@ -132,55 +127,19 @@ DEFAULT_MAX_DF = 1000
 
 
 def _capped_postings(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    n: int,
-    max_df: int | None,
-    pair_budget: int | None,
-) -> tuple[DataFrame, dict | None]:
+    df: DataFrame, id_col: str, text_col: str, n: int, max_df: int | None
+) -> DataFrame:
     """Shared candidate stage of the exact-pairs family: the hashed
-    (doc, shingle) postings, df-capped either by the explicit
-    ``max_df`` or by the ``pair_budget`` planner. Returns
-    (postings, plan_meta) — plan_meta is None unless a budget was
-    planned.
-
-    Cache discipline: the budget path is already eager (the df
-    histogram is collected to plan the cap), so the capped postings
-    are materialized with an eager localCheckpoint and the raw-postings
-    cache — which served the histogram pass and both reads of the
-    capped build — is RELEASED before returning, instead of leaking
-    one cached dataset per call for the session lifetime. The plain
-    max_df path stays fully lazy (shipped query semantics) and keeps
-    its caches alive for the deferred execution.
-    """
-    plan_meta = None
+    (doc, shingle) postings, df-capped by ``max_df``. Fully lazy; the
+    caches stay alive for the deferred execution."""
     sh = hashed_shingles(df, id_col, text_col, n).withColumnRenamed("sh64", "shingle")
-    if pair_budget is not None:
-        from kaylee_spark.operators.lsh_planner import plan_max_df, shingle_df_histogram
-
-        raw = sh.cache()
-        max_df, bound = plan_max_df(shingle_df_histogram(raw), pair_budget)
-        plan_meta = {
-            "pair_budget": int(pair_budget),
-            "max_df": int(max_df),
-            "predicted_pair_bound": int(bound),
-        }
-        rare = (
-            raw.groupBy("shingle")
-            .agg(F.count("*").alias("_df"))
-            .filter(F.col("_df") <= max_df)
-        )
-        capped = raw.join(rare.select("shingle"), "shingle").localCheckpoint(eager=True)
-        raw.unpersist()
-        return capped, plan_meta
     if max_df is not None:
         # cache the raw posting frame: the df-count pass and the capped
         # join both read it — uncached, the shingling scan runs twice
         sh = sh.cache()
         rare = sh.groupBy("shingle").agg(F.count("*").alias("_df")).filter(F.col("_df") <= max_df)
         sh = sh.join(rare.select("shingle"), "shingle")
-    return sh.cache(), plan_meta
+    return sh.cache()
 
 
 def jaccard_pairs(
@@ -190,9 +149,7 @@ def jaccard_pairs(
     n: int = 3,
     threshold: float = 0.5,
     max_df: int | None = DEFAULT_MAX_DF,
-    pair_budget: int | None = None,
-    return_plan: bool = False,
-) -> DataFrame | tuple[DataFrame, dict | None]:
+) -> DataFrame:
     """Exact n-gram Jaccard over candidate pairs from the inverted index.
 
     plan: shingles -> self-join on shingle (pairs sharing >=1 gram)
@@ -225,22 +182,10 @@ def jaccard_pairs(
     max_df documents — is untouched, and the planted-duplicate stress
     test (tests/test_dedup.py) pins that behavior. ``max_df=None``
     opts out for the exact full-space metric on corpora known to be
-    boilerplate-free.
-
-    ``pair_budget`` is the production knob for users who think in
-    join-cost, not document frequency: lsh_planner.plan_max_df reads
-    the corpus's df histogram (one droplet-sized aggregate over the
-    same cached postings) and picks the LARGEST cap whose Σ C(df,2)
-    candidate bound fits the budget — ``max_df`` is then ignored. The
-    planner's decision is returned alongside the frame when
-    ``return_plan=True`` — the call returns (DataFrame, plan) with
-    plan = {pair_budget, max_df, predicted_pair_bound} (or None when
-    no budget was planned) — so a pipeline can log exactly what the
-    cap dropped without fishing attributes off the DataFrame. Users
-    who want bounded OUTPUT rather than bounded join cost should use
-    jaccard_topk_per_doc below.
+    boilerplate-free. Users who want bounded OUTPUT rather than
+    bounded join cost should use jaccard_topk_per_doc below.
     """
-    sh, plan_meta = _capped_postings(df, id_col, text_col, n, max_df, pair_budget)
+    sh = _capped_postings(df, id_col, text_col, n, max_df)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     a = sh.withColumnRenamed("doc", "doc_a")
     b = sh.withColumnRenamed("doc", "doc_b")
@@ -250,7 +195,7 @@ def jaccard_pairs(
         .groupBy("doc_a", "doc_b")
         .agg(F.count("*").alias("n_common"))
     )
-    out = (
+    return (
         common.join(sizes.withColumnRenamed("doc", "doc_a").withColumnRenamed("n_shingles", "size_a"), "doc_a")
         .join(sizes.withColumnRenamed("doc", "doc_b").withColumnRenamed("n_shingles", "size_b"), "doc_b")
         .withColumn(
@@ -260,9 +205,6 @@ def jaccard_pairs(
         .filter(F.col("jaccard") >= threshold)
         .select("doc_a", "doc_b", "jaccard")
     )
-    if return_plan:
-        return out, plan_meta
-    return out
 
 
 def jaccard_topk_per_doc(
@@ -272,9 +214,7 @@ def jaccard_topk_per_doc(
     n: int = 3,
     k: int = 3,
     max_df: int | None = DEFAULT_MAX_DF,
-    pair_budget: int | None = None,
-    return_plan: bool = False,
-) -> DataFrame | tuple[DataFrame, dict | None]:
+) -> DataFrame:
     """Bounded-OUTPUT rung of the exact-pairs family: each document's
     ``k`` most similar partners by capped n-gram Jaccard, instead of
     every pair above a threshold. On a duplicated corpus the full pair
@@ -284,27 +224,18 @@ def jaccard_topk_per_doc(
     nearest neighbors", whose output is <= k rows per doc at ANY
     corpus scale.
 
-    Plan: the same capped inverted-index candidate stage (optionally
-    budget-planned via ``pair_budget``, see jaccard_pairs), then the
-    pair set symmetrized and cut by a per-doc rank window — ties
-    broken (jaccard DESC, neighbor ASC) so the output is
-    deterministic. The window partitions by doc, so it shuffles the
-    PAIR set (already bounded by the cap/budget), never the corpus.
+    Plan: the same capped inverted-index candidate stage (see
+    jaccard_pairs), then the pair set symmetrized and cut by a per-doc
+    rank window — ties broken (jaccard DESC, neighbor ASC) so the
+    output is deterministic. The window partitions by doc, so it
+    shuffles the PAIR set (already bounded by the cap), never the
+    corpus.
 
     Output: (doc, neighbor, jaccard, rnk) with rnk in 1..k.
     """
     from pyspark.sql import Window
 
-    pairs, plan_meta = jaccard_pairs(
-        df,
-        id_col,
-        text_col,
-        n=n,
-        threshold=0.0,
-        max_df=max_df,
-        pair_budget=pair_budget,
-        return_plan=True,
-    )
+    pairs = jaccard_pairs(df, id_col, text_col, n=n, threshold=0.0, max_df=max_df)
     sym = pairs.select(
         F.col("doc_a").alias("doc"), F.col("doc_b").alias("neighbor"), "jaccard"
     ).unionByName(
@@ -313,14 +244,11 @@ def jaccard_topk_per_doc(
         )
     )
     w = Window.partitionBy("doc").orderBy(F.desc("jaccard"), F.asc("neighbor"))
-    out = (
+    return (
         sym.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("doc", "neighbor", "jaccard", "rnk")
     )
-    if return_plan:
-        return out, plan_meta
-    return out
 
 
 def containment_pairs(
@@ -330,9 +258,7 @@ def containment_pairs(
     n: int = 3,
     threshold: float = 0.8,
     max_df: int | None = DEFAULT_MAX_DF,
-    pair_budget: int | None = None,
-    return_plan: bool = False,
-) -> DataFrame | tuple[DataFrame, dict | None]:
+) -> DataFrame:
     """Asymmetric n-gram containment over candidate pairs from the
     inverted index: containment(src -> dst) = |S(src) ∩ S(dst)| /
     |S(src)| — the quote / near-superset detector Jaccard misses. A
@@ -360,10 +286,6 @@ def containment_pairs(
     jaccard_pairs are part of the dedup family the absence list in
     SURVEY.md §2.3 prescribes.
 
-    ``pair_budget`` works as in jaccard_pairs: plan_max_df picks the
-    cap from the df histogram to fit the candidate-pair budget, and
-    ``return_plan=True`` returns (DataFrame, plan) with the decision.
-
     The whole candidate/score pipeline runs under ``pin_width(df)``
     and its result is materialized inside the scope: the pipeline is
     ~5 chained shuffles (df-cap, sizes, self-join, pair count, two
@@ -374,18 +296,12 @@ def containment_pairs(
     (blocks GC-freed) means the caller's conf never replans it.
     """
     with pin_width(df):
-        out, plan_meta = _containment_scores(
-            df, id_col, text_col, n, threshold, max_df, pair_budget
-        )
-        out = out.localCheckpoint(eager=True)
-    if return_plan:
-        return out, plan_meta
-    return out
+        return _containment_scores(df, id_col, text_col, n, threshold, max_df).localCheckpoint(eager=True)
 
 
-def _containment_scores(df, id_col, text_col, n, threshold, max_df, pair_budget):
-    """containment_pairs' lazy pipeline and the df-cap plan."""
-    sh, plan_meta = _capped_postings(df, id_col, text_col, n, max_df, pair_budget)
+def _containment_scores(df, id_col, text_col, n, threshold, max_df):
+    """containment_pairs' lazy pipeline."""
+    sh = _capped_postings(df, id_col, text_col, n, max_df)
     sizes = sh.groupBy("doc").agg(F.count("*").alias("n_shingles"))
     a = sh.withColumnRenamed("doc", "doc_a")
     b = sh.withColumnRenamed("doc", "doc_b")
@@ -412,7 +328,7 @@ def _containment_scores(df, id_col, text_col, n, threshold, max_df, pair_budget)
         F.col("doc_a").alias("dst"),
         (F.col("n_common") / F.col("size_b")).cast("double").alias("containment"),
     )
-    return fwd.unionByName(rev).filter(F.col("containment") >= threshold), plan_meta
+    return fwd.unionByName(rev).filter(F.col("containment") >= threshold)
 
 
 def containment_topk_per_src(
@@ -422,9 +338,7 @@ def containment_topk_per_src(
     n: int = 3,
     k: int = 3,
     max_df: int | None = DEFAULT_MAX_DF,
-    pair_budget: int | None = None,
-    return_plan: bool = False,
-) -> DataFrame | tuple[DataFrame, dict | None]:
+) -> DataFrame:
     """Bounded-OUTPUT rung of the containment family — the directional
     twin of jaccard_topk_per_doc: each document's ``k`` strongest
     hosts/quotes by capped n-gram containment(src -> dst), instead of
@@ -435,10 +349,9 @@ def containment_topk_per_src(
     production question is usually "what is this doc quoted from /
     what quotes it", whose answer is <= k rows per src at ANY scale.
 
-    Plan: containment_pairs' one symmetric candidate aggregate
-    (optionally budget-planned via ``pair_budget``), then a per-src
-    rank window over the ALREADY-CAPPED ordered pair set — the window
-    shuffles candidate pairs, never the corpus. Ties broken
+    Plan: containment_pairs' one symmetric candidate aggregate, then a
+    per-src rank window over the ALREADY-CAPPED ordered pair set — the
+    window shuffles candidate pairs, never the corpus. Ties broken
     (containment DESC, dst ASC) on exact int/int doubles so any engine
     ranks identically.
 
@@ -446,18 +359,13 @@ def containment_topk_per_src(
     """
     from pyspark.sql import Window
 
-    pairs, plan_meta = _containment_scores(
-        df, id_col, text_col, n, 0.0, max_df, pair_budget
-    )
+    pairs = _containment_scores(df, id_col, text_col, n, 0.0, max_df)
     w = Window.partitionBy("src").orderBy(F.desc("containment"), F.asc("dst"))
-    out = (
+    return (
         pairs.withColumn("rnk", F.row_number().over(w))
         .filter(F.col("rnk") <= k)
         .select("src", "dst", "containment", "rnk")
     )
-    if return_plan:
-        return out, plan_meta
-    return out
 
 
 def incremental_exact_dedup(
@@ -579,7 +487,6 @@ def decontaminate(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """Cross-corpus n-gram decontamination: per TRAIN document, the
     fraction of its distinct word n-gram shingles that appear anywhere
@@ -597,14 +504,10 @@ def decontaminate(
     keys) is broadcast and the 'join' is a map-side semi-join — the
     train corpus is scanned ONCE with no shuffle of shingles at all;
     the only exchange is the per-doc count aggregation, which map-side
-    combines to one row per doc. Set ``broadcast_eval=False`` if the
-    eval side genuinely exceeds broadcast size (falls back to a
-    shuffled semi-join).
+    combines to one row per doc.
     """
     tr = hashed_shingles(train, id_col, text_col, n)
-    ev = hashed_shingles(eval_df, id_col, text_col, n).select("sh64").distinct()
-    if broadcast_eval:
-        ev = F.broadcast(ev)
+    ev = F.broadcast(hashed_shingles(eval_df, id_col, text_col, n).select("sh64").distinct())
     per_doc = tr.join(ev.withColumn("_hit", F.lit(1)), "sh64", "left").groupBy("doc").agg(
         F.count("*").alias("n_shingles"),
         F.count("_hit").alias("n_contaminated"),
@@ -794,12 +697,7 @@ def minhash_lsh_verified_pairs(
 # ---------------------------------------------------------------------------
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "doc_a",
-    dst: str = "doc_b",
-    max_iter: int = 20,
-) -> DataFrame:
+def _min_label_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
     """Min-label propagation over an undirected pair graph.
 
     The canonical post-pass of every dedup pipeline: near-dup PAIRS
@@ -821,20 +719,12 @@ def connected_components(
 
     Output: (doc, cluster) for every node appearing in ``edges``.
 
-    The loop runs under ``pin_width(edges)``, same trade as
-    pagerank(): each iteration is ~3 shuffles plus an eager
-    localCheckpoint, so a batch-tuned width multiplies near-empty
-    partition overhead by the iteration count on a small pair graph.
-    Labels are exact min-propagation — width-independent — and every
-    iteration (and the lazy edge pipeline the first one forces)
-    materializes inside the pinned scope, so the caller's conf never
-    replans the loop.
+    Callers (dedup_clusters, semantic_clusters) run it under
+    ``pin_width`` of their corpus: each iteration is ~3 shuffles plus
+    an eager localCheckpoint, so a batch-tuned width multiplies
+    near-empty partition overhead by the iteration count on a small
+    pair graph. Labels are exact min-propagation — width-independent.
     """
-    with pin_width(edges):
-        return _min_label_loop(edges, src, dst, max_iter)
-
-
-def _min_label_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> DataFrame:
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
@@ -882,7 +772,7 @@ def _min_label_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> Data
             break
     if changed != 0:
         warnings.warn(
-            f"connected_components: max_iter={max_iter} exhausted before "
+            f"min-label propagation: max_iter={max_iter} exhausted before "
             "convergence; cluster labels may be split. Increase max_iter.",
             RuntimeWarning,
             stacklevel=3,
@@ -896,34 +786,17 @@ def dedup_clusters(
     text_col: str,
     n: int = 3,
     threshold: float = 0.5,
-    edges: str = "lsh",
-    n_docs: int | None = None,
 ) -> DataFrame:
     """Full near-dup clustering: Jaccard pairs above ``threshold``
     -> connected components -> (doc, cluster, is_canonical) for every
     document (singletons are their own cluster).
 
-    ``edges`` picks the pair stage:
-    - "auto": lsh_planner.plan_dedup_edges stages the pipeline from
-      the corpus's df histogram (one extra shingle scan into a
-      droplet-sized aggregate, plus — when no ``n_docs`` hint is
-      given — a count job on the corpus frame; at scale pass
-      ``n_docs`` from catalog statistics, so planning reads no data
-      at all): exact inverted-index while its
-      Sigma C(df,2) candidate volume stays below the LSH path's fixed
-      signature cost, banded LSH once shingle sharing makes the exact
-      join explode — SURVEY §4.2's "dedup-pipeline staging" decision,
-      made from measured quantities, not a guess. Both stages emit
-      the same edge set (recall-1.0 banding), so the choice never
-      changes the output — only the cost.
-    - "lsh": banded-MinHash candidates + exact-Jaccard verify
-      (minhash_lsh_verified_pairs) — the 100 TB pipeline shape; with
-      the recall-1.0 banding config the edge set EQUALS the exact
-      one (asserted in tests/test_dedup.py), so clustering output is
-      unchanged while the pair stage cost scales with candidates, not
-      corpus².
-    - "exact": full inverted-index exact Jaccard (jaccard_pairs) —
-      the brute-force reference path.
+    The pair stage is banded-MinHash candidates + exact-Jaccard verify
+    (minhash_lsh_verified_pairs) — the 100 TB pipeline shape; with the
+    recall-1.0 banding config the edge set EQUALS the exact
+    inverted-index one (jaccard_pairs; asserted in
+    tests/test_dedup.py), so clustering output is the exact one while
+    the pair stage cost scales with candidates, not corpus².
 
     The loop runs under ``pin_width(df)``: the corpus, not the pair
     stage, sizes it, since the pair stage's cached leaves are read
@@ -931,23 +804,7 @@ def dedup_clusters(
     loop's first localCheckpoint, so the pin covers both the candidate
     joins and the iterative loop.
     """
-    if edges not in ("auto", "lsh", "exact"):
-        raise ValueError(f"edges must be 'auto', 'lsh', or 'exact' (got {edges!r})")
-    if edges == "auto":
-        from kaylee_spark.operators.lsh_planner import (
-            plan_dedup_edges,
-            shingle_df_histogram,
-        )
-
-        sh = hashed_shingles(df, id_col, text_col, n).withColumnRenamed("sh64", "shingle")
-        hist = shingle_df_histogram(sh)  # one scan; the result is droplet-sized
-        if n_docs is None:
-            n_docs = df.count()  # avoidable: pass n_docs from catalog stats
-        edges = plan_dedup_edges(hist, n_docs=n_docs, threshold=threshold).stage
-    if edges == "lsh":
-        pairs = minhash_lsh_verified_pairs(df, id_col, text_col, n=n, threshold=threshold)
-    else:
-        pairs = jaccard_pairs(df, id_col, text_col, n=n, threshold=threshold)
+    pairs = minhash_lsh_verified_pairs(df, id_col, text_col, n=n, threshold=threshold)
     with pin_width(df):
         comps = _min_label_loop(pairs, "doc_a", "doc_b", max_iter=20)
     all_docs = df.select(F.col(id_col).alias("doc"))
@@ -1164,8 +1021,6 @@ def write_lsh_index(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
     threshold: float = 0.5,
 ) -> None:
     """Materialize the STANDING MinHash-LSH index a daily ingest
@@ -1175,13 +1030,13 @@ def write_lsh_index(
     state incremental_neardup_pairs recomputes from the corpus frame —
     build it once per corpus snapshot, probe it every ingest without
     touching corpus text again (the IVF-at-rest idea applied to text
-    LSH). Banding defaults are planner-derived for the probe
-    ``threshold`` (resolve_banding); the RESOLVED config
+    LSH). Banding is planner-derived for the probe ``threshold``
+    (resolve_banding); the RESOLVED config
     (num_hashes, bands, shingle n) is persisted as index metadata at
     ``{path}/meta`` so probe_lsh_index reads the baked banding instead
     of re-deriving it from a possibly-different threshold.
     """
-    num_hashes, bands = resolve_banding(num_hashes, bands, threshold)
+    num_hashes, bands = resolve_banding(None, None, threshold)
     sh = hashed_shingles(corpus, id_col, text_col, n).cache()
     sh.write.mode("overwrite").parquet(f"{path}/shingles")
     sig = _signatures_from_shingles(sh, num_hashes)
@@ -1207,8 +1062,6 @@ def probe_lsh_index(
     id_col: str,
     text_col: str,
     n: int = 3,
-    num_hashes: int | None = None,
-    bands: int | None = None,
     threshold: float = 0.5,
 ) -> DataFrame:
     """Near-dup pairs of an ingest increment against a PERSISTED LSH
@@ -1228,11 +1081,11 @@ def probe_lsh_index(
     The banding/shingle config is read from the index's persisted
     metadata (written by write_lsh_index), so a probe with a different
     ``threshold`` still hashes into the SAME buckets the index baked —
-    threshold stays purely the Jaccard filter. Explicitly pinned
-    arguments are validated against the metadata and raise on mismatch
-    (a silent mismatch previously produced near-empty results).
-    Indexes written before metadata existed fall back to
-    resolve_banding — which must then match the write-time config.
+    threshold stays purely the Jaccard filter. A shingle ``n`` that
+    differs from the index's raises (a silent mismatch produces
+    near-empty results). Indexes written before metadata existed fall
+    back to resolve_banding — which must then match the write-time
+    config.
     """
     from pyspark.errors import AnalysisException
 
@@ -1248,18 +1101,6 @@ def probe_lsh_index(
             raise
         meta = None
     if meta is not None:
-        if num_hashes is not None and num_hashes != meta["num_hashes"]:
-            raise ValueError(
-                f"probe num_hashes={num_hashes} mismatches the persisted "
-                f"index (num_hashes={meta['num_hashes']}) — omit it to use "
-                "the index's baked config"
-            )
-        if bands is not None and bands != meta["bands"]:
-            raise ValueError(
-                f"probe bands={bands} mismatches the persisted index "
-                f"(bands={meta['bands']}) — omit it to use the index's "
-                "baked config"
-            )
         if n != meta["shingle_n"]:
             raise ValueError(
                 f"probe shingle n={n} mismatches the persisted index "
@@ -1267,7 +1108,7 @@ def probe_lsh_index(
             )
         num_hashes, bands = meta["num_hashes"], meta["bands"]
     else:
-        num_hashes, bands = resolve_banding(num_hashes, bands, threshold)
+        num_hashes, bands = resolve_banding(None, None, threshold)
     inc_sh = hashed_shingles(increment, id_col, text_col, n).cache()
     inc_sig = _signatures_from_shingles(inc_sh, num_hashes)
     inc_b = _band_buckets(inc_sig, num_hashes, bands).withColumnRenamed("doc", "doc_new")
@@ -1316,7 +1157,6 @@ def leakage_free_split(
     eval_ppm: int = 100_000,
     n: int = 3,
     threshold: float = 0.5,
-    edges: str = "lsh",
 ) -> DataFrame:
     """Train/eval assignment that can never leak near-duplicates
     across the split: documents are first clustered by near-dup
@@ -1341,7 +1181,7 @@ def leakage_free_split(
     """
     from kaylee_spark.operators.sampling import portable_bucket
 
-    clusters = dedup_clusters(df, id_col, text_col, n=n, threshold=threshold, edges=edges)
+    clusters = dedup_clusters(df, id_col, text_col, n=n, threshold=threshold)
     return clusters.select(
         "doc",
         "cluster",
@@ -1437,8 +1277,6 @@ def duplicate_window_stats(
     and accept the 2^-64 collision odds; kept as raw strings here so
     the DuckDB oracle replays the exact same keys.
     """
-    from kaylee_spark.operators.text import positional_grams
-
     grams = positional_grams(tokens(text_col), w)
     occ = (
         df.select(F.col(id_col).alias("doc"), F.explode(grams).alias("win"))

@@ -16,7 +16,6 @@ def asof_join(
     left_time: str,
     right_time: str,
     direction: str = "backward",
-    tolerance=None,
 ) -> DataFrame:
     """As-of join: for each left row, the single right row with the
     latest right_time <= left_time (backward) / earliest >= (forward),
@@ -63,13 +62,6 @@ def asof_join(
         .withColumn("_matched_t", carried_t)
         .filter(F.col("_is_left") == 1)
     )
-    if tolerance is not None:
-        within = (
-            F.abs(F.col("_t").cast("double") - F.col("_matched_t").cast("double")) <= F.lit(tolerance)
-            if direction == "backward"
-            else F.abs(F.col("_matched_t").cast("double") - F.col("_t").cast("double")) <= F.lit(tolerance)
-        )
-        out = out.withColumn("_matched", F.when(within, F.col("_matched")))
     flat_left = [F.col(f"_lrow.{c}").alias(c) for c in left.columns]
     flat_right = [F.col(f"_matched.{c}").alias(c) for c in rcols]
     # expose the matched right-side time too (asof analyses almost
@@ -84,7 +76,6 @@ def range_join(
     left_point: str,
     right_lo: str,
     right_hi: str,
-    extra_on=None,
     bucket_width: float | None = None,
 ) -> DataFrame:
     """Interval join: left rows whose point falls in [right_lo, right_hi].
@@ -96,8 +87,6 @@ def range_join(
     into a co-partitioned hash join. That's the 100 TB path.
     """
     cond = (F.col(left_point) >= F.col(right_lo)) & (F.col(left_point) <= F.col(right_hi))
-    if extra_on is not None:
-        cond = cond & extra_on
     if bucket_width is None:
         return left.join(right, cond)
 
@@ -245,7 +234,6 @@ def interval_overlap_join(
     right_lo: str,
     right_hi: str,
     bucket_width: int | None = None,
-    extra_on=None,
 ) -> DataFrame:
     """Interval×interval OVERLAP join: all (left, right) pairs whose
     closed ranges intersect (left_lo <= right_hi AND right_lo <=
@@ -273,8 +261,6 @@ def interval_overlap_join(
     — same law as range_join's bucketing, both sides exploded.
     """
     cond = (F.col(left_lo) <= F.col(right_hi)) & (F.col(right_lo) <= F.col(left_hi))
-    if extra_on is not None:
-        cond = cond & extra_on
     if bucket_width is None:
         return left.join(right, cond)
     w = int(bucket_width)

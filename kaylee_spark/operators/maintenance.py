@@ -11,8 +11,8 @@ shape lakehouse formats execute under `MERGE INTO`.
 
 Scale shape: the base snapshot contributes ONE anti-join keyed on the
 bare key columns (payload columns never shuffle — left_anti emits base
-rows in place), and the change batch is broadcast when small (the
-normal case: a daily increment vs the full corpus). Pair with a
+rows in place), and the change batch's key set is broadcast (a daily
+increment vs the full corpus). Pair with a
 partitioned/bucketed base layout so the rewrite touches only affected
 partitions; with `sources.sinks.write_parquet(partition_by=...)` the
 swap is a per-partition overwrite, not a full-table rewrite.
@@ -63,62 +63,40 @@ def upsert_snapshot(
     base: DataFrame,
     updates: DataFrame,
     keys: list[str] | str,
-    version_col: str | None = None,
     tombstone_col: str | None = None,
-    broadcast_updates: bool = True,
 ) -> DataFrame:
     """Next snapshot = updates applied over ``base`` by key.
 
-    - rows of ``updates`` replace base rows with the same key
-      (last-writer-wins within the batch via ``version_col``);
+    - rows of ``updates`` replace base rows with the same key (a
+      change batch holds one row per key);
     - ``tombstone_col`` (boolean) marks CDC deletes: the key is
       dropped from the snapshot entirely;
     - base rows with no update survive untouched.
 
     ``updates`` must carry every ``base`` column (plus the optional
-    version/tombstone columns, which are stripped from the output
-    unless they are base columns themselves). When ``version_col`` is
-    set, ties on (key, version) break deterministically on the
-    remaining columns so re-runs pick the same winner.
+    tombstone column, which is stripped from the output unless it is
+    a base column itself).
 
-    One wide shuffle at most (the within-batch latest-per-key agg);
-    the base side is a payload-free anti-join — at 100 TB the corpus
-    is read once and never re-keyed.
+    The one shuffle is the distinct over the batch's keys; the base
+    side is a payload-free anti-join against that broadcast key set —
+    at 100 TB the corpus is read once and never re-keyed.
     """
     key_cols = [keys] if isinstance(keys, str) else list(keys)
     missing = [c for c in base.columns if c not in updates.columns]
     if missing:
         raise ValueError(f"updates missing base columns: {missing}")
 
-    upd = updates
-    carried = [c for c in upd.columns if c not in key_cols]
-    if version_col is not None:
-        if version_col not in upd.columns:
-            raise ValueError(f"version_col {version_col!r} not in updates")
-        # latest-per-key: single map-side-combined max_by, no window
-        # sort. The ordering struct is (version, every carried column)
-        # — a total order, so duplicate versions still resolve
-        # deterministically.
-        ordering = F.struct(*[F.col(version_col)] + [F.col(c) for c in carried])
-        upd = (
-            upd.groupBy(*key_cols)
-            .agg(F.max_by(F.struct(*[F.col(c) for c in carried]), ordering).alias("_r"))
-            .select(*key_cols, *[F.col(f"_r.{c}").alias(c) for c in carried])
-        )
-
     if tombstone_col is not None:
-        if tombstone_col not in upd.columns:
+        if tombstone_col not in updates.columns:
             raise ValueError(f"tombstone_col {tombstone_col!r} not in updates")
-        live = upd.filter(~F.coalesce(F.col(tombstone_col), F.lit(False)))
+        live = updates.filter(~F.coalesce(F.col(tombstone_col), F.lit(False)))
     else:
-        live = upd
+        live = updates
     live = live.select(*base.columns)
 
     # base survivors: anti-join on bare keys only. ALL updated keys
     # (including tombstoned ones) knock out their base row.
-    key_set = upd.select(*key_cols).distinct()
-    if broadcast_updates:
-        key_set = F.broadcast(key_set)
+    key_set = F.broadcast(updates.select(*key_cols).distinct())
     survivors = base.join(key_set, key_cols, "left_anti")
 
     return live.unionByName(survivors)
@@ -128,15 +106,13 @@ def snapshot_diff(
     old: DataFrame,
     new: DataFrame,
     keys: list[str] | str,
-    hash_cols: list[str] | None = None,
 ) -> DataFrame:
     """Change report between two corpus snapshots: one row per key
     that was ADDED, REMOVED, or MODIFIED (payload hash changed) —
     the audit/sync companion to upsert_snapshot.
 
-    ``hash_cols`` defaults to every non-key column; modification is
-    detected on xxhash64 over those columns (8 bytes per side through
-    the join, never the payload). Output: (key columns…, change) with
+    Modification is detected on xxhash64 over every non-key column (8
+    bytes per side through the join, never the payload). Output: (key columns…, change) with
     change in {'added','removed','modified'}; unchanged keys are
     absent, so the frame is increment-sized, not corpus-sized.
 
@@ -145,8 +121,7 @@ def snapshot_diff(
     100 TB the diff costs two scans plus a narrow key-keyed exchange.
     """
     key_cols = [keys] if isinstance(keys, str) else list(keys)
-    if hash_cols is None:
-        hash_cols = [c for c in old.columns if c not in key_cols]
+    hash_cols = [c for c in old.columns if c not in key_cols]
     missing = [c for c in [*key_cols, *hash_cols] if c not in new.columns]
     if missing:
         raise ValueError(f"new snapshot missing columns: {missing}")

@@ -27,12 +27,8 @@ from pyspark.sql import functions as F
 _NUMERIC = ("tinyint", "smallint", "int", "bigint", "float", "double")
 
 
-def profile_table(
-    df: DataFrame,
-    columns: list[str] | None = None,
-    exact_distinct: bool = True,
-) -> DataFrame:
-    """Long-format profile: one row per column.
+def profile_table(df: DataFrame) -> DataFrame:
+    """Long-format profile: one row per column, distinct counts exact.
 
     Output schema: (col_name string, n_rows long, n_nulls long,
     n_distinct long, min_value double, max_value double) —
@@ -40,18 +36,11 @@ def profile_table(
     ``column`` so SQL twins never need reserved-word quoting.)
     """
     dtypes = dict(df.dtypes)
-    cols = list(columns) if columns is not None else list(df.columns)
-    missing = [c for c in cols if c not in dtypes]
-    if missing:
-        raise ValueError(f"unknown columns: {missing}")
-
+    cols = list(df.columns)
     aggs = [F.count(F.lit(1)).alias("__n_rows")]
     for c in cols:
         aggs.append(F.count(c).alias(f"__nn_{c}"))
-        if exact_distinct:
-            aggs.append(F.count_distinct(c).alias(f"__nd_{c}"))
-        else:
-            aggs.append(F.approx_count_distinct(c).alias(f"__nd_{c}"))
+        aggs.append(F.count_distinct(c).alias(f"__nd_{c}"))
         if dtypes[c] in _NUMERIC or dtypes[c].startswith("decimal"):
             aggs.append(F.min(c).cast("double").alias(f"__mn_{c}"))
             aggs.append(F.max(c).cast("double").alias(f"__mx_{c}"))

@@ -1012,11 +1012,6 @@ def knn_graph(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    bucketed: bool = False,
-    n_planes: int = 4,
-    n_tables: int = 12,
-    dim: int = 64,
-    parity_rerank: bool = False,
 ) -> DataFrame:
     """k-nearest-neighbor GRAPH over an embedding corpus: every vector
     becomes a node with directed edges to its k most cosine-similar
@@ -1028,31 +1023,15 @@ def knn_graph(
     Output: (src, dst, cosine_sim, rank), k rows per vector,
     deterministic (6dp-rounded score, id tie-break).
 
-    Scale shape: ``bucketed=False`` is the exact baseline — the corpus
-    broadcasts as its own query set and ranks inside each src
-    partition (right up to ~10^5 vectors / a few hundred MB broadcast,
-    quadratic beyond). ``bucketed=True`` routes through the multi-table
-    sign-LSH candidate machinery (lsh_bucketed_topk with the corpus as
-    its own query set): candidate volume tracks bucket occupancy, not
-    corpus size — the 100 TB path, with recall dialed by
-    n_tables/n_planes (property-tested; recall <1.0 means an
-    approximate graph, the standard trade).
+    Scale shape: exact — the corpus broadcasts as its own query set
+    and ranks inside each src partition (right up to ~10^5 vectors /
+    a few hundred MB broadcast, quadratic beyond). Past that, the
+    candidate stage is lsh_bucketed_topk's multi-table sign-LSH with
+    the corpus as its own query set: candidate volume tracks bucket
+    occupancy, not corpus size.
     """
     queries = emb.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("embedding"))
-    if bucketed:
-        out = lsh_bucketed_topk(
-            emb,
-            queries,
-            k=k,
-            n_planes=n_planes,
-            n_tables=n_tables,
-            dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            parity_rerank=parity_rerank,
-        )
-    else:
-        out = cosine_topk(emb, queries, k=k, id_col=id_col, vec_col=vec_col)
+    out = cosine_topk(emb, queries, k=k, id_col=id_col, vec_col=vec_col)
     return out.select(
         F.col("query_id").alias("src"),
         F.col("neighbor_id").alias("dst"),
@@ -1072,7 +1051,7 @@ def semantic_clusters(
     """Semantic near-duplicate CLUSTERS over an embedding corpus:
     sign-signature near-dup pairs (sign_neardup_pairs — integer-exact,
     pigeonhole-complete) closed under min-label connected components
-    (operators/dedup.connected_components), with every vector labeled
+    (operators/dedup._min_label_loop), with every vector labeled
     — singletons become their own cluster and the lowest id in each
     cluster is the deterministic canonical representative.
 

@@ -138,12 +138,11 @@ def token_count(text_col="text") -> Column:
     return F.size(tokens(text_col)).cast("bigint")
 
 
-def stopword_ratio(text_col="text", stopwords: list[str] | None = None) -> Column:
-    """Fraction of tokens that are stopwords — integer counts divided
-    once, so bit-identical across engines."""
-    sw = stopwords or LANG_STOPWORDS["en"]
+def stopword_ratio(text_col="text") -> Column:
+    """Fraction of tokens that are English stopwords — integer counts
+    divided once, so bit-identical across engines."""
     toks = tokens(text_col)
-    n_stop = F.size(F.filter(toks, lambda t: t.isin(*sw)))
+    n_stop = F.size(F.filter(toks, lambda t: t.isin(*LANG_STOPWORDS["en"])))
     return (n_stop / F.greatest(F.size(toks), F.lit(1))).cast("double")
 
 

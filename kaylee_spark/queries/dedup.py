@@ -88,12 +88,10 @@ def d03_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     shingle sits far below the cap, so the cap also provably changes
     nothing here.
 
-    Budget-minded users: the full pair set is inherently quadratic on
-    a duplicated corpus (measured 79x output at x10 data — BASELINE).
-    ``jaccard_pairs(pair_budget=...)`` bounds the JOIN cost via the
-    planner-picked df cap (``return_plan=True`` hands the decision
-    back as a (frame, plan) pair), and jaccard_topk_per_doc (query
-    d21) bounds the OUTPUT to k rows per document."""
+    The full pair set is inherently quadratic on a duplicated corpus
+    (measured 79x output at x10 data — BASELINE). ``max_df`` bounds
+    the JOIN cost, and jaccard_topk_per_doc (query d21) bounds the
+    OUTPUT to k rows per document."""
     return D.jaccard_pairs(load_table(spark, sf_dir, "documents"), "doc_id", "text", n=3, threshold=0.2)
 
 
@@ -352,17 +350,13 @@ def d06_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-agg per step, lineage truncated per iteration); the oracle is
     the same computation as a DuckDB recursive CTE.
 
-    Pipeline staging (SURVEY §4.2's second named optimizer candidate)
-    is available as ``edges="auto"`` (lsh_planner.plan_dedup_edges:
-    exact inverted-index iff its Sigma C(df,2) volume undercuts LSH's
-    extra postings pass + banded rows). d06 SHIPS the LSH stage
-    unconditionally, deliberately: round-9 measurement (BASELINE.md)
-    found the two stages within stage-floor noise at fixture scale
-    (exact 2.7-3.5 s vs LSH 2.4-2.9 s warm — the round-2 '~2 s slower'
-    note is stale after the shingle rewrites), so the shipped shape is
-    the one that survives the explosive-df regime at 100 TB. Both
-    stages emit the identical edge set (recall-1.0 banding, asserted
-    in tests), so the oracle is valid for either.
+    The pair stage is banded MinHash + exact verify, the one
+    dedup_clusters runs: round-9 measurement (BASELINE.md) found it
+    within stage-floor noise of the exact inverted-index join at
+    fixture scale (exact 2.7-3.5 s vs LSH 2.4-2.9 s warm), and it is
+    the shape that survives the explosive-df regime at 100 TB. Its
+    recall-1.0 banding emits the exact edge set (asserted in tests),
+    so the exact oracle holds.
     """
     return D.dedup_clusters(
         load_table(spark, sf_dir, "documents"),
@@ -370,7 +364,6 @@ def d06_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         "text",
         n=3,
         threshold=0.5,
-        edges="lsh",
     )
 
 

@@ -46,10 +46,14 @@ def test_bench_stdout_contract(tmp_path):
     assert len(result["queries"]) == result["n_queries"] > 0
     # the headline survives a tail-only capture window
     tail = line[-2000:]
-    for needle in ('"metric":', '"value":', '"sf":', '"median_rel_spread_pct":', '"top5":'):
+    for needle in ('"metric":', '"value":', '"sf":', '"cpus":', '"median_rel_spread_pct":', '"top5":'):
         assert needle in tail, f"{needle} fell out of the 2000-char tail"
-    # full per-query detail lives in the side file, not on stdout
+    # the record states the core count it ran at, in both places
     detail = json.load(open(tmp_path / "detail.json"))
+    assert isinstance(result["cpus"], int) and result["cpus"] == detail["cpus"] > 0
+    if os.environ.get("SPARK_GRAFT_CPUS"):
+        assert result["cpus"] == int(os.environ["SPARK_GRAFT_CPUS"])
+    # full per-query detail lives in the side file, not on stdout
     assert set(detail["queries_median"]) == set(result["queries"])
     assert "queries_median" not in result
 

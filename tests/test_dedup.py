@@ -96,7 +96,7 @@ def test_connected_components_literal_graph(spark):
     edges = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (20, 21)], ["doc_a", "doc_b"]
     )
-    got = {r["doc"]: r["cluster"] for r in D.connected_components(edges).collect()}
+    got = {r["doc"]: r["cluster"] for r in D._min_label_loop(edges, "doc_a", "doc_b", 20).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
@@ -114,7 +114,7 @@ def test_connected_components_long_chain_pointer_jump(spark):
     jump gives O(log diameter), where plain min-propagation would need
     64 iterations and silently return split clusters."""
     edges = spark.createDataFrame([(i, i + 1) for i in range(64)], ["doc_a", "doc_b"])
-    got = {r["doc"]: r["cluster"] for r in D.connected_components(edges, max_iter=20).collect()}
+    got = {r["doc"]: r["cluster"] for r in D._min_label_loop(edges, "doc_a", "doc_b", 20).collect()}
     assert got == {i: 0 for i in range(65)}
 
 
@@ -130,7 +130,7 @@ def test_connected_components_2k_chain_stress(spark):
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], ["doc_a", "doc_b"])
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        got = {r["doc"]: r["cluster"] for r in D.connected_components(edges, max_iter=16).collect()}
+        got = {r["doc"]: r["cluster"] for r in D._min_label_loop(edges, "doc_a", "doc_b", 16).collect()}
     assert got == {i: 0 for i in range(n)}
     assert not any("max_iter" in str(c.message) for c in caught)
 
@@ -156,21 +156,6 @@ def test_decontaminate_literal(spark):
     assert rows[2]["contamination"] == 0.0 and not rows[2]["flagged"]
 
 
-def test_decontaminate_shuffled_fallback_equals_broadcast(spark):
-    """broadcast_eval=False (the oversized-eval degradation path) must
-    produce exactly the broadcast result."""
-    train = spark.createDataFrame(
-        [(i, f"shared prefix words here doc {i} unique tail") for i in range(1, 8)],
-        ["doc_id", "text"],
-    )
-    ev = spark.createDataFrame([(100, "shared prefix words here doc")], ["doc_id", "text"])
-    a = sorted(map(tuple, D.decontaminate(train, ev, "doc_id", "text").collect()))
-    b = sorted(
-        map(tuple, D.decontaminate(train, ev, "doc_id", "text", broadcast_eval=False).collect())
-    )
-    assert a == b and len(a) == 7
-
-
 def test_incremental_exact_dedup(spark):
     """Within-increment dups collapse to min-id; content the corpus
     already holds is dropped; genuinely new content survives."""
@@ -192,7 +177,7 @@ def test_connected_components_warns_when_unconverged(spark):
     edges = spark.createDataFrame([(i, i + 1) for i in range(64)], ["doc_a", "doc_b"])
     with W.catch_warnings(record=True) as caught:
         W.simplefilter("always")
-        D.connected_components(edges, max_iter=1).collect()
+        D._min_label_loop(edges, "doc_a", "doc_b", 1).collect()
     assert any("max_iter" in str(c.message) for c in caught)
 
 
@@ -217,47 +202,19 @@ def test_simhash_golden_signature(spark):
 
 def test_dedup_clusters_lsh_equals_exact_edges(spark, sf_dir):
     """The LSH-verified edge stage must yield the same clustering as
-    the exact-Jaccard edge stage on the fixture (recall-1.0 banding) —
-    this is what lets d06 keep its exact SQL oracle while running the
-    candidates-then-verify pipeline."""
+    exact-Jaccard edges on the fixture (recall-1.0 banding) — this is
+    what lets d06 keep its exact SQL oracle while running the
+    candidates-then-verify pipeline. The exact reference is the
+    inverted-index pairs through the same min-label loop."""
     docs = load_table(spark, sf_dir, "documents")
-    lsh = {(r.doc, r.cluster) for r in D.dedup_clusters(docs, "doc_id", "text", edges="lsh").collect()}
-    exact = {(r.doc, r.cluster) for r in D.dedup_clusters(docs, "doc_id", "text", edges="exact").collect()}
+    lsh = {(r.doc, r.cluster) for r in D.dedup_clusters(docs, "doc_id", "text").collect()}
+    pairs = D.jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.5)
+    labels = {r.doc: r.cluster for r in D._min_label_loop(pairs, "doc_a", "doc_b", 20).collect()}
+    exact = {(r.doc_id, labels.get(r.doc_id, r.doc_id)) for r in docs.select("doc_id").collect()}
     assert lsh == exact
-    # the staged path (d06's shipped config) equals both by construction
-    auto = {(r.doc, r.cluster) for r in D.dedup_clusters(docs, "doc_id", "text", edges="auto").collect()}
-    assert auto == exact
-    import pytest
-
-    with pytest.raises(ValueError, match="edges"):
-        D.dedup_clusters(docs, "doc_id", "text", edges="fastest")
 
 
-def test_plan_dedup_edges_stages_by_histogram(spark, sf_dir):
-    """plan_dedup_edges must pick the pipeline with the smaller
-    measurable work: exact on the real documents fixture (clean corpus,
-    Sigma C(df,2) far under the signature cost — the round-2 measured
-    crossover), LSH on a boilerplate-heavy histogram where the exact
-    join explodes. Pure decision both ways, validated on the real
-    fixture's histogram."""
-    from kaylee_spark.operators.lsh_planner import (
-        plan_dedup_edges,
-        shingle_df_histogram,
-    )
-
-    docs = load_table(spark, sf_dir, "documents")
-    sh = D.hashed_shingles(docs, "doc_id", "text", 3).withColumnRenamed("sh64", "shingle")
-    hist = shingle_df_histogram(sh)
-    fixture_plan = plan_dedup_edges(hist, n_docs=docs.count(), threshold=0.5)
-    assert fixture_plan.stage == "exact"
-    assert fixture_plan.exact_pairs <= fixture_plan.lsh_extra_rows
-
-    # 100k docs all sharing 200 boilerplate shingles + a light tail:
-    # the exact join's Sigma C(df,2) dwarfs LSH's extra fixed volume
-    hot = [(100_000, 200), (2, 50_000)]
-    hot_plan = plan_dedup_edges(hot, n_docs=100_000, threshold=0.5)
-    assert hot_plan.stage == "lsh"
-    assert hot_plan.exact_pairs > hot_plan.lsh_extra_rows
+def test_jaccard_max_df_cap(spark):
     """max_df drops only hot shingles: with the cap above every
     document frequency the result is identical to the exact metric,
     and with a tight cap a planted boilerplate shingle shared by ALL
@@ -463,41 +420,29 @@ def test_lsh_index_write_probe_roundtrip(spark, tmp_path):
         "doc_id long, text string",
     )
     path = str(tmp_path / "lsh_index")
-    write_lsh_index(corpus, path, "doc_id", "text", n=3, num_hashes=32, bands=16)
+    write_lsh_index(corpus, path, "doc_id", "text", n=3)
     # the persisted layout is band-partitioned (file-level pruning unit)
     assert any(d.startswith("band=") for d in os.listdir(f"{path}/buckets"))
-    out = probe_lsh_index(
-        spark, path, increment, "doc_id", "text", n=3, num_hashes=32, bands=16, threshold=0.5
-    ).collect()
+    out = probe_lsh_index(spark, path, increment, "doc_id", "text", n=3).collect()
     assert {(r["doc_new"], r["doc_old"]) for r in out} == {(10, 1)}
     (row,) = out
     assert abs(row["jaccard"] - 7 / 9) < 1e-12
     # a second probe reuses the index untouched — identical result
-    again = probe_lsh_index(
-        spark, path, increment, "doc_id", "text", n=3, num_hashes=32, bands=16, threshold=0.5
-    ).collect()
+    again = probe_lsh_index(spark, path, increment, "doc_id", "text", n=3).collect()
     assert [(r["doc_new"], r["doc_old"], r["jaccard"]) for r in again] == [
         (row["doc_new"], row["doc_old"], row["jaccard"])
     ]
-    # the banding is persisted as index metadata: a probe that omits it
-    # — even with a DIFFERENT threshold, which used to silently derive
-    # mismatched banding — reads the baked 32x16 config and still hits
-    from_meta = probe_lsh_index(
-        spark, path, increment, "doc_id", "text", n=3, threshold=0.5
-    ).collect()
-    assert {(r["doc_new"], r["doc_old"]) for r in from_meta} == {(10, 1)}
+    # the banding is persisted as index metadata: a probe with a
+    # DIFFERENT threshold, which would plan different banding, reads
+    # the baked config and still hits
     lower_thresh = probe_lsh_index(
         spark, path, increment, "doc_id", "text", n=3, threshold=0.3
     ).collect()
     assert {(r["doc_new"], r["doc_old"]) for r in lower_thresh} == {(10, 1)}
-    # explicitly pinned config that mismatches the persisted one raises
-    # instead of silently probing foreign buckets
+    # a shingle n that mismatches the persisted one raises instead of
+    # silently probing foreign buckets
     import pytest
 
-    with pytest.raises(ValueError, match="mismatches the persisted"):
-        probe_lsh_index(
-            spark, path, increment, "doc_id", "text", n=3, num_hashes=64, bands=16
-        )
     with pytest.raises(ValueError, match="shingle n"):
         probe_lsh_index(spark, path, increment, "doc_id", "text", n=5)
     # a meta dir that EXISTS but is unreadable (e.g. an interrupted
@@ -514,11 +459,10 @@ def test_lsh_index_write_probe_roundtrip(spark, tmp_path):
     with pytest.raises(AnalysisException):
         probe_lsh_index(spark, path, increment, "doc_id", "text", n=3)
     # a fully MISSING meta dir is the legacy layout: falls back to
-    # resolve_banding, which here re-derives the same 32x16 config
+    # resolve_banding, which at the same threshold re-derives the
+    # write-time config
     shutil.rmtree(f"{path}/meta")
-    legacy = probe_lsh_index(
-        spark, path, increment, "doc_id", "text", n=3, num_hashes=32, bands=16
-    ).collect()
+    legacy = probe_lsh_index(spark, path, increment, "doc_id", "text", n=3).collect()
     assert {(r["doc_new"], r["doc_old"]) for r in legacy} == {(10, 1)}
 
 
@@ -684,47 +628,6 @@ def test_bloom_prescreen_planted(spark):
     assert r["n_false_neg"] == 0                      # the Bloom guarantee
     assert r["n_flagged"] >= 2                        # both dups flagged
     assert r["n_false_pos"] == r["n_flagged"] - 2
-
-
-def test_pair_budget_plans_cap_and_reports(spark):
-    """pair_budget wires plan_max_df into the call sites: the cap is
-    planner-chosen from the df histogram and return_plan=True hands
-    the decision back explicitly as a (frame, plan) pair."""
-    base = "the quick brown fox jumps over the lazy dog"
-    rows = [(i, f"{base} copy") for i in range(20)] + [(100, "totally unrelated words here")]
-    df = spark.createDataFrame(rows, "doc_id long, text string")
-    # hot shingles have df=20 -> C(20,2)=190 pairs each; a tight budget
-    # must drop them (cap < 20), a loose one must keep them
-    tight, tplan = D.jaccard_pairs(
-        df, "doc_id", "text", n=3, threshold=0.0, pair_budget=50, return_plan=True
-    )
-    assert tplan["max_df"] < 20
-    assert tplan["predicted_pair_bound"] <= 50
-    assert tplan["pair_budget"] == 50
-    assert tight.count() == 0  # every shared shingle was corpus-hot
-    loose, lplan = D.jaccard_pairs(
-        df, "doc_id", "text", n=3, threshold=0.9, pair_budget=10_000, return_plan=True
-    )
-    assert lplan["max_df"] >= 20
-    assert loose.count() == 190  # all copy-pairs survive
-    # containment_pairs shares the knob
-    cont, cplan = D.containment_pairs(
-        df, "doc_id", "text", n=3, threshold=0.9, pair_budget=10_000, return_plan=True
-    )
-    assert cplan["max_df"] >= 20
-    assert cont.count() == 380  # both directions
-    # without return_plan the call returns a bare frame (no tuple, no
-    # ad-hoc attributes), and without pair_budget the plan is None
-    bare = D.jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.9, pair_budget=10_000)
-    assert not isinstance(bare, tuple)
-    _, noplan = D.jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.9, return_plan=True)
-    assert noplan is None
-    # the budget path must not leak cached datasets: it checkpoints the
-    # capped postings (not tracked by the SQL cache manager) and
-    # unpersists the raw-postings cache before returning
-    spark.catalog.clearCache()
-    D.jaccard_pairs(df, "doc_id", "text", n=3, threshold=0.9, pair_budget=10_000).count()
-    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_jaccard_topk_per_doc_bounds_output(spark):

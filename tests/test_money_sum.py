@@ -18,10 +18,11 @@ from decimal import Decimal
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
-from pyspark.errors import ArithmeticException
+from pyspark.errors import ArithmeticException, SparkRuntimeException
 from pyspark.sql import functions as F
 
-from kaylee_spark.functions import dec_avg, dec_sum, money_sum
+from kaylee_spark.functions import ANSI, dec_avg, dec_sum, money_sum
+from kaylee_spark.operators.skew import scoped_conf
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -86,6 +87,19 @@ def test_nan_and_infinity_raise(spark, bad):
     df = _frame(spark, [(0, 1.0), (0, bad)])
     with pytest.raises(ArithmeticException, match="CAST_OVERFLOW"):
         _by_key(df, dec_sum("x"))
+
+
+@pytest.mark.parametrize("bad", [float("nan"), float("inf"), 1e13])
+def test_ansi_off_session_still_raises(spark, bad):
+    """With ANSI off the bigint cast turns NaN into 0 and saturates an
+    overflow, so the sum would be wrong with no error: the guard money_sum
+    builds on such a session raises instead, and valid rows sum the same."""
+    with scoped_conf(spark, {ANSI: "false"}):
+        with pytest.raises(SparkRuntimeException, match=ANSI):
+            _by_key(_frame(spark, [(0, 1.0), (0, bad)]), dec_sum("x"))
+        got = _by_key(_frame(spark, enumerate(TIES)), money_sum("x"), F.expr(REF_SUM))
+    for k, x in enumerate(TIES):
+        assert got[k][0] == got[k][1], x
 
 
 def test_limb_recombination_is_exact_at_the_contract_edge(spark):

@@ -563,20 +563,6 @@ def test_knn_graph_exact_shape_and_selfless(spark, sf_dir):
     out.unpersist()
 
 
-def test_knn_graph_bucketed_recall(spark, sf_dir):
-    from pyspark.sql import functions as F
-
-    from kaylee_spark.operators.similarity import knn_graph
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(200)
-    exact = knn_graph(emb, k=3).select("src", "dst")
-    approx = knn_graph(emb, k=3, bucketed=True, n_tables=12, n_planes=4).select("src", "dst")
-    hit = exact.join(approx, ["src", "dst"]).count()
-    total = exact.count()
-    # 12-table sign LSH on near-isotropic vectors: most true edges kept
-    assert hit / total > 0.8
-
-
 # ---------------------------------------------------------------------------
 # semantic_clusters
 # ---------------------------------------------------------------------------

@@ -183,25 +183,22 @@ def measure(sf_dir: str) -> dict:
 
 
 def skew_leg(base: str, multiplier: int = 10, n_phrases: int = 8) -> dict:
-    """The dedup staging planner's REGIME fixture (VERDICT r9 item 3):
+    """The regime where near-dup clustering's LSH pair stage pays off:
     every natural fixture sits in stage-floor noise where exact vs LSH
     never changes wall-clock. This leg plants document-frequency skew —
     each doc gets one of ``n_phrases`` sentinel phrases appended, so
     n_docs/n_phrases docs share one hot shingle (kept BELOW the
     DEFAULT_MAX_DF cap, the regime the cap does not save you from) —
-    and measures the blow-up of the exact inverted-index path against
-    LSH's corpus-size-linear banding, with plan_dedup_edges deciding
-    from the histogram alone.
+    and times the exact inverted-index path against LSH's
+    corpus-size-linear banding.
 
     Expected: exact candidates ~ n_phrases * C(n_docs/n_phrases, 2)
     (quadratic in the planted df) while LSH candidates stay near the
     unskewed corpus's (the hot shingle shifts signatures only for the
-    minority of hash slots it wins), so the planner must pick "lsh"
-    and the wall-clock gap is the planner's value in seconds."""
+    minority of hash slots it wins), and both emit the same pairs."""
     from pyspark.sql import functions as F
 
     from kaylee_spark.operators import dedup as D
-    from kaylee_spark.operators.lsh_planner import plan_dedup_edges, shingle_df_histogram
     from kaylee_spark.session import get_spark
 
     out_dir = f"/tmp/kaylee_dedup_probe_skew_x{multiplier}"
@@ -222,10 +219,6 @@ def skew_leg(base: str, multiplier: int = 10, n_phrases: int = 8) -> dict:
     skewed = docs.withColumn("text", F.concat(F.col("text"), F.lit(" "), phrase)).cache()
     n_docs = skewed.count()
 
-    sh = D.hashed_shingles(skewed, "doc_id", "text", 3).withColumnRenamed("sh64", "shingle")
-    hist = shingle_df_histogram(sh)
-    plan = plan_dedup_edges(hist, n_docs=n_docs, threshold=0.5)
-
     t0 = time.monotonic()
     exact_pairs = D.jaccard_pairs(skewed, "doc_id", "text", n=3, threshold=0.5).count()
     exact_secs = round(time.monotonic() - t0, 2)
@@ -238,9 +231,6 @@ def skew_leg(base: str, multiplier: int = 10, n_phrases: int = 8) -> dict:
     result = {
         "n_docs": n_docs,
         "planted_df": n_docs // n_phrases,
-        "plan_stage": plan.stage,
-        "plan_exact_pairs": plan.exact_pairs,
-        "plan_lsh_extra_rows": plan.lsh_extra_rows,
         "exact_secs": exact_secs,
         "lsh_secs": lsh_secs,
         "exact_pairs": exact_pairs,
@@ -255,7 +245,7 @@ def main() -> int:
     base = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     if "--skew-only" in sys.argv:
         res = skew_leg(base)
-        return 0 if res["plan_stage"] == "lsh" and res["outputs_equal"] else 1
+        return 0 if res["outputs_equal"] else 1
     multipliers = [int(x) for x in (sys.argv[2].split(",") if len(sys.argv) > 2 else ["1", "3", "10"]) if x != "--skew-only"]
     results = {}
     top_dir = None
