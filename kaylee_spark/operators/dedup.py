@@ -603,37 +603,17 @@ def resolve_banding(
     target_recall: float = 0.99,
     max_hashes: int = 64,
 ) -> tuple[int, int]:
-    """Planner-backed banding defaults: when the caller does not pin a
-    config, lsh_planner.minhash_plan picks the minimum-false-candidate
+    """Planner-backed banding defaults: when the caller pins neither
+    value, lsh_planner.minhash_plan picks the minimum-false-candidate
     (bands, rows) meeting the recall floor at ``threshold`` within the
     signature budget — the SURVEY §4.2 optimizer decision, made once
-    at plan time from pure S-curve arithmetic.
-
-    Half-pinned configs are honored as constraints, not silently
-    re-planned: a pinned ``num_hashes`` with ``bands=None`` becomes
-    the planner's signature BUDGET CEILING — the 128-hash caller's
-    plan is chosen within 128 hashes instead of the 64 default, but
-    the planner may use fewer if a shorter signature already meets
-    the recall floor (callers that must bake an exact signature
-    length, e.g. write_lsh_index, should pin both); a pinned
-    ``bands`` without ``num_hashes`` is an error — bands alone does
-    not determine a row count."""
+    at plan time from pure S-curve arithmetic. A pinned config passes
+    through: pass both values or neither."""
     if num_hashes is None and bands is None:
         from kaylee_spark.operators.lsh_planner import minhash_plan
 
         plan = minhash_plan(threshold, target_recall=target_recall, max_hashes=max_hashes)
         return plan.num_hashes, plan.bands
-    if bands is None:
-        from kaylee_spark.operators.lsh_planner import minhash_plan
-
-        plan = minhash_plan(threshold, target_recall=target_recall, max_hashes=num_hashes)
-        return plan.num_hashes, plan.bands
-    if num_hashes is None:
-        raise ValueError(
-            "bands pinned without num_hashes — pass both (explicit banding) "
-            "or neither (planner default); bands alone does not determine "
-            "a signature length"
-        )
     return num_hashes, bands
 
 

@@ -15,11 +15,9 @@ def asof_join(
     on: str,
     left_time: str,
     right_time: str,
-    direction: str = "backward",
 ) -> DataFrame:
     """As-of join: for each left row, the single right row with the
-    latest right_time <= left_time (backward) / earliest >= (forward),
-    per `on` key.
+    latest right_time <= left_time, per `on` key.
 
     Implementation is the union+window pattern — one shuffle on the
     key, one ordered scan, no range explosion:
@@ -28,9 +26,6 @@ def asof_join(
     Scales as sort-merge, the right strategy when both sides are huge
     (the alternative, key+bucketed range join, multiplies rows).
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be backward|forward")
-
     rcols = [c for c in right.columns if c != on and c != right_time]
     l_tag = left.select(
         F.col(on).alias("_k"),
@@ -47,15 +42,10 @@ def asof_join(
         F.struct(*[F.col(c) for c in rcols]).alias("_rrow"),
     )
     unioned = l_tag.unionByName(r_tag)
-    if direction == "backward":
-        # right rows sort before left rows at equal time -> <= semantics
-        w = Window.partitionBy("_k").orderBy(F.asc("_t"), F.asc("_is_left")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        carried = F.last(F.col("_rrow"), ignorenulls=True).over(w)
-        carried_t = F.last(F.when(F.col("_is_left") == 0, F.col("_t")), ignorenulls=True).over(w)
-    else:
-        w = Window.partitionBy("_k").orderBy(F.desc("_t"), F.asc("_is_left")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        carried = F.last(F.col("_rrow"), ignorenulls=True).over(w)
-        carried_t = F.last(F.when(F.col("_is_left") == 0, F.col("_t")), ignorenulls=True).over(w)
+    # right rows sort before left rows at equal time -> <= semantics
+    w = Window.partitionBy("_k").orderBy(F.asc("_t"), F.asc("_is_left")).rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    carried = F.last(F.col("_rrow"), ignorenulls=True).over(w)
+    carried_t = F.last(F.when(F.col("_is_left") == 0, F.col("_t")), ignorenulls=True).over(w)
 
     out = (
         unioned.withColumn("_matched", carried)

@@ -136,7 +136,6 @@ def signlsh_plan(
     cos_threshold: float,
     target_recall: float = 0.95,
     max_bits: int = 64,
-    reject_at: float = 0.0,
     probe_bits: int = 0,
 ) -> BandingPlan:
     """Choose (tables, planes) for random-hyperplane LSH — the sign
@@ -148,15 +147,13 @@ def signlsh_plan(
     extra signature bits — the shipped ANN operator probes 1 bit.
 
     Returns a BandingPlan with bands = n_tables, rows = n_planes,
-    num_hashes = total signature bits. ``reject_at`` defaults to
-    cosine 0 (orthogonal vectors — unrelated embeddings), where
-    q = 1/2 exactly.
+    num_hashes = total signature bits. The false-candidate rate is
+    read at cosine 0 (orthogonal vectors — unrelated embeddings),
+    where q = 1/2 exactly.
     """
     if not 0.0 < cos_threshold < 1.0:
         raise ValueError("cos_threshold must be in (0, 1)")
     q = signlsh_collision(cos_threshold)
-    if not 0.0 <= reject_at < cos_threshold:
-        raise ValueError("reject_at must be in [0, cos_threshold)")
     best: BandingPlan | None = None
     for planes in range(1, max_bits + 1):
         p = _table_hit_prob(q, planes, probe_bits)
@@ -175,7 +172,7 @@ def signlsh_plan(
             rows=planes,
             num_hashes=tables * planes,
             recall_at_threshold=signlsh_recall(cos_threshold, tables, planes, probe_bits),
-            fp_rate=signlsh_recall(reject_at, tables, planes, probe_bits),
+            fp_rate=signlsh_recall(0.0, tables, planes, probe_bits),
         )
         if (
             best is None

@@ -22,23 +22,11 @@ from pyspark.sql import functions as F
 
 from kaylee_spark.operators.skew import pin_width
 
-from kaylee_spark.functions import cosine, dot, l2_norm
+from kaylee_spark.functions import cosine
 
 
 def _as_double(col):
     return F.transform(col, lambda x: x.cast("double"))
-
-
-def _with_normalized(df: DataFrame, vec_col: str, out_col: str) -> DataFrame:
-    """Add a unit-normalized copy of an array<double> column.
-
-    Normalizing ONCE per vector turns every downstream cosine into a
-    bare dot product — at corpus scale the verify stage touches each
-    candidate PAIR, so moving the two norms out of the pair loop and
-    into the per-vector scan removes 2/3 of the flops."""
-    return df.withColumn("_nrm", l2_norm(F.col(vec_col))).withColumn(
-        out_col, F.transform(F.col(vec_col), lambda x: x / F.col("_nrm"))
-    ).drop("_nrm")
 
 
 def cosine_topk(
@@ -129,36 +117,18 @@ def _table_signatures(vec_name: str, tables: list[list[list[float]]]):
     )
 
 
-def _rerank_topk(
-    cands: DataFrame,
-    q: DataFrame,
-    c: DataFrame,
-    k: int,
-    dim: int,
-    parity_rerank: bool,
-) -> DataFrame:
+def _rerank_topk(cands: DataFrame, q: DataFrame, c: DataFrame, k: int) -> DataFrame:
     """Exact top-k re-rank of (query_id, neighbor_id) candidate pairs.
 
-    Two float paths, same mathematical result:
-    - default: normalize each vector once, unrolled fixed-dim dot per
-      pair (codegen'd — the at-scale path; norms leave the pair loop).
-    - parity_rerank: cosine(qv, cv) on the raw vectors — the EXACT
-      expression cosine_topk uses, so when candidates cover the true
-      top-k the output is bit-identical to the brute-force baseline
-      (and hence to its SQL oracle). Near-ties can differ in the last
-      ulp between the two paths, flipping the rank-k boundary; parity
-      mode exists so ANN queries can share the exact query's oracle.
+    Scores with cosine(qv, cv) on the raw vectors, the expression
+    cosine_topk uses, so when the candidates cover the true top-k the
+    output is bit-identical to the brute-force baseline (and hence to
+    its SQL oracle): the ANN queries share the exact query's oracle.
     """
-    if parity_rerank:
-        cands = cands.join(F.broadcast(q.withColumnRenamed("qv", "qn")), "query_id").join(
-            c.withColumnRenamed("cv", "cn"), "neighbor_id"
-        )
-        scored = cands.withColumn("cosine_sim", cosine(F.col("qn"), F.col("cn")))
-    else:
-        qn = _with_normalized(q, "qv", "qn").select("query_id", "qn")
-        cn = _with_normalized(c, "cv", "cn").select("neighbor_id", "cn")
-        cands = cands.join(F.broadcast(qn), "query_id").join(cn, "neighbor_id")
-        scored = cands.withColumn("cosine_sim", dot(F.col("qn"), F.col("cn")))
+    cands = cands.join(F.broadcast(q.withColumnRenamed("qv", "qn")), "query_id").join(
+        c.withColumnRenamed("cv", "cn"), "neighbor_id"
+    )
+    scored = cands.withColumn("cosine_sim", cosine(F.col("qn"), F.col("cn")))
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine_sim"), F.asc("neighbor_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
@@ -178,7 +148,6 @@ def lsh_bucketed_topk(
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 42,
-    parity_rerank: bool = False,
     cos_threshold: float = 0.45,
     target_recall: float = 0.9999,
 ) -> DataFrame:
@@ -243,7 +212,7 @@ def lsh_bucketed_topk(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    return _rerank_topk(cands, q, c, k, dim, parity_rerank)
+    return _rerank_topk(cands, q, c, k)
 
 
 def ivf_topk(
@@ -252,13 +221,11 @@ def ivf_topk(
     k: int = 10,
     n_centroids: int = 16,
     n_probe: int = 4,
-    dim: int = 64,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     query_id_col: str = "query_id",
     seed: int = 42,
     max_iter: int = 5,
-    parity_rerank: bool = False,
 ) -> DataFrame:
     """ANN top-k via IVF (inverted-file) coarse quantization + re-rank.
 
@@ -310,7 +277,7 @@ def ivf_topk(
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-    return _rerank_topk(cands, q, assigned.select("neighbor_id", "cv"), k, dim, parity_rerank)
+    return _rerank_topk(cands, q, assigned.select("neighbor_id", "cv"), k)
 
 
 #: Sign-signature constants: ±1 hyperplane entries derived from the

@@ -58,8 +58,9 @@ def m03_mapreduce_api_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer as the DataFrame path and the SQL oracle.
 
     Uses from_dataframe (distributed scan) rather than a driver-side
-    datafn; combiner declared associative so reduceByKey does map-side
-    partial aggregation (README.md:20-24's correctness condition).
+    datafn; combiner declared associative, so each map task folds its
+    words into one dict and ships a pickled chunk of partial counts per
+    reduce bucket (README.md:20-24's correctness condition).
     """
 
     def mapfn(doc_id, text):

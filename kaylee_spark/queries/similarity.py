@@ -14,7 +14,7 @@ from kaylee_spark.sources import load_table
 # by construction, by the ANN variants s02/s04: their candidate sets
 # provably cover the true top-10 on the fixture (asserted in
 # tests/test_similarity.py) and they re-rank with the identical
-# cosine expression (parity_rerank), so their output EQUALS this.
+# cosine expression, so their output EQUALS this.
 _EXACT_TOPK_ORACLE = """
     SELECT query_id, neighbor_id, cosine_sim, rank FROM (
         SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
@@ -57,8 +57,8 @@ def s02_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Driver-verifiable against the exact-top-k oracle: at this fixture
     scale the 12-table candidate union covers the true top-10 for every
-    query (recall 1.0, asserted in tests/test_similarity.py), and
-    parity_rerank scores candidates with the same cosine expression as
+    query (recall 1.0, asserted in tests/test_similarity.py), and the
+    re-rank scores candidates with the same cosine expression as
     s01 — so the output equals the exact result while the PLAN remains
     the bucketed ANN plan (candidate volume ~ bucket occupancy, not
     corpus size). Sub-1.0-recall configs stay property-tested.
@@ -66,7 +66,7 @@ def s02_lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
     out = S.lsh_bucketed_topk(
-        emb, queries, k=10, n_planes=None, n_tables=None, dim=64, parity_rerank=True
+        emb, queries, k=10, n_planes=None, n_tables=None, dim=64
     )
     return out.select("query_id", "neighbor_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
 
@@ -78,8 +78,8 @@ def s04_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Driver-verifiable against the exact-top-k oracle by pinning
     n_probe = n_centroids: every list is probed, so candidate coverage
-    is exhaustive BY CONSTRUCTION and (with parity_rerank) the output
-    equals s01's exact result while the plan is still the full IVF
+    is exhaustive BY CONSTRUCTION and (the re-rank being s01's cosine)
+    the output equals s01's exact result while the plan is still the full IVF
     structure (index build -> probe ranking -> list search -> re-rank).
     No smaller probe count reaches recall 1.0 on this fixture — the
     embeddings are near-isotropic random vectors, so true cosine
@@ -89,7 +89,7 @@ def s04_ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-    out = S.ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=16, dim=64, parity_rerank=True)
+    out = S.ivf_topk(emb, queries, k=10, n_centroids=16, n_probe=16)
     return out.select("query_id", "neighbor_id", F.round("cosine_sim", 6).alias("cosine_sim"), "rank")
 
 

@@ -19,10 +19,12 @@ from, and ``module.name`` to that module's def. So a test-only helper
 cannot hide behind a reached helper of the same name elsewhere.
 
 The option scan does the same for parameters: a public package
-function's parameter that defaults to True, False or None selects a
-branch, and no product call passing it means the branch is one no
-query takes. A call that only forwards its own unpassed option does
-not count, so that scan also runs to a fixed point.
+function's parameter that defaults to True, False or None, or that
+defaults to a string the body compares with a string literal
+(``==``, ``!=``, ``in``), selects a branch, and no product call
+passing it means the branch is one no query takes. A call that only
+forwards its own unpassed option does not count, so that scan also
+runs to a fixed point.
 """
 
 from __future__ import annotations
@@ -49,7 +51,8 @@ KEEP = {
     "stratified_sample_k": "README's exact-k-per-stratum sample",
 }
 
-#: True/False/None-defaulted options no product call passes that stay,
+#: True/False/None-defaulted or string-mode options no product call
+#: passes that stay,
 #: each with its reason: deployment settings only. The KEEP helpers'
 #: own parameters stay with their helper.
 SWITCHES = {
@@ -239,14 +242,40 @@ def unreached(product=PRODUCT) -> set[str]:
         dead = now
 
 
-def _is_switch(default: ast.AST | None) -> bool:
-    return isinstance(default, ast.Constant) and any(default.value is v for v in (True, False, None))
+_MODE_OPS = (ast.Eq, ast.NotEq, ast.In, ast.NotIn)
+
+
+def _is_str_literal(node: ast.AST) -> bool:
+    """A string constant, or a tuple, list or set of them."""
+    if isinstance(node, (ast.Tuple, ast.List, ast.Set)):
+        return bool(node.elts) and all(_is_str_literal(e) for e in node.elts)
+    return isinstance(node, ast.Constant) and isinstance(node.value, str)
+
+
+def _compared_to_literal(fn: ast.AST, param: str) -> bool:
+    """Whether ``fn`` compares ``param`` with a string literal."""
+    for n in ast.walk(fn):
+        if isinstance(n, ast.Compare) and all(isinstance(op, _MODE_OPS) for op in n.ops):
+            operands = [n.left, *n.comparators]
+            if any(isinstance(o, ast.Name) and o.id == param for o in operands) and any(
+                _is_str_literal(o) for o in operands
+            ):
+                return True
+    return False
+
+
+def _is_switch(fn: ast.AST, param: str, default: ast.AST | None) -> bool:
+    if not isinstance(default, ast.Constant):
+        return False
+    if isinstance(default.value, str):
+        return _compared_to_literal(fn, param)
+    return any(default.value is v for v in (True, False, None))
 
 
 def _switches(mods: list[_Module]) -> dict[tuple[Path, str, str], int | None]:
-    """Every True/False/None-defaulted parameter of a public top-level
-    package function: (file, function, parameter) -> its position, or
-    None when it is keyword-only."""
+    """Every True/False/None-defaulted or string-mode parameter of a
+    public top-level package function: (file, function, parameter) ->
+    its position, or None when it is keyword-only."""
     out: dict[tuple[Path, str, str], int | None] = {}
     for mod in mods:
         for fn in mod.tree.body if mod.in_package else ():
@@ -256,10 +285,10 @@ def _switches(mods: list[_Module]) -> dict[tuple[Path, str, str], int | None]:
             positional = [*fn.args.posonlyargs, *fn.args.args]
             tail = positional[len(positional) - len(fn.args.defaults):]
             for a, d in zip(tail, fn.args.defaults):
-                if _is_switch(d):
+                if _is_switch(fn, a.arg, d):
                     out[(mod.path, fn.name, a.arg)] = positional.index(a)
             for a, d in zip(fn.args.kwonlyargs, fn.args.kw_defaults):
-                if _is_switch(d):
+                if _is_switch(fn, a.arg, d):
                     out[(mod.path, fn.name, a.arg)] = None
     return out
 
@@ -338,7 +367,7 @@ def test_no_option_no_product_call_passes():
         sw for sw in unpassed_switches() if sw not in SWITCHES and sw.split("(")[0] not in KEEP
     )
     assert not extra, (
-        "no product call passes these True/False/None-defaulted options, so the "
+        "no product call passes these True/False/None-defaulted or string-mode options, so the "
         "branch each selects is one no query takes; delete them with their "
         "branches, or give them a caller: " + ", ".join(extra)
     )
@@ -422,16 +451,24 @@ def test_switch_scan_follows_forwarding(tmp_path, monkeypatch):
         "def wrapper(df, tidy=None): return op(df, tidy=tidy)\n"
         "def caller(df, mode=None): return op(df, df.fast, mode, flag=False)\n"
         "def loop(x, again=None): return loop(x, again=again)\n"
+        "def sided(df, side='left', how='inner', col='x', kind='a'):\n"
+        "    if side == 'left' or how not in ('inner', 'outer') or 'r' != kind: pass\n"
+        "    return df[col] == 'x', col == df.name\n"
+        "def sided_caller(df): return sided(df, how='outer')\n"
     )
     (tmp_path / "tool.py").write_text(
-        "from kaylee_spark.m import caller\ncaller(1, mode='x')\n"
+        "from kaylee_spark.m import caller, sided_caller\ncaller(1, mode='x')\nsided_caller(1)\n"
     )
     monkeypatch.setitem(globals(), "ROOT", tmp_path)
     # op(tidy) is only forwarded from wrapper's unpassed tidy, op(mode)
     # from caller's passed mode; a call of loop by itself passes nothing
-    # in; n is a numeric default
+    # in; n is a numeric default; sided's side and kind are string
+    # modes no call passes, how is passed, and col is a column name,
+    # compared with a literal only through a subscript or with a name
     assert unpassed_switches(("kaylee_spark", "tool.py")) == {
         "op(tidy)",
         "wrapper(tidy)",
         "loop(again)",
+        "sided(side)",
+        "sided(kind)",
     }

@@ -47,23 +47,6 @@ def test_minhash_plan_reproduces_shipped_d04_config():
     assert D.resolve_banding(32, 16, 0.5) == (32, 16)
 
 
-def test_resolve_banding_honors_half_pinned_budget():
-    """A pinned num_hashes with bands=None is a BUDGET, not a value to
-    silently discard: the planner must plan within it (and a bigger
-    budget must not plan worse than the 64-hash default)."""
-    nh_default, _ = D.resolve_banding(None, None, 0.5)
-    nh_128, bands_128 = D.resolve_banding(128, None, 0.5)
-    assert nh_128 <= 128
-    assert nh_128 >= nh_default  # the larger budget was actually used
-    assert nh_128 % bands_128 == 0  # still a valid bands x rows grid
-    # a tiny pinned budget binds
-    nh_8, _ = D.resolve_banding(8, None, 0.5)
-    assert nh_8 <= 8
-    # bands without num_hashes is underdetermined -> error, not a guess
-    with pytest.raises(ValueError):
-        D.resolve_banding(None, 16, 0.5)
-
-
 def test_signlsh_plan_reproduces_shipped_s02_config():
     """The shipped ANN config (4 planes x 12 tables, 1-bit probe) is
     the planner's own choice at recall 0.9999 / cosine 0.45 / 48 bits

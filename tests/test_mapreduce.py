@@ -4,10 +4,12 @@ plus the associativity laws its README asserts (README.md:20-24)."""
 
 from __future__ import annotations
 
+import pickle
 from collections import Counter
 
 import pytest
 
+from kaylee_spark.core import mapreduce as MR
 from kaylee_spark.core.mapreduce import MapReduceJob, word_count
 
 CORPUS = [
@@ -44,7 +46,8 @@ def make_job(spark, **kw) -> MapReduceJob:
 
 
 def test_holistic_reducer_path(spark):
-    # no combiner declared -> groupByKey path, exact reference semantics
+    # no combiner declared -> every value reaches reducefn, exact
+    # reference semantics
     assert make_job(spark).results() == expected_counts()
 
 
@@ -77,6 +80,128 @@ def test_input_order_invariance(spark):
 def test_custom_partition_fn(spark):
     job = make_job(spark, combiner=lambda a, b: a + b, num_partitions=3, partition_fn=lambda k: len(k))
     assert job.results() == expected_counts()
+    # each key sits in reduce partition partition_fn(k) % n
+    parts = job.run().glom().collect()
+    assert len(parts) == 3
+    assert sorted(k for part in parts for k, _ in part) == sorted(expected_counts())
+    for b, part in enumerate(parts):
+        assert all(len(k) % 3 == b for k, _ in part)
+
+
+# keys a dict merges (1 == True == 1.0) and keys whose builtin hash
+# differs per process on CPython < 3.12 (None, tuples holding None)
+MIXED_KEYS = [1, True, 1.0, None, (None, "a"), (None, 1), (None, True), (1, None), "x", 2, 2.0]
+
+
+def mixed_records() -> list[tuple[int, object]]:
+    return [(i, MIXED_KEYS[i % len(MIXED_KEYS)]) for i in range(5 * len(MIXED_KEYS))]
+
+
+def fold(records, combiner) -> dict:
+    """The plain-Python reference: one dict over every record."""
+    groups: dict = {}
+    for i, key in records:
+        groups.setdefault(key, []).append(i)
+    return {k: sum(vs) if combiner else sorted(vs) for k, vs in groups.items()}
+
+
+def index_by_key():
+    # nested, so cloudpickle ships it by value to the workers
+    def mapfn(i, key):
+        yield key, i
+
+    return mapfn
+
+
+@pytest.mark.parametrize("combiner", [lambda a, b: a + b, None], ids=["combiner", "holistic"])
+def test_mixed_keys_merge_as_a_dict_does(spark, combiner):
+    records = mixed_records()
+    job = MapReduceJob(
+        spark,
+        datafn=lambda: iter(records),
+        mapfn=index_by_key(),
+        reducefn=(lambda k, vs: sum(vs)) if combiner else (lambda k, vs: sorted(vs)),
+        combiner=combiner,
+        num_partitions=3,
+    )
+    got = job.results()
+    assert got == fold(records, combiner)
+    # 1/True/1.0, 2/2.0 and (None, 1)/(None, True) each merge to one key
+    assert len(got) == 7
+
+
+@pytest.mark.parametrize("combiner", [lambda a, b: a + b, None], ids=["combiner", "holistic"])
+def test_early_flush_keeps_the_result(spark, combiner):
+    """A map task over its memory bound flushes partials early; the
+    reducer merges them (and spills past the same bound) to the same
+    dict, and a holistic reducefn still sees every value."""
+    sc = spark.sparkContext
+    records = [(i, i % 50) for i in range(6000)]
+    source = sc.parallelize(records, 2)
+    n = 3
+
+    def chunks(limit_mb):
+        return source.mapPartitions(MR._map_task(index_by_key(), combiner, MR._hash, n, limit_mb))
+
+    unbounded = chunks(float("inf")).collect()
+    flushed = chunks(0).collect()
+    assert len(unbounded) == 2 * n  # one chunk per bucket and task
+    assert len(flushed) > len(unbounded)  # the check at record 1000 flushed
+
+    reducefn = (lambda k, vs: sum(vs)) if combiner else (lambda k, vs: sorted(vs))
+    reduced = chunks(0).partitionBy(n, MR._bucket).mapPartitions(MR._reduce_task(reducefn, combiner, 1))
+    got: dict = {}
+    for chunk in reduced.collect():
+        got.update(pickle.loads(chunk))
+    assert got == fold(records, combiner)
+
+
+def test_partition_hash_is_portable():
+    """Equal keys get one hash in every process, though CPython < 3.12
+    hashes None (and so a tuple holding None) by address."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import json; from kaylee_spark.core.mapreduce import _hash; "
+        "print(json.dumps([_hash(k) for k in "
+        "[None, (None, 1), (None, True), ((None,), 'a'), (1, (2, None)), ('a', 1), 'a', 1, True, 1.0]]))"
+    )
+    env = {**os.environ, "PYTHONHASHSEED": "0", "PYTHONPATH": root}
+    runs = [
+        json.loads(subprocess.run([sys.executable, "-c", code], env=env, capture_output=True, text=True, check=True).stdout)
+        for _ in range(2)
+    ]
+    assert runs[0] == runs[1]
+    h = runs[0]
+    assert h[1] == h[2] and h[7] == h[8] == h[9]  # (None, 1) == (None, True); 1 == True == 1.0
+
+
+def test_hash_seed_checked_once_per_task(monkeypatch):
+    from pyspark.errors import PySparkRuntimeError
+
+    task = MR._map_task(index_by_key(), None, MR._hash, 2, float("inf"))
+    records = [(i, i % 7) for i in range(100)]
+    monkeypatch.delenv("PYTHONHASHSEED", raising=False)
+    with pytest.raises(PySparkRuntimeError, match="PYTHON_HASH_SEED_NOT_SET"):
+        list(task(iter(records)))
+
+    monkeypatch.setenv("PYTHONHASHSEED", "0")
+    calls = []
+    monkeypatch.setattr(MR, "portable_hash", lambda x: calls.append(x) or 0)
+    assert len(list(task(iter(records)))) == 2
+    assert calls == [None]  # once for the task, not once per key
+
+
+@pytest.mark.parametrize("combiner", [lambda a, b: a + b, None], ids=["combiner", "holistic"])
+def test_empty_datafn_returns_empty_dict(spark, combiner):
+    job = make_job(spark, combiner=combiner)
+    job.datafn = lambda: iter(())
+    assert job.results() == {}
+    assert job.run().collect() == []
 
 
 def test_holistic_reducer_gets_full_iterator(spark):

@@ -32,14 +32,6 @@ def test_asof_join_backward(spark):
     assert len(out) == 3  # every left row survives
 
 
-def test_asof_join_forward(spark):
-    left = spark.createDataFrame([("A", 5, "l1"), ("A", 25, "l2")], ["k", "t", "tag"])
-    right = spark.createDataFrame([("A", 10, "r1"), ("A", 20, "r2")], ["k", "t2", "val"])
-    out = asof_join(left, right, on="k", left_time="t", right_time="t2", direction="forward").collect()
-    got = {r["tag"]: r["val"] for r in out}
-    assert got == {"l1": "r1", "l2": None}
-
-
 def test_asof_equal_timestamps_match(spark):
     left = spark.createDataFrame([("A", 10, "l")], ["k", "t", "tag"])
     right = spark.createDataFrame([("A", 10, "r")], ["k", "t2", "val"])

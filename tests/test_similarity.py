@@ -65,7 +65,7 @@ def test_ivf_ann_recall(spark, sf_dir):
     }
     approx = {
         (r["query_id"], r["neighbor_id"])
-        for r in S.ivf_topk(emb, queries, k=5, n_centroids=16, n_probe=4, dim=64).collect()
+        for r in S.ivf_topk(emb, queries, k=5, n_centroids=16, n_probe=4).collect()
     }
     recall = len(exact & approx) / len(exact)
     # near-isotropic corpus is IVF's hard case (neighbors scatter
@@ -84,7 +84,7 @@ def test_ivf_full_probe_is_exact(spark, sf_dir):
     }
     full = {
         (r["query_id"], r["neighbor_id"])
-        for r in S.ivf_topk(emb, queries, k=5, n_centroids=8, n_probe=8, dim=64).collect()
+        for r in S.ivf_topk(emb, queries, k=5, n_centroids=8, n_probe=8).collect()
     }
     assert full == exact
 

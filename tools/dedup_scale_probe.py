@@ -153,7 +153,7 @@ def measure(sf_dir: str) -> dict:
 
     def s02_out():
         queries = emb.filter(F.col("vec_id") < 5).select(F.col("vec_id").alias("query_id"), "embedding")
-        return S.lsh_bucketed_topk(emb, queries, k=10, n_planes=4, n_tables=12, dim=64, parity_rerank=True).count()
+        return S.lsh_bucketed_topk(emb, queries, k=10, n_planes=4, n_tables=12, dim=64).count()
 
     timed("s02_annlsh", s02_cands, s02_out)
 
