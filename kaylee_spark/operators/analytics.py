@@ -163,16 +163,15 @@ def cohort_retention(
     events: DataFrame,
     user_col: str = "user_id",
     ts_col: str = "ts",
-    period: str = "week",
 ) -> DataFrame:
-    """Cohort retention: group users by first-seen period, count how
-    many are active N periods later.
+    """Weekly cohort retention: group users by first-seen week
+    (Monday start), count how many are active N weeks later.
 
     Output: (cohort, period_offset, n_active, cohort_size,
-    retention_rate) with offset 0 = the cohort period itself (rate
-    1.0 by construction). ``period`` is any date_trunc unit; offsets
-    are day-difference integer-divided so the engine-independent
-    arithmetic is pure integers until the final rate division.
+    retention_rate) with offset 0 = the cohort week itself (rate
+    1.0 by construction). Offsets are day-difference integer-divided
+    by 7, so the engine-independent arithmetic is pure integers until
+    the final rate division.
 
     Scale shape: two aggregates keyed on ``user_col`` (first-seen +
     distinct active periods), then one small aggregate on (cohort,
@@ -184,30 +183,17 @@ def cohort_retention(
     # (caught by the tz-independence probe). DATE arithmetic is tz-free.
     def trunc(col):
         d = F.to_date(col)
-        if period == "week":
-            # Monday start, matching date_trunc('week') on both engines
-            d = F.date_sub(d, (F.dayofweek(d) + F.lit(5)) % 7)
-        elif period == "month":
-            d = F.trunc(d, "month")
-        elif period != "day":
-            raise ValueError("period must be day|week|month")
-        return d.cast("timestamp_ntz")
+        # Monday start, matching date_trunc('week') on both engines
+        return F.date_sub(d, (F.dayofweek(d) + F.lit(5)) % 7).cast("timestamp_ntz")
 
-    days = {"week": 7, "day": 1, "month": None}[period]
     firsts = events.groupBy(user_col).agg(trunc(F.min(ts_col)).alias("cohort"))
     active = events.select(
         user_col, trunc(F.col(ts_col)).alias("active_period")
     ).distinct()
     joined = active.join(firsts, user_col)
-    if days is not None:
-        offset = (
-            F.floor(F.datediff(F.col("active_period"), F.col("cohort")) / days)
-        ).cast("int")
-    else:
-        offset = (
-            (F.year("active_period") - F.year("cohort")) * 12
-            + (F.month("active_period") - F.month("cohort"))
-        ).cast("int")
+    offset = (
+        F.floor(F.datediff(F.col("active_period"), F.col("cohort")) / 7)
+    ).cast("int")
     per_cell = joined.groupBy("cohort", offset.alias("period_offset")).agg(
         F.count("*").alias("n_active")
     )

@@ -30,7 +30,7 @@ from dataclasses import dataclass
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from kaylee_spark.operators.skew import pin_width
+from kaylee_spark.operators.skew import fixpoint, pin_width
 from kaylee_spark.operators.text import positional_grams, tokens
 
 
@@ -694,16 +694,13 @@ def _min_label_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> Data
     O(log diameter) instead of O(diameter) (a 1000-hop dup chain needs
     ~10 iterations, not 1000). Stops early when an iteration changes
     nothing; warns if ``max_iter`` is exhausted unconverged rather than
-    silently returning split clusters. localCheckpoint truncates the
-    growing lineage so iteration i+1 doesn't replan/recompute 1..i.
+    silently returning split clusters (``max_iter`` is a safety bound,
+    not part of the result's contract).
 
     Output: (doc, cluster) for every node appearing in ``edges``.
 
     Callers (dedup_clusters, semantic_clusters) run it under
-    ``pin_width`` of their corpus: each iteration is ~3 shuffles plus
-    an eager localCheckpoint, so a batch-tuned width multiplies
-    near-empty partition overhead by the iteration count on a small
-    pair graph. Labels are exact min-propagation — width-independent.
+    ``pin_width`` of their corpus (see ``fixpoint``).
     """
     sym = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionAll(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
@@ -715,8 +712,8 @@ def _min_label_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> Data
         .withColumn("cluster", F.col("doc"))
         .localCheckpoint()
     )
-    changed = 0
-    for _ in range(max_iter):
+
+    def step(labels, _r):
         neighbor_min = (
             sym.join(labels, sym.b == labels.doc)
             .groupBy(F.col("a").alias("doc"))
@@ -745,12 +742,11 @@ def _min_label_loop(edges: DataFrame, src: str, dst: str, max_iter: int) -> Data
             .join(labels.alias("o"), "doc")
             .filter(F.col("n.cluster") != F.col("o.cluster"))
             .limit(1)
-            .count()
         )
-        labels = new_labels
-        if changed == 0:
-            break
-    if changed != 0:
+        return new_labels, changed
+
+    labels, converged = fixpoint(labels, step, max_iter)
+    if not converged:
         warnings.warn(
             f"min-label propagation: max_iter={max_iter} exhausted before "
             "convergence; cluster labels may be split. Increase max_iter.",

@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from kaylee_spark.operators.skew import pin_width
+from kaylee_spark.operators.skew import fixpoint, pin_width, pinned_result
 
 from kaylee_spark.sources import load_table
 
@@ -90,81 +90,68 @@ def pagerank(edges: DataFrame, iterations: int = 3) -> DataFrame:
     r_{k+1}(v) = (0.15 * RANK_SCALE) div N
                + (17 * Σ_{u→v} (r_k(u) div outdeg(u))) div 20
 
-    The loop runs under ``pin_width(edges)`` (an iterative loop pays
-    ~4 stages per iteration, so a batch-tuned width pays dozens of
-    near-empty partition commits per step on a small graph: g01 took
-    9.0 s at width 32 and 2.1 s at 4 at sf0.1). Because the caller's
-    final action would otherwise replan the lazy tail under ITS conf,
-    the result is materialized (cache + count) inside the pinned scope
-    and the cached frame returned — exact integer ranks are
-    bit-identical at ANY width, so this is purely physical.
+    The edge list and node set are cached loop invariants; the
+    trajectory stays fully lazy (no per-round action) and is
+    materialized once, by ``pinned_result`` (see ``fixpoint``). Exact
+    integer ranks are bit-identical at any width.
     """
     if iterations < 1:
         raise ValueError(f"pagerank requires iterations >= 1, got {iterations}")
     with pin_width(edges):
-        ranks, caches = _pagerank_loop(edges, iterations)
-        out = ranks.cache()
-        out.count()
-    # the result is materialized — the loop-invariant caches can be
-    # released (repeated registry runs in one session otherwise
-    # accumulate executor storage).
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-def _pagerank_loop(edges: DataFrame, iterations: int):
-    # cache the EDGE LIST itself, not just its derivatives: nodes and
-    # edges_deg each scan it, and when the edge list is itself a join
-    # (orders ⋈ lineitem + distinct in g01) an uncached base pays that
-    # join once per derivative cache build — measured ~1.5 s of the
-    # g01 bench time.
-    edges = edges.select("src", "dst").cache()
-    # Spark does not dedupe common subplans: without the caches below,
-    # one action over the 3-iteration plan re-derives the edge list
-    # (scan + join + distinct) once per iteration and the node set more
-    # often still. Both frames are iteration-invariant, so cache them —
-    # on a cluster this is the standard iterative-algorithm shape
-    # (persist the loop invariants, rebuild only the ranks).
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .union(edges.select(F.col("dst").alias("id")))
-        .distinct()
-        .cache()
-    )
-    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-    # pre-join out-degree onto the edge list ONCE: each iteration then
-    # needs only the ranks ⋈ edges join, not a second degree join.
-    edges_deg = edges.join(deg, "src").cache()
-
-    # the vertex count is the one driver-visible scalar (standard for
-    # iterative algorithms — it sizes the teleport term); pulled once
-    # off the cached node set, then folded into codegen as a literal,
-    # which keeps every per-row expression join-free.
-    n = nodes.count()
-    if n == 0:
-        raise ValueError("pagerank requires a non-empty edge list (no nodes found)")
-    base = F.lit((RANK_SCALE * 3 // 20) // n)
-    ranks = nodes.select("id", F.lit(RANK_SCALE // n).alias("r"))
-    for _ in range(iterations):
-        contrib = (
-            edges_deg.join(ranks.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.expr("r DIV deg")).alias("contrib"))
+        # cache the EDGE LIST itself, not just its derivatives: nodes and
+        # edges_deg each scan it, and when the edge list is itself a join
+        # (orders ⋈ lineitem + distinct in g01) an uncached base pays that
+        # join once per derivative cache build — measured ~1.5 s of the
+        # g01 bench time.
+        edges = edges.select("src", "dst").cache()
+        # Spark does not dedupe common subplans: without the caches below,
+        # one action over the 3-iteration plan re-derives the edge list
+        # (scan + join + distinct) once per iteration and the node set more
+        # often still. Both frames are iteration-invariant, so cache them —
+        # on a cluster this is the standard iterative-algorithm shape
+        # (persist the loop invariants, rebuild only the ranks).
+        nodes = (
+            edges.select(F.col("src").alias("id"))
+            .union(edges.select(F.col("dst").alias("id")))
+            .distinct()
+            .cache()
         )
-        ranks = nodes.join(contrib, "id", "left").select(
-            "id",
-            (
-                base
-                + F.expr(
-                    f"({DAMPING_NUM} * coalesce(contrib, CAST(0 AS BIGINT))) DIV {DAMPING_DEN}"
-                )
-            ).alias("r"),
+        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
+        # pre-join out-degree onto the edge list ONCE: each iteration then
+        # needs only the ranks ⋈ edges join, not a second degree join.
+        edges_deg = edges.join(deg, "src").cache()
+
+        # the vertex count is the one driver-visible scalar (standard for
+        # iterative algorithms — it sizes the teleport term); pulled once
+        # off the cached node set, then folded into codegen as a literal,
+        # which keeps every per-row expression join-free.
+        n = nodes.count()
+        if n == 0:
+            raise ValueError("pagerank requires a non-empty edge list (no nodes found)")
+        base = F.lit((RANK_SCALE * 3 // 20) // n)
+
+        def step(ranks, _r):
+            contrib = (
+                edges_deg.join(ranks.withColumnRenamed("id", "src"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum(F.expr("r DIV deg")).alias("contrib"))
+            )
+            return nodes.join(contrib, "id", "left").select(
+                "id",
+                (
+                    base
+                    + F.expr(
+                        f"({DAMPING_NUM} * coalesce(contrib, CAST(0 AS BIGINT))) DIV {DAMPING_DEN}"
+                    )
+                ).alias("r"),
+            ), None
+
+        ranks, _ = fixpoint(
+            nodes.select("id", F.lit(RANK_SCALE // n).alias("r")), step, iterations
         )
-    return (
-        ranks.select("id", F.col("r").alias("rank_e12")),
-        [edges, nodes, edges_deg],
-    )
+        return pinned_result(
+            ranks.select("id", F.col("r").alias("rank_e12")), edges, nodes, edges_deg
+        )
 
 
 #: HITS works max-normalized in units of 1e-6: after each step scores
@@ -204,80 +191,80 @@ def hits(edges: DataFrame, iterations: int = 3) -> DataFrame:
     operation remains a distributed join + map-side-combined sum on
     the edge key. Integer max-normalization keeps the whole
     trajectory bit-identical across engines and partitionings — the
-    property the unrolled SQL oracle hash-verifies, at ANY width of
-    the ``pin_width(edges)`` scope the eager trajectory runs in.
+    property the unrolled SQL oracle hash-verifies (see ``fixpoint``).
+    The result is a lazy row-local tail over the last two checkpoints,
+    so it needs no ``pinned_result``.
     """
     if iterations < 1:
         raise ValueError(f"hits requires iterations >= 1, got {iterations}")
     with pin_width(edges):
-        return _hits_loop(edges, iterations)
+        edges = edges.select("src", "dst").cache()
+        hubs = edges.select(F.col("src").alias("id")).distinct().cache()
+        auths = edges.select(F.col("dst").alias("id")).distinct().cache()
+        # one up-front emptiness probe replaces the old per-half-step
+        # max-collect's None check. It is a limit-1 job: it fills only the
+        # hubs cache blocks it scans, not the whole cache.
+        if hubs.first() is None:
+            raise ValueError("hits requires a non-empty edge list")
 
-
-def _hits_loop(edges: DataFrame, iterations: int) -> DataFrame:
-    edges = edges.select("src", "dst").cache()
-    hubs = edges.select(F.col("src").alias("id")).distinct().cache()
-    auths = edges.select(F.col("dst").alias("id")).distinct().cache()
-    # one up-front emptiness probe replaces the old per-half-step
-    # max-collect's None check. It is a limit-1 job: it fills only the
-    # hubs cache blocks it scans, not the whole cache.
-    if hubs.first() is None:
-        raise ValueError("hits requires a non-empty edge list")
-
-    def _normed(raw_ck: DataFrame) -> DataFrame:
-        # ONE materialization per half-step: the checkpointed frame is
-        # the ZERO-EXTENDED raw scores; the max scalar is a droplet
-        # aggregate over its blocks and normalization stays LAZY — a
-        # literal row-local division each consumer (next half-step +
-        # final output) applies on read. max >= HITS_SCALE > 0 always
-        # on a non-empty graph (the previous max element normalizes to
-        # HITS_SCALE; h starts at HITS_SCALE), so DIV never sees 0 and
-        # first() cannot be None (non-emptiness probed up front).
-        mx = raw_ck.agg(F.max("raw")).first()[0]
-        return raw_ck.select(
-            "id", F.expr(f"(raw * {HITS_SCALE}) DIV {mx}").alias("score")
-        )
-
-    def _half(base: DataFrame, contrib: DataFrame) -> DataFrame:
-        # zero-extended raw scores for one half-step, checkpointed
-        # (eager — truncates lineage; superseded frames free their
-        # blocks via GC, no per-iteration storage accumulation)
-        return (
-            base.join(contrib, "id", "left")
-            .select("id", F.expr("coalesce(raw, CAST(0 AS BIGINT))").alias("raw"))
-            .localCheckpoint()
-        )
-
-    h = hubs.select("id", F.lit(HITS_SCALE).alias("score"))
-    a = None
-    for _ in range(iterations):
-        a = _normed(_half(
-            auths,
-            edges.join(
-                h.withColumnRenamed("id", "src").withColumnRenamed("score", "h"),
-                "src",
+        def _normed(raw_ck: DataFrame) -> DataFrame:
+            # ONE materialization per half-step: the checkpointed frame is
+            # the ZERO-EXTENDED raw scores; the max scalar is a droplet
+            # aggregate over its blocks and normalization stays LAZY — a
+            # literal row-local division each consumer (next half-step +
+            # final output) applies on read. max >= HITS_SCALE > 0 always
+            # on a non-empty graph (the previous max element normalizes to
+            # HITS_SCALE; h starts at HITS_SCALE), so DIV never sees 0 and
+            # first() cannot be None (non-emptiness probed up front).
+            mx = raw_ck.agg(F.max("raw")).first()[0]
+            return raw_ck.select(
+                "id", F.expr(f"(raw * {HITS_SCALE}) DIV {mx}").alias("score")
             )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("h").alias("raw")),
-        ))
-        h = _normed(_half(
-            hubs,
-            edges.join(
-                a.withColumnRenamed("id", "dst").withColumnRenamed("score", "a"),
-                "dst",
+
+        def _half(base: DataFrame, contrib: DataFrame) -> DataFrame:
+            # zero-extended raw scores for one half-step, checkpointed
+            # (eager — truncates lineage; superseded frames free their
+            # blocks via GC, no per-iteration storage accumulation)
+            return (
+                base.join(contrib, "id", "left")
+                .select("id", F.expr("coalesce(raw, CAST(0 AS BIGINT))").alias("raw"))
+                .localCheckpoint()
             )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("a").alias("raw")),
-        ))
-    out = h.select(
+
+        def step(state, _r):
+            h, _ = state
+            a = _normed(_half(
+                auths,
+                edges.join(
+                    h.withColumnRenamed("id", "src").withColumnRenamed("score", "h"),
+                    "src",
+                )
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.sum("h").alias("raw")),
+            ))
+            h = _normed(_half(
+                hubs,
+                edges.join(
+                    a.withColumnRenamed("id", "dst").withColumnRenamed("score", "a"),
+                    "dst",
+                )
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.sum("a").alias("raw")),
+            ))
+            return (h, a), None
+
+        (h, a), _ = fixpoint(
+            (hubs.select("id", F.lit(HITS_SCALE).alias("score")), None), step, iterations
+        )
+        # the per-step frames are checkpointed (materialized), so the loop
+        # invariants can be released.
+        for c in (edges, hubs, auths):
+            c.unpersist()
+    return h.select(
         "id", F.lit("hub").alias("role"), F.col("score").alias("score_e6")
     ).union(
         a.select("id", F.lit("authority").alias("role"), F.col("score").alias("score_e6"))
     )
-    # the per-step frames are checkpointed (materialized), so the loop
-    # invariants can be released.
-    for c in (edges, hubs, auths):
-        c.unpersist()
-    return out
 
 
 def coorder_part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -451,8 +438,7 @@ def bfs_distances(
     function of the graph — bit-identical in any engine and at any
     shuffle width, which is what lets a full-relaxation SQL oracle
     (min over <= k-hop paths) verify this frontier implementation:
-    both compute the same minimum. The loop runs under
-    ``pin_width(edges)``, like pagerank().
+    both compute the same minimum (see ``fixpoint``).
     """
     if max_hops < 0:
         raise ValueError(f"bfs_distances requires max_hops >= 0, got {max_hops}")
@@ -465,12 +451,11 @@ def bfs_distances(
         )
         if frontier.count() == 0:
             raise ValueError("bfs_distances requires a non-empty source set")
-        reached = frontier.select("id", F.lit(0).cast("int").alias("dist"))
-        for k in range(1, max_hops + 1):
-            # localCheckpoint truncates the per-hop lineage: hop k's
-            # anti-join references the reached set (a union of k legs),
-            # so an uncheckpointed loop re-analyzes a growing plan every
-            # hop and re-executes the whole chain on deep graphs.
+
+        def step(state, k):
+            reached, frontier = state
+            # hop k's anti-join references the reached set (a union of k
+            # legs), so each level is checkpointed
             new = (
                 edges.join(frontier.withColumnRenamed("id", "src"), "src")
                 .select(F.col("dst").alias("id"))
@@ -479,16 +464,14 @@ def bfs_distances(
                 .select("id", F.lit(k).cast("int").alias("dist"))
                 .localCheckpoint()
             )
-            if new.count() == 0:
-                break
-            reached = reached.unionByName(new)
-            frontier = new.select("id")
-        # Every level is materialized by its localCheckpoint, so the
-        # result no longer depends on the edge cache.
-        edges.unpersist()
-        out = reached.cache()
-        out.count()
-    return out
+            return (reached.unionByName(new), new.select("id")), new
+
+        (reached, _), _ = fixpoint(
+            (frontier.select("id", F.lit(0).cast("int").alias("dist")), frontier),
+            step,
+            max_hops,
+        )
+        return pinned_result(reached, edges)
 
 
 def weighted_demand_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -539,12 +522,9 @@ def weighted_sssp(
     implementation bit-for-bit. Per-round work is proportional to the
     improved set's out-edges and collapses as distances converge; the
     loop exits early once a round improves nothing. Each round's
-    distance map is localCheckpoint'ed: the map is referenced twice
-    per round (min-merge + anti-join), so an uncheckpointed loop
-    doubles the lazy plan every round (the k^n analyze blow-up the
-    MMR work measured). The edge list is the only large input,
-    cached once. The loop runs under ``pin_width(edges)``, like
-    pagerank().
+    distance map is localCheckpoint'ed, since the round references it
+    twice (min-merge + anti-join). The edge list is the only large
+    input, cached once (see ``fixpoint``).
     """
     if rounds < 0:
         raise ValueError(f"weighted_sssp requires rounds >= 0, got {rounds}")
@@ -558,8 +538,9 @@ def weighted_sssp(
         )
         if dist.count() == 0:
             raise ValueError("weighted_sssp requires a non-empty source set")
-        improved = dist
-        for _ in range(rounds):
+
+        def step(state, _r):
+            dist, improved = state
             offers = (
                 edges.join(
                     improved.select(F.col("id").alias("src"), "dist"), "src"
@@ -573,19 +554,15 @@ def weighted_sssp(
                 .select("id", F.col("nd").alias("dist"))
                 .localCheckpoint()
             )
-            if improved.count() == 0:
-                break
             dist = (
                 dist.join(improved.select("id"), "id", "left_anti")
                 .unionByName(improved)
                 .localCheckpoint()
             )
-        # The final distance map is localCheckpoint'ed (materialized), so
-        # it no longer depends on the edge cache.
-        edges.unpersist()
-        out = dist.cache()
-        out.count()
-    return out
+            return (dist, improved), improved
+
+        (dist, _), _ = fixpoint((dist, dist), step, rounds)
+        return pinned_result(dist, edges)
 
 
 def repeat_trading_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -632,16 +609,13 @@ def kcore_peel(
     alive after all rounds (in the approximate k-core). Synchronous
     rounds (not the sequential min-degree peel) make the result a pure
     function of the graph — order-free, exact integers, so a fully
-    unrolled SQL twin verifies it bit-for-bit, and the loop is
-    width-independent (it runs under ``pin_width(edges)``, like
-    pagerank).
+    unrolled SQL twin verifies it bit-for-bit.
 
     Scale shape: the edge list is the only large input, cached once;
     each round is two semi-joins (edge endpoints against the alive
     set) feeding ONE map-side-combined degree count, and the alive set
-    — always shrinking — is localCheckpoint'ed per round (the loop
-    references it three times per round, so an uncheckpointed loop
-    grows k^n lazy-plan copies — the MMR lesson). The loop exits
+    — always shrinking, referenced three times per round — is
+    localCheckpoint'ed per round (see ``fixpoint``). The loop exits
     early when a round removes nothing: the peel has reached its
     fixpoint and later rounds are identity.
     """
@@ -653,8 +627,9 @@ def kcore_peel(
         edges = edges.select("src", "dst").cache()
         # both directions present => every node appears as a src
         alive = edges.select(F.col("src").alias("id")).distinct().localCheckpoint()
-        peeled = None
-        for r in range(1, rounds + 1):
+
+        def step(state, r):
+            alive, peeled = state
             survivors = (
                 edges.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
                 .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
@@ -669,19 +644,14 @@ def kcore_peel(
                 .select("id", F.lit(r).cast("int").alias("peel_round"))
                 .localCheckpoint()
             )
-            if removed.count() == 0:
-                break
             peeled = removed if peeled is None else peeled.unionByName(removed)
-            alive = survivors
+            return (survivors, peeled), removed
+
+        (alive, peeled), _ = fixpoint((alive, None), step, rounds)
         out = alive.select("id", F.lit(0).cast("int").alias("peel_round"))
         if peeled is not None:
             out = peeled.unionByName(out)
-        # every component frame is localCheckpoint'ed (materialized), so
-        # the result no longer depends on the edge cache.
-        edges.unpersist()
-        out = out.cache()
-        out.count()
-    return out
+        return pinned_result(out, edges)
 
 
 def label_propagation(
@@ -706,11 +676,9 @@ def label_propagation(
     edge list against the (node-sized) label frame, one map-side-
     combined (node, label) count, and one per-node rank window — the
     count and the window share the node-keyed partitioning. Labels are
-    localCheckpoint'ed per round (each round references its
-    predecessor once per edge side — the uncheckpointed loop grows
-    k^n lazy-plan copies, the MMR lesson), and the loop exits early
-    at a fixpoint round (no label changed). The loop runs under
-    ``pin_width(edges)``, like pagerank().
+    localCheckpoint'ed per round (see ``fixpoint``), and the loop exits
+    early at a fixpoint round (no label changed): the synchronous rule
+    maps those labels to themselves, so later rounds are identity.
     """
     if rounds < 1:
         raise ValueError(f"label_propagation requires rounds >= 1, got {rounds}")
@@ -724,7 +692,8 @@ def label_propagation(
             .localCheckpoint()
         )
         w = Window.partitionBy("id").orderBy(F.desc("_c"), F.asc("label"))
-        for _ in range(rounds):
+
+        def step(labels, _r):
             counts = (
                 edges.join(
                     labels.select(F.col("id").alias("dst"), "label"), "dst"
@@ -742,15 +711,13 @@ def label_propagation(
                 new.alias("n")
                 .join(labels.alias("o"), "id")
                 .filter(F.col("n.label") != F.col("o.label"))
-                .count()
             )
-            labels = new
-            if changed == 0:
-                break
-        edges.unpersist()
-        out = labels.select("id", F.col("label").alias("community")).cache()
-        out.count()
-    return out
+            return new, changed
+
+        labels, _ = fixpoint(labels, step, rounds)
+        return pinned_result(
+            labels.select("id", F.col("label").alias("community")), edges
+        )
 
 
 def connected_components(edges: DataFrame, iterations: int = 3) -> DataFrame:
@@ -776,71 +743,63 @@ def connected_components(edges: DataFrame, iterations: int = 3) -> DataFrame:
     Scale shape: the symmetrized edge list and node set are cached
     loop invariants (the iterative-algorithm standard); each iteration
     is ONE key-on-key join + min-aggregate, both shuffling on node id
-    so the exchange is reused; the trajectory runs under
-    ``pin_width(edges)`` (the g01 sizing note: state per step is
-    |nodes|, not cluster-sized). At 100 TB use the alternating
+    so the exchange is reused (see ``fixpoint``). A fixed ``iterations``
+    is the contract: the oracle unrolls exactly that many, so an
+    unconverged run does not warn. At 100 TB use the alternating
     large-star/small-star variant to cut rounds; the register
     arithmetic is unchanged.
     """
     if iterations < 1:
         raise ValueError(f"connected_components requires iterations >= 1, got {iterations}")
     with pin_width(edges):
-        out, caches = _cc_loop(edges, iterations)
-        out = out.cache()
-        out.count()
-    # the result is materialized, so the loop-invariant caches can be
-    # released and repeated calls don't leak executor storage.
-    for c in caches:
-        c.unpersist()
-    return out
-
-
-def _cc_loop(edges: DataFrame, iterations: int):
-    # SELF-LOOP formulation: with (v, v) appended to the symmetrized
-    # edge list, min(label(v), min_{u~v} label(u)) collapses to ONE
-    # join + min-aggregate over symplus — the label frame is
-    # referenced exactly once per iteration. The previous form
-    # (neighbor-min joined back onto nodes ⋈ lbl) referenced lbl
-    # TWICE per iteration with no lineage truncation, so the lazy
-    # 3-iteration plan grew 2^k subtree copies (16,702 formatted plan
-    # lines, 2,871 HashAggregates) and AQE's concurrent subtree
-    # scheduling raced ~10 duplicate builds of the orders ⋈ lineitem
-    # edge derivation past the sym cache — measured 152 jobs for one
-    # g08 pass. Each iteration is localCheckpoint'ed (eager), the
-    # MMR/kcore/bfs house pattern: per-iteration plans stay constant-
-    # size and the trajectory runs each edge join exactly once.
-    # Labels are exact integer MINs, so the restructured trajectory
-    # is bit-identical to the unrolled oracle's.
-    # cache the EDGE LIST, not the symmetrized union: the union's two
-    # legs otherwise each replay the caller's edge derivation (the
-    # orders ⋈ lineitem join in g08) to build it. The union is a
-    # map-side concat of the cached frame — free to re-read per
-    # iteration. No distinct on sym: MIN-aggregation is duplicate-
-    # insensitive (a repeated neighbor contributes the same label), so
-    # the dedup shuffle bought nothing — callers own edge dedup for
-    # join-width economy (g08's edges are distinct by construction).
-    edges = edges.select("src", "dst").cache()
-    sym = edges.union(
-        edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
-    nodes = sym.select(F.col("src").alias("id")).distinct().cache()
-    symplus = sym.unionByName(
-        nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))
-    )
-    lbl = nodes.select("id", F.col("id").alias("lbl")).localCheckpoint()
-    prev = lbl
-    for _ in range(iterations):
-        prev = lbl
-        lbl = (
-            symplus.join(
-                lbl.select(F.col("id").alias("dst"), F.col("lbl").alias("nlbl")),
-                "dst",
-            )
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.min("nlbl").alias("lbl"))
-            .localCheckpoint()
+        # SELF-LOOP formulation: with (v, v) appended to the symmetrized
+        # edge list, min(label(v), min_{u~v} label(u)) collapses to ONE
+        # join + min-aggregate over symplus — the label frame is
+        # referenced exactly once per iteration. The previous form
+        # (neighbor-min joined back onto nodes ⋈ lbl) referenced lbl
+        # TWICE per iteration with no lineage truncation, so the lazy
+        # 3-iteration plan grew 2^k subtree copies (16,702 formatted plan
+        # lines, 2,871 HashAggregates) and AQE's concurrent subtree
+        # scheduling raced ~10 duplicate builds of the orders ⋈ lineitem
+        # edge derivation past the sym cache — measured 152 jobs for one
+        # g08 pass. Each iteration is localCheckpoint'ed, so per-iteration
+        # plans stay constant-size and the trajectory runs each edge join
+        # exactly once. Labels are exact integer MINs, so the restructured
+        # trajectory is bit-identical to the unrolled oracle's.
+        # cache the EDGE LIST, not the symmetrized union: the union's two
+        # legs otherwise each replay the caller's edge derivation (the
+        # orders ⋈ lineitem join in g08) to build it. The union is a
+        # map-side concat of the cached frame — free to re-read per
+        # iteration. No distinct on sym: MIN-aggregation is duplicate-
+        # insensitive (a repeated neighbor contributes the same label), so
+        # the dedup shuffle bought nothing — callers own edge dedup for
+        # join-width economy (g08's edges are distinct by construction).
+        edges = edges.select("src", "dst").cache()
+        sym = edges.union(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
-    out = lbl.join(
-        prev.select(F.col("id").alias("id"), F.col("lbl").alias("prev_lbl")), "id"
-    )
-    return out, [edges, nodes]
+        nodes = sym.select(F.col("src").alias("id")).distinct().cache()
+        symplus = sym.unionByName(
+            nodes.select(F.col("id").alias("src"), F.col("id").alias("dst"))
+        )
+        lbl = nodes.select("id", F.col("id").alias("lbl")).localCheckpoint()
+
+        def step(state, _r):
+            _, lbl = state
+            nxt = (
+                symplus.join(
+                    lbl.select(F.col("id").alias("dst"), F.col("lbl").alias("nlbl")),
+                    "dst",
+                )
+                .groupBy(F.col("src").alias("id"))
+                .agg(F.min("nlbl").alias("lbl"))
+                .localCheckpoint()
+            )
+            return (lbl, nxt), None
+
+        (prev, lbl), _ = fixpoint((lbl, lbl), step, iterations)
+        return pinned_result(
+            lbl.join(prev.select("id", F.col("lbl").alias("prev_lbl")), "id"),
+            edges,
+            nodes,
+        )

@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from kaylee_spark.operators.skew import pin_width
+from kaylee_spark.operators.skew import pin_width, pinned_result
 
 from kaylee_spark.functions import cosine
 
@@ -836,11 +836,9 @@ def kmeans_fit_assign(
             centroids = _lloyd_update(v, centroids, dims)
         dists = _kmeans_distances(v, centroids, dims)
         cluster, mind = _kmeans_argmin(centroids)
-        out = dists.select(
-            "vec_id", cluster.alias("cluster"), mind.alias("dist_sq")
-        ).cache()
-        out.count()
-    return out
+        return pinned_result(
+            dists.select("vec_id", cluster.alias("cluster"), mind.alias("dist_sq")), v
+        )
 
 
 def _pq_fit(v, dim: int, m: int, k: int, iterations: int):
@@ -896,12 +894,11 @@ def pq_encode(
     run under ``pin_width(df)``.
     """
     with pin_width(df):
-        out = _pq_codes(df, dim, m, k, iterations, id_col, vec_col).cache()
-        out.count()
-    return out
+        return pinned_result(*_pq_codes(df, dim, m, k, iterations, id_col, vec_col))
 
 
-def _pq_codes(df, dim, m, k, iterations, id_col, vec_col) -> DataFrame:
+def _pq_codes(df, dim, m, k, iterations, id_col, vec_col):
+    """(codes frame, the cached lattice frame it reads)."""
     if dim % m != 0 or m < 1:
         raise ValueError(f"pq_encode needs m >= 1 dividing dim, got m={m} dim={dim}")
     if iterations < 1:
@@ -918,7 +915,7 @@ def _pq_codes(df, dim, m, k, iterations, id_col, vec_col) -> DataFrame:
         code, mind = _kmeans_argmin(cents, tag=f"s{s}_")
         cols.append(code.alias(f"c{s}"))
         total = mind if total is None else total + mind
-    return out.select(*cols, total.alias("dist_sq"))
+    return out.select(*cols, total.alias("dist_sq")), v
 
 
 def pq_neardup_pairs(
@@ -947,16 +944,14 @@ def pq_neardup_pairs(
     and the pair joins run under ``pin_width(df)``.
     """
     with pin_width(df):
-        codes = _pq_codes(
-            df, dim, m, k, iterations, id_col, vec_col
-        ).select("vec_id", *[f"c{s}" for s in range(m)]).cache()
+        codes, v = _pq_codes(df, dim, m, k, iterations, id_col, vec_col)
         code_cols = [f"c{s}" for s in range(m)]
+        codes = codes.select("vec_id", *code_cols).cache()
         a = codes.select(F.col("vec_id").alias("id_a"), *code_cols)
         b = codes.select(F.col("vec_id").alias("id_b"), *code_cols)
         pairs = a.join(b, code_cols).filter(F.col("id_a") < F.col("id_b")).select(
             "id_a", "id_b"
         )
-        v = kmeans_lattice(df, dim, id_col=id_col, vec_col=vec_col)
         va = v.select(
             F.col("vec_id").alias("id_a"), *[F.col(f"x{i}").alias(f"ax{i}") for i in range(dim)]
         )
@@ -964,14 +959,13 @@ def pq_neardup_pairs(
             F.col("vec_id").alias("id_b"), *[F.col(f"x{i}").alias(f"bx{i}") for i in range(dim)]
         )
         chain = " + ".join(f"(ax{i} - bx{i}) * (ax{i} - bx{i})" for i in range(dim))
-        out = (
+        return pinned_result(
             pairs.join(va, "id_a")
             .join(vb, "id_b")
-            .selectExpr("id_a", "id_b", f"CAST({chain} AS BIGINT) AS dist_sq")
-            .cache()
+            .selectExpr("id_a", "id_b", f"CAST({chain} AS BIGINT) AS dist_sq"),
+            codes,
+            v,
         )
-        out.count()
-    return out
 
 
 def knn_graph(
@@ -1192,12 +1186,9 @@ def pq_adc_topk(
             .agg(F.sum("d").alias("adc_dist"))
         )
         w = Window.partitionBy("query_id").orderBy(F.asc("adc_dist"), F.asc("neighbor_id"))
-        res = (
+        return pinned_result(
             scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= topk)
-            .select("query_id", "neighbor_id", "adc_dist", "rank")
+            .select("query_id", "neighbor_id", "adc_dist", "rank"),
+            v,
         )
-        v.unpersist()
-        out = res.cache()
-        out.count()
-    return out

@@ -451,7 +451,7 @@ def e12_cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     from kaylee_spark.operators.analytics import cohort_retention
 
     ev = load_table(spark, sf_dir, "events")
-    return cohort_retention(ev, period="week")
+    return cohort_retention(ev)
 
 
 @query(

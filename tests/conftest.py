@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import os
 import sys
 
@@ -38,3 +39,23 @@ def at_width(spark):
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_SMOKE
+
+
+@pytest.fixture(scope="session")
+def build_jobs(spark):
+    """``build_jobs(build)``: the number of Spark jobs started while
+    ``build()`` runs, read from the status tracker by job group."""
+
+    groups = itertools.count()
+
+    def count(build) -> int:
+        sc = spark.sparkContext
+        group = f"build-jobs-{next(groups)}"
+        sc.setJobGroup(group, group)
+        try:
+            build()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -5,7 +5,8 @@ another open scope on the same keys, and leaves no query's override
 behind on the session. A static guard keeps every other conf write
 out of the package and the tools. pin_width derives an iterative
 loop's width from its input; a second guard keeps any caller from
-passing one.
+passing one. A third keeps every checkpointed round loop that exits
+early on ``fixpoint``.
 """
 
 from __future__ import annotations
@@ -134,6 +135,18 @@ def test_query_leaves_session_conf_unchanged(spark, sf_dir, name):
     assert spark.conf.getAll == before
 
 
+@pytest.mark.parametrize("name", ["g01_pagerank", "d15_pq_neardup"])
+def test_second_call_repeats_first_call_jobs(spark, sf_dir, build_jobs, name):
+    """A pinned operator's result is checkpointed, not cached, and its
+    loop invariants are released: nothing of the first call is left in
+    the CacheManager for the second call's identical plan to read."""
+    from kaylee_spark.queries import load_everything
+
+    fn = load_everything()[name].fn
+    first = build_jobs(lambda: fn(spark, sf_dir))
+    assert build_jobs(lambda: fn(spark, sf_dir)) == first
+
+
 def _conf_writes(path: str):
     """(function, line) for each ``<x>.conf.set/unset`` call in one
     module."""
@@ -225,3 +238,67 @@ def test_width_guard_catches_each_form(tmp_path):
         "shuffle_partitions parameter",
         "shuffle_partitions= argument",
     ]
+
+
+#: round loops that checkpoint and break outside ``fixpoint``, and why
+LOOP_ALLOW = {
+    # its break follows a driver-side collect of the merge table, and
+    # its chain is checkpointed only every 8th round
+    "bpe_train": "driver-side merge picks",
+}
+
+
+def _round_loops(path: str):
+    """(function, line) for each ``for``/``while`` loop in one module
+    whose body calls ``.localCheckpoint(`` and contains a ``break``,
+    outside ``fixpoint``. ``function`` is the outermost def."""
+    out = []
+
+    def visit(node, outer, inside_fixpoint):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                visit(child, outer or child.name, inside_fixpoint or child.name == "fixpoint")
+                continue
+            if isinstance(child, (ast.For, ast.While)) and not inside_fixpoint:
+                body = list(ast.walk(child))
+                if any(isinstance(n, ast.Break) for n in body) and any(
+                    isinstance(n, ast.Call)
+                    and getattr(n.func, "attr", None) == "localCheckpoint"
+                    for n in body
+                ):
+                    out.append((outer, child.lineno))
+            visit(child, outer, inside_fixpoint)
+
+    visit(ast.parse(open(path).read(), filename=path), None, False)
+    return out
+
+
+def test_checkpointed_round_loops_use_fixpoint():
+    found = [
+        (rel, func, line)
+        for rel, path in _package_modules()
+        if rel.startswith("kaylee_spark")
+        for func, line in _round_loops(path)
+    ]
+    assert {func for _rel, func, _line in found} >= set(LOOP_ALLOW), (
+        "an allowlisted loop is gone; drop it from LOOP_ALLOW"
+    )
+    bad = [f"{rel}:{line} in {func}()" for rel, func, line in found if func not in LOOP_ALLOW]
+    assert not bad, "a checkpointed round loop that breaks belongs on fixpoint: " + ", ".join(bad)
+
+
+def test_loop_guard_catches_a_hand_loop(tmp_path):
+    bad = tmp_path / "bad.py"
+    bad.write_text(
+        "def peel(x, rounds):\n"
+        "    for r in range(rounds):\n"
+        "        x = x.step().localCheckpoint()\n"
+        "        if x.count() == 0:\n"
+        "            break\n"
+        "    return x\n"
+        "def fixpoint(state, step, rounds):\n"
+        "    while True:\n"
+        "        state = step(state).localCheckpoint()\n"
+        "        break\n"
+    )
+    assert _round_loops(str(bad)) == [("peel", 2)]

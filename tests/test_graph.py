@@ -327,6 +327,90 @@ def test_kcore_width_independence_and_contract(spark, at_width):
         kcore_peel(edges, k=2, rounds=0)
 
 
+# ---------------------------------------------------------------------------
+# fixpoint: the round loop every iterative operator runs on
+# ---------------------------------------------------------------------------
+
+#: the clique-plus-chain k-core graph and the BFS path graph above
+CLIQUE_CHAIN = [(a, b) for a in range(4) for b in range(a + 1, 4)] + [(3, 10), (10, 11)]
+PATH = [(1, 2), (2, 3), (3, 4), (4, 5)]
+
+
+def _peel_step(edges, seen, states):
+    """One synchronous 2-core peel round; delta = the removed nodes."""
+
+    def step(alive, r):
+        seen.append(r)
+        survivors = (
+            edges.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
+            .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
+            .groupBy(F.col("src").alias("id"))
+            .count()
+            .filter("count >= 2")
+            .select("id")
+            .localCheckpoint()
+        )
+        states.append(survivors)
+        return survivors, alive.join(survivors, "id", "left_anti")
+
+    return step
+
+
+def test_fixpoint_stops_at_first_empty_delta_keeping_pre_round_state(spark):
+    from kaylee_spark.operators.skew import fixpoint
+
+    edges = _both_dirs(spark, CLIQUE_CHAIN)
+    alive = edges.select(F.col("src").alias("id")).distinct()
+    seen, states = [], []
+    # round 1 peels 11, round 2 peels 10, round 3 peels nothing
+    state, converged = fixpoint(alive, _peel_step(edges, seen, states), 10)
+    assert seen == [1, 2, 3] and converged
+    assert state is states[1]
+    assert sorted(r["id"] for r in state.collect()) == [0, 1, 2, 3]
+
+
+def test_fixpoint_converged_only_on_an_empty_delta(spark):
+    from kaylee_spark.operators.skew import fixpoint
+
+    edges = _both_dirs(spark, CLIQUE_CHAIN)
+    alive = edges.select(F.col("src").alias("id")).distinct()
+    seen, states = [], []
+    state, converged = fixpoint(alive, _peel_step(edges, seen, states), 2)
+    assert seen == [1, 2] and not converged and state is states[1]
+    assert fixpoint(alive, _peel_step(edges, [], []), 0) == (alive, False)
+
+
+def test_fixpoint_without_delta_runs_every_round(spark):
+    from kaylee_spark.operators.skew import fixpoint
+
+    frontier = spark.createDataFrame([(1,)], "id long")
+    edges = _edges(spark, PATH)
+    seen = []
+
+    def hop(front, r):
+        seen.append(r)
+        return edges.join(front.withColumnRenamed("id", "src"), "src").select(
+            F.col("dst").alias("id")
+        ), None
+
+    state, converged = fixpoint(frontier, hop, 6)
+    assert seen == [1, 2, 3, 4, 5, 6] and not converged
+    assert state.collect() == []
+
+
+def test_loop_job_counts_are_pinned(spark, build_jobs):
+    """A round loop's actions are its checkpoints plus one count per
+    round; a primitive that added an action would move these."""
+    from kaylee_spark.operators.graph import bfs_distances, kcore_peel
+
+    edges = _both_dirs(spark, CLIQUE_CHAIN)
+    # converges in round 3. Each round: 3 broadcasts, 2 checkpoints and
+    # the count; plus the first alive set and the result.
+    assert build_jobs(lambda: kcore_peel(edges, k=2, rounds=3)) == 20
+    seeds = spark.createDataFrame([(1,)], "id long")
+    assert build_jobs(lambda: bfs_distances(_edges(spark, PATH), seeds, max_hops=3)) == 11
+
+
 def test_label_propagation_two_cliques(spark):
     from kaylee_spark.operators.graph import label_propagation
 
